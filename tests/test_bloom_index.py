@@ -23,13 +23,16 @@ from pyspark.sql import types as T
 
 from clickhouse_mergetree_spark.engine import MergeTreeConfig, SparkMergeTree
 from clickhouse_mergetree_spark.engine.manifest import (
+    BLOOM_ALGO,
     BLOOM_CAP_BITS,
     BLOOM_K,
     Manifest,
     bloom_positions,
     bloom_size_for,
     bloom_to_hex,
+    xxh64,
 )
+from clickhouse_mergetree_spark.engine.merge_tree import bloom_position_cols
 
 SCHEMA = T.StructType([
     T.StructField("key", T.StringType(), False),
@@ -124,22 +127,81 @@ def test_merged_part_gets_bloom_and_lookups_stay_correct(table):
 
 
 def test_spark_hash_matches_driver_hash(spark):
-    """The build-side (Spark md5/conv) and check-side (python hashlib)
-    position computations must agree exactly."""
-    keys = ["k0001", "7", "hello world", "", "k9999"]
+    """The build-side positions (the engine's own Spark expression) and
+    the check-side ones (pure-Python XXH64) must agree exactly — over
+    the empty string, multi-byte UTF-8, and keys of 32 bytes or more
+    (XXH64's four-lane long-input path)."""
+    keys = ["k0001", "7", "hello world", "", "k9999", "é漢字🙂",
+            "x" * 31, "y" * 32, "z" * 33, "0123456789" * 7, "ß" * 20]
     df = spark.createDataFrame([(k,) for k in keys], "key string")
-    pos_cols = [
-        F.pmod(
-            F.conv(F.substring(F.md5(
-                F.concat_ws(":", F.lit(str(i)), F.col("key").cast("string"))),
-                1, 15), 16, 10).cast("long"),
-            F.lit(BLOOM_CAP_BITS)).alias(f"p{i}")
-        for i in range(BLOOM_K)
-    ]
+    pos_cols = [p.alias(f"p{i}") for i, p in
+                enumerate(bloom_position_cols("key"))]
     got = {r["key"]: [r[f"p{i}"] for i in range(BLOOM_K)]
            for r in df.select("key", *pos_cols).collect()}
     for k in keys:
         assert got[k] == bloom_positions(k, BLOOM_CAP_BITS), k
+    # and the driver hash is Spark's xxhash64 bit for bit
+    hashes = {r["key"]: r["h"] & ((1 << 64) - 1) for r in
+              df.select("key", F.xxhash64("key").alias("h")).collect()}
+    assert all(hashes[k] == xxh64(k.encode()) for k in keys)
+
+
+def test_written_bloom_equals_driver_bitmap(table):
+    """The bitmap-aggregate build (riding the part write, and the
+    recovery rebuild) is byte-identical to bloom_to_hex over the
+    driver-side positions of the part's keys."""
+    keys = list(range(0, 900, 3))
+    _flush_keys(table, keys)
+    p = table.manifest.parts[0]
+    assert p.bloom_algo == BLOOM_ALGO
+    want = bloom_to_hex(
+        [q for k in keys for q in bloom_positions(f"k{k:04d}", p.bloom_bits)],
+        p.bloom_bits)
+    assert p.bloom_hex == want
+    hex_before, bits_before = p.bloom_hex, p.bloom_bits
+    table._attach_bloom(p)  # recovery path, exact distinct count
+    assert (p.bloom_hex, p.bloom_bits) == (hex_before, bits_before)
+
+
+def test_md5_era_parts_answer_no_claim_until_rewritten(spark):
+    """Parts whose manifest says bloom_algo="md5x3" (written before the
+    xxh64 scheme) make no claim — lookups scan them and stay correct —
+    and carry a pruning new-scheme bloom after OPTIMIZE FINAL."""
+    import json
+    import os
+
+    base = tempfile.mkdtemp(prefix="bloom_md5_")
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**9, max_parts=100)
+    try:
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg) as t:
+            _flush_keys(t, range(0, 100, 2))
+            _flush_keys(t, range(1, 100, 2))
+            mf = t.manifest.file_path
+        with open(mf) as f:
+            doc = json.load(f)
+        for pd in doc["parts"]:
+            pd["bloom_algo"] = "md5x3"  # bits now mean nothing
+            pd["bloom_hex"] = "00" * (pd["bloom_bits"] // 8)
+        with open(mf, "w") as f:
+            json.dump(doc, f)
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg) as t:
+            assert all(p.bloom_algo == "md5x3" for p in t.manifest.parts)
+            assert len(t.parts_for_key("k0050")) == 2  # no claim
+            rows = t.query_key("k0051").collect()
+            assert [(r["key"], r["value"]) for r in rows] == [("k0051",
+                                                               "v51")]
+            t.optimize(final=True)
+            (p,) = t.manifest.parts
+            assert p.bloom_algo == BLOOM_ALGO
+            assert p.may_contain_key("k0051")
+            assert len(t.parts_for_key("k0051")) == 1
+            # absent in-range keys now prune the merged part
+            assert sum(not p.may_contain_key(f"k{k:04d}x")
+                       for k in range(100)) > 90
+            assert t.query_key("k0050").count() == 1
+            assert os.path.isdir(p.path)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_bloom_fold_is_consistent_across_sizes():
@@ -172,3 +234,21 @@ def test_sizing_clamps():
     assert bloom_size_for(1) == 1 << 10
     assert bloom_size_for(1000) == 1 << 14
     assert bloom_size_for(10**6) == BLOOM_CAP_BITS
+
+
+def test_connector_bloom_check_matches_engine(table):
+    """The mergetree connector carries its own copy of the bloom check
+    (it may not import the engine); it must answer exactly like
+    PartMeta.may_contain_key."""
+    from clickhouse_mergetree_spark.sources.mergetree_source import (
+        _bloom_may_contain,
+    )
+
+    _flush_keys(table, range(0, 300, 2))
+    p = table.manifest.parts[0]
+    doc = {"bloom_hex": p.bloom_hex, "bloom_bits": p.bloom_bits,
+           "bloom_k": p.bloom_k, "bloom_algo": p.bloom_algo}
+    probes = [f"k{k:04d}" for k in range(300)] + ["", "é漢字", "w" * 40]
+    assert [_bloom_may_contain(doc, k) for k in probes] == \
+        [p.may_contain_key(k) for k in probes]
+    assert not all(_bloom_may_contain(doc, k) for k in probes)

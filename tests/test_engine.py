@@ -966,27 +966,175 @@ def test_insert_batch_defer_count_contract(spark, tmp_path):
     t.close()
 
 
-def test_match_counts_one_job_equals_per_part_counts(spark, base_path):
-    """r14: mutate()/materialize_deletes() probe their candidates with
-    ONE tagged-union groupBy(part_id) job; its per-part results must be
-    identical to the per-part filter().count() wave it replaced."""
+def test_match_counts_one_job_equals_per_part_counts(spark, tmp_path):
+    """mutate()/materialize_deletes() probe their candidates with ONE
+    groupBy(part id) job over a part-id-tagged scan; its per-part
+    results must be identical to a per-part filter().count() wave —
+    across two schema groups (ADD COLUMN between flushes), under a live
+    lightweight-delete mask, and under a base path that itself contains
+    a part_7/ directory (the id comes from the dir holding the file)."""
     from pyspark.sql import functions as F
 
+    base = str(tmp_path / "part_7" / "t")
     cfg = MergeTreeConfig(memtable_flush_threshold=100, max_parts=10)
-    with SparkMergeTree(spark, base_path, config=cfg) as t:
-        for band in range(3):
+    with SparkMergeTree(spark, base, config=cfg) as t:
+        for band in range(2):
             t.insert_rows([(f"k{band}_{i}", f"v{i}", band * 100 + i)
                            for i in range(20)])
             t.flush()
+        t.add_column("extra", "bigint", default=5)
+        for band in range(2, 4):
+            t.insert_batch(spark.createDataFrame(
+                [(f"k{band}_{i}", f"v{i}", band * 100 + i, i)
+                 for i in range(20)], t.schema))
+            t.flush()
+        t.lightweight_delete("timestamp % 5 = 1")
         cands = list(t.manifest.parts)
-        assert len(cands) == 3
-        srcs = [t._read_parts([p]) for p in cands]
-        ids = [p.part_id for p in cands]
+        assert len(cands) == 4
+        assert len({tuple(p.columns) for p in cands}) == 2
+
+        def per_part(hit=None):
+            return [(t._read_parts([p]).filter(hit) if hit is not None
+                     else t._read_parts([p])).count() for p in cands]
+
         hit = F.col("timestamp") % 2 == 0  # matches some rows per part
-        assert (t._match_counts(srcs, ids, hit)
-                == [s.filter(hit).count() for s in srcs])
-        none = F.col("timestamp") < 0     # matches nothing: all zeros
-        assert t._match_counts(srcs, ids, none) == [0, 0, 0]
-        # no predicate (materialize_deletes shape): full per-part counts
-        assert t._match_counts(srcs, ids) == [p.row_count for p in cands]
-        assert t._match_counts([], []) == []
+        assert t._match_counts(cands, hit) == per_part(hit)
+        on_added = F.col("extra") > 10     # the filled default never hits
+        assert t._match_counts(cands, on_added) == per_part(on_added)
+        assert t._match_counts(cands, on_added)[:2] == [0, 0]
+        none = F.col("timestamp") < 0      # matches nothing: all zeros
+        assert t._match_counts(cands, none) == [0, 0, 0, 0]
+        # no predicate (materialize_deletes shape): masked per-part counts
+        assert t._match_counts(cands) == per_part() == [16] * 4
+        assert t._match_counts(cands[2:3]) == [16]
+        assert t._match_counts([]) == []
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a fresh job group: (result, job count, stage
+    count). Every exchange adds a stage, so one job of one stage means
+    the work ran as a single shuffle-free job."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"gate_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    ids = st.getJobIdsForGroup(gid)
+    return out, len(ids), sum(len(st.getJobInfo(j).stageIds) for j in ids)
+
+
+def _has_exchange(df) -> bool:
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def _gate_table(spark, path, **cfg):
+    t = SparkMergeTree(spark, path, config=MergeTreeConfig(
+        memtable_flush_threshold=10**9, max_parts=3, **cfg))
+    for band in range(4):
+        t.insert_rows([(f"k{(i * 7 + band) % 60:03d}", f"v{band}_{i}",
+                        band * 1000 + i % 9) for i in range(60)])
+        t.flush()
+    return t
+
+
+def test_part_sized_reads_and_merges_run_as_one_job(spark, tmp_path):
+    """The one-task gate: when manifest row counts prove the input fits
+    in one part file, a point lookup, a range count and a merge each
+    start exactly one Spark job with no exchange; results equal the
+    parallel plan's (rows_per_file below the input)."""
+    one = _gate_table(spark, str(tmp_path / "one"))
+    par = _gate_table(spark, str(tmp_path / "par"), rows_per_file=50)
+    try:
+        for t, single in ((one, True), (par, False)):
+            assert _has_exchange(t.query_key("k007")) != single
+            assert _has_exchange(t.query("k010", "k030")) != single
+        got, jobs, stages = _jobs(spark,
+                                  lambda: _rows(one.query_key("k007")))
+        assert (jobs, stages) == (1, 1)
+        assert got == _rows(par.query_key("k007")) and got
+        n, jobs, stages = _jobs(spark,
+                                lambda: one.query("k010", "k030").count())
+        assert (jobs, stages) == (1, 1)
+        assert n == par.query("k010", "k030").count() > 0
+        _, pjobs, _ = _jobs(spark, lambda: par.query_key("k007").collect())
+        assert pjobs > 1
+        # merge: 4 parts > max_parts=3
+        merged, jobs, stages = _jobs(spark, one.merge_parts_sync)
+        assert merged and (jobs, stages) == (1, 1)
+        merged, pjobs, _ = _jobs(spark, par.merge_parts_sync)
+        assert merged and pjobs > 1
+        assert one.part_count() == par.part_count() < 4
+        assert _rows(one.query_all()) == _rows(par.query_all())
+        # buffered (counted) rows still fit the proof
+        one.insert_rows([("k007", "buffered", 5)])
+        got, jobs, _ = _jobs(spark, lambda: _rows(one.query_key("k007")))
+        assert jobs == 1 and ("k007", "buffered", 5) in got
+    finally:
+        one.close()
+        par.close()
+
+
+def test_unknown_sizes_keep_the_parallel_plan(spark, tmp_path):
+    """Recovered parts (row_count < 0) and uncounted defer_count blocks
+    give no size proof: reads keep today's plan, with equal results."""
+    from pyspark.sql import functions as F
+
+    t = _gate_table(spark, str(tmp_path / "t"))
+    try:
+        want_key = _rows(t.query_key("k007"))
+        want_n = t.query("k010", "k030").count()
+        p = t.manifest.parts[0]
+        saved, p.row_count = p.row_count, -1
+        assert _has_exchange(t.query_key("k007"))
+        assert _rows(t.query_key("k007")) == want_key
+        _, jobs, _ = _jobs(spark, lambda: t.query("k010", "k030").count())
+        assert jobs > 1
+        assert t.query("k010", "k030").count() == want_n
+        p.row_count = saved
+        extra = spark.createDataFrame([("k007", "deferred", 7)], t.schema)
+        t.insert_batch(extra.filter(F.col("key") == "k007"),
+                       defer_count=True)
+        assert _has_exchange(t.query_key("k007"))
+        assert _rows(t.query_key("k007")) == sorted(
+            want_key + [("k007", "deferred", 7)], key=lambda r: r[2])
+        _, jobs, _ = _jobs(spark, lambda: t.query("k010", "k030").count())
+        assert jobs > 1
+        assert t.query("k010", "k030").count() == want_n
+    finally:
+        t.close()
+
+
+def test_background_maintenance_records_errors(spark, base_path):
+    """A failing background merge must not vanish: the loop stays alive,
+    and the table keeps the exception and its time as last_error."""
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**9, max_parts=1,
+                          merge_interval_seconds=0.05)
+    with SparkMergeTree(spark, base_path, config=cfg) as t:
+        for band in range(2):
+            t.insert_rows([(f"k{band}_{i}", "v", i) for i in range(5)])
+            t.flush()
+        real, calls = t.perform_merge, []
+
+        def flaky():
+            calls.append(1)
+            if len(calls) == 1:
+                raise RuntimeError("disk full")
+            return real()
+
+        t.perform_merge = flaky
+        before = time.time()
+        t.start_background_maintenance()
+        deadline = time.time() + 60
+        while t.part_count() > 1 and time.time() < deadline:
+            time.sleep(0.05)
+        t.stop_background_maintenance()
+        assert t.last_error is not None
+        assert isinstance(t.last_error["error"], RuntimeError)
+        assert str(t.last_error["error"]) == "disk full"
+        assert before <= t.last_error["time"] <= time.time()
+        assert len(calls) >= 2 and t.part_count() == 1  # loop survived

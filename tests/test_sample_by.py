@@ -89,13 +89,33 @@ def test_sample_commutes_with_dedup(table):
     assert sorted(map(tuple, sampled.collect())) == sorted(map(tuple, want))
 
 
-def test_sample_filter_below_dedup_shuffle(table):
+def test_sample_filter_below_dedup_shuffle(spark, base, table):
+    # a table that fits one part file reads in one task, with no shuffle:
+    # the md5 sample filter must still run below (before) the dedup
     plan = (table.query_sample(0.25)
             ._jdf.queryExecution().executedPlan().toString())
-    # printed plans are root-first: the md5 sample filter must sit BELOW
-    # (execute before) the dedup/sort Exchange, shrinking the shuffle
-    assert "md5" in plan and "Exchange" in plan
-    assert plan.index("md5") > plan.index("Exchange")
+    assert "md5" in plan and "Exchange" not in plan
+    assert plan.index("md5") > plan.rfind("Aggregate") > 0
+    # rows_per_file below the table's 600 rows keeps the parallel plan
+    t = SparkMergeTree(spark, base + "_wide", schema=SCHEMA,
+                       config=MergeTreeConfig(**CFG, rows_per_file=100))
+    try:
+        t.insert_rows([(k, ts, float(k)) for k in range(200)
+                       for ts in range(3)])
+        t.flush()
+        plan = (t.query_sample(0.25)
+                ._jdf.queryExecution().executedPlan().toString())
+        # printed plans are root-first: the md5 sample filter must sit
+        # BELOW (execute before) the dedup/sort Exchange, shrinking the
+        # shuffle
+        assert "md5" in plan and "Exchange" in plan
+        assert plan.index("md5") > plan.index("Exchange")
+        assert plan.index("md5") > max(plan.rfind("Aggregate"),
+                                       plan.rfind("Exchange"))
+        assert _keys(t.query_sample(0.25)) == _keys(table.query_sample(0.25))
+    finally:
+        t.close()
+        shutil.rmtree(base + "_wide", ignore_errors=True)
 
 
 def test_sample_refusals(spark, base):
