@@ -14,6 +14,7 @@ assumption matches the reference's single-process model (src/merge_tree.h:34-41)
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -30,76 +31,34 @@ from dataclasses import asdict, dataclass, field
 #
 # The bitmap is BUILT by a distributed aggregate over the part's key column
 # but CHECKED on the driver at lookup time, so the hash must be computable
-# bit-identically in both places. One 64-bit hash per value — XXH64 with
-# seed 42 over the UTF-8 bytes of the canonical string cast, which is
-# exactly Spark's ``xxhash64(cast(v as string))`` — split into halves
-# h1 (low 32 bits) and h2 (high 32 bits) gives the k positions by double
-# hashing (Kirsch-Mitzenmacher): p_i = (h1 + i * h2) mod m. The sums stay
-# below 2^35, so the Spark side never overflows a long (ANSI-safe).
+# bit-identically in both places. One MD5 per value over the UTF-8 bytes of
+# its canonical string cast; its first two 32-bit big-endian words h1 and h2
+# give the k positions by double hashing (Kirsch-Mitzenmacher):
+# p_i = (h1 + i * h2) mod m. Spark expresses h1 and h2 as
+# conv(substring(md5(...), 1, 8), 16, 10) and (..., 9, 8), hashlib as
+# digest[0:4] and digest[4:8]. MD5 (not SHA-256) because this is indexing,
+# not crypto: it's the cheapest hash available identically in Spark and
+# hashlib. The sums stay below 2^35, so the Spark side never overflows a
+# long (ANSI-safe).
 # All bitmap sizes are powers of two, so positions taken at BLOOM_CAP_BITS
 # fold to any smaller size with a mask ((h mod 2^a) mod 2^b == h mod 2^b).
 
 BLOOM_K = 3              # hash functions per key
 BLOOM_BITS_PER_KEY = 16  # target fill → ~0.5% false-positive rate at k=3
 # Hash-scheme tag stored per part. A bitmap built under a different scheme
-# (e.g. the earlier "md5x3" one) must yield "no claim", never a false
-# negative — check-side hashes would land on the wrong bits. Such parts
-# regain a bloom at their next rewrite (merge, mutation, TTL).
-BLOOM_ALGO = "xxh64dh3"
+# (e.g. the earlier "md5x3" one, three MD5s per value) must yield "no
+# claim", never a false negative — check-side hashes would land on the
+# wrong bits. Opening a table rebuilds such blooms once
+# (SparkMergeTree._rebuild_missing_metadata).
+BLOOM_ALGO = "md5dh3"
 BLOOM_MIN_BITS = 1 << 10
 BLOOM_CAP_BITS = 1 << 16  # 64 Kib bitmap = 16 KiB hex in the manifest, max
-XXH64_SEED = 42           # Spark's xxhash64 seed
-
-_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def xxh64(data: bytes, seed: int = XXH64_SEED) -> int:
-    """XXH64 of ``data`` as an unsigned 64-bit int — the reference
-    algorithm, equal to Spark's ``xxhash64`` over a string's UTF-8 bytes
-    (Spark returns the same bits as a signed long). The mergetree
-    connector carries a copy (sources/mergetree_source.py)."""
-    def rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & _M64
-
-    def rnd(acc, lane):
-        return rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
-
-    def word(i, w):
-        return int.from_bytes(data[i:i + w], "little")
-
-    n, i = len(data), 0
-    if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
-             (seed - _P1) & _M64]
-        while i + 32 <= n:
-            v = [rnd(v[j], word(i + 8 * j, 8)) for j in range(4)]
-            i += 32
-        h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12)
-             + rotl(v[3], 18)) & _M64
-        for x in v:
-            h = ((h ^ rnd(0, x)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h = (rotl(h ^ rnd(0, word(i, 8)), 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (rotl(h ^ (word(i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
-        i += 4
-    for b in data[i:]:
-        h = rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
-    h = (h ^ (h >> 33)) * _P2 & _M64
-    h = (h ^ (h >> 29)) * _P3 & _M64
-    return h ^ (h >> 32)
 
 
 def bloom_positions(key, n_bits: int, k: int = BLOOM_K) -> list[int]:
     """The k bit positions of ``key`` in an ``n_bits`` bitmap (driver side)."""
-    h = xxh64(str(key).encode())
-    h1, h2 = h & 0xFFFFFFFF, h >> 32
+    d = hashlib.md5(str(key).encode()).digest()
+    h1, h2 = int.from_bytes(d[:4], "big"), int.from_bytes(d[4:8], "big")
     return [(h1 + i * h2) % n_bits for i in range(k)]
 
 

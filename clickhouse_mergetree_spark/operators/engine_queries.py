@@ -2660,8 +2660,9 @@ def q_sample_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     # root-first print: the md5 filter below every aggregate and Exchange
     # ⇒ it executes before the dedup and before its shuffle (a table that
     # fits one part file reads in one task and plans no shuffle at all)
-    assert "md5" in plan and plan.index("md5") > max(
-        plan.rfind("Aggregate"), plan.rfind("Exchange"))
+    assert "md5" in plan and "Aggregate" in plan
+    assert plan.index("md5") > max(plan.rfind("Aggregate"),
+                                   plan.rfind("Exchange"))
     return out.select("key", "ts_us", "event_id", "event_type", "value")
 
 

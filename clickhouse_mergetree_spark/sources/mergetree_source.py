@@ -141,64 +141,23 @@ def _check_no_lightweight_deletes(base_path: str) -> None:
             f"through the mergetree connector")
 
 
-_M64 = (1 << 64) - 1
-_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-
-
-def _xxh64(data: bytes, seed: int = 42) -> int:
-    """XXH64 — a copy of engine/manifest.py's xxh64 (this module may not
-    import the engine, see the module docstring)."""
-    def rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & _M64
-
-    def rnd(acc, lane):
-        return rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
-
-    def word(i, w):
-        return int.from_bytes(data[i:i + w], "little")
-
-    n, i = len(data), 0
-    if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
-             (seed - _P1) & _M64]
-        while i + 32 <= n:
-            v = [rnd(v[j], word(i + 8 * j, 8)) for j in range(4)]
-            i += 32
-        h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12)
-             + rotl(v[3], 18)) & _M64
-        for x in v:
-            h = ((h ^ rnd(0, x)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h = (rotl(h ^ rnd(0, word(i, 8)), 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (rotl(h ^ (word(i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
-        i += 4
-    for b in data[i:]:
-        h = rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
-    h = (h ^ (h >> 33)) * _P2 & _M64
-    h = (h ^ (h >> 29)) * _P3 & _M64
-    return h ^ (h >> 32)
-
-
 def _bloom_may_contain(part: dict, key) -> bool:
     """Per-part key-bloom check (format contract with engine/manifest.py:
-    h = XXH64(str(key), seed 42), positions (low32(h) + i * high32(h))
-    mod bloom_bits, scheme-tagged "xxh64dh3"). Parts without a bloom — or
-    one built under a different hash scheme — always say True: skipping
-    is pure optimization and a scheme mismatch must never produce a
-    false negative."""
+    d = md5(str(key)), h1/h2 = its first two big-endian 32-bit words,
+    positions (h1 + i * h2) mod bloom_bits, scheme-tagged "md5dh3").
+    Parts without a bloom — or one built under a different hash scheme —
+    always say True: skipping is pure optimization and a scheme mismatch
+    must never produce a false negative."""
     hx, m, k = part.get("bloom_hex"), part.get("bloom_bits"), part.get("bloom_k")
-    if not hx or not m or not k or part.get("bloom_algo") != "xxh64dh3":
+    if not hx or not m or not k or part.get("bloom_algo") != "md5dh3":
         return True
+    import hashlib
+
     bits = bytes.fromhex(hx)
-    h = _xxh64(str(key).encode())
+    d = hashlib.md5(str(key).encode()).digest()
+    h1, h2 = int.from_bytes(d[:4], "big"), int.from_bytes(d[4:8], "big")
     for i in range(k):
-        p = ((h & 0xFFFFFFFF) + i * (h >> 32)) % m
+        p = (h1 + i * h2) % m
         if not bits[p >> 3] & (1 << (p & 7)):
             return False
     return True

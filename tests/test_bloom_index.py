@@ -30,7 +30,6 @@ from clickhouse_mergetree_spark.engine.manifest import (
     bloom_positions,
     bloom_size_for,
     bloom_to_hex,
-    xxh64,
 )
 from clickhouse_mergetree_spark.engine.merge_tree import bloom_position_cols
 
@@ -128,22 +127,17 @@ def test_merged_part_gets_bloom_and_lookups_stay_correct(table):
 
 def test_spark_hash_matches_driver_hash(spark):
     """The build-side positions (the engine's own Spark expression) and
-    the check-side ones (pure-Python XXH64) must agree exactly — over
-    the empty string, multi-byte UTF-8, and keys of 32 bytes or more
-    (XXH64's four-lane long-input path)."""
+    the check-side ones (hashlib md5 on the driver) must agree exactly —
+    over the empty string, multi-byte UTF-8, and keys past one 64-byte
+    MD5 block."""
     keys = ["k0001", "7", "hello world", "", "k9999", "é漢字🙂",
-            "x" * 31, "y" * 32, "z" * 33, "0123456789" * 7, "ß" * 20]
+            "x" * 31, "y" * 32, "z" * 33, "0123456789" * 7, "ß" * 40]
     df = spark.createDataFrame([(k,) for k in keys], "key string")
-    pos_cols = [p.alias(f"p{i}") for i, p in
-                enumerate(bloom_position_cols("key"))]
     got = {r["key"]: [r[f"p{i}"] for i in range(BLOOM_K)]
-           for r in df.select("key", *pos_cols).collect()}
+           for r in df.select("key", *bloom_position_cols("key", ""))
+           .collect()}
     for k in keys:
         assert got[k] == bloom_positions(k, BLOOM_CAP_BITS), k
-    # and the driver hash is Spark's xxhash64 bit for bit
-    hashes = {r["key"]: r["h"] & ((1 << 64) - 1) for r in
-              df.select("key", F.xxhash64("key").alias("h")).collect()}
-    assert all(hashes[k] == xxh64(k.encode()) for k in keys)
 
 
 def test_written_bloom_equals_driver_bitmap(table):
@@ -163,10 +157,12 @@ def test_written_bloom_equals_driver_bitmap(table):
     assert (p.bloom_hex, p.bloom_bits) == (hex_before, bits_before)
 
 
-def test_md5_era_parts_answer_no_claim_until_rewritten(spark):
-    """Parts whose manifest says bloom_algo="md5x3" (written before the
-    xxh64 scheme) make no claim — lookups scan them and stay correct —
-    and carry a pruning new-scheme bloom after OPTIMIZE FINAL."""
+def test_md5x3_parts_get_new_scheme_blooms_at_reopen(spark):
+    """Parts whose manifest says bloom_algo="md5x3" (three md5s per key,
+    the scheme before md5dh3) carry bits the check cannot read. Opening
+    the table rebuilds those blooms once, so the parts prune right away —
+    without waiting for a rewrite — and lookups stay correct before and
+    after OPTIMIZE FINAL."""
     import json
     import os
 
@@ -185,11 +181,16 @@ def test_md5_era_parts_answer_no_claim_until_rewritten(spark):
         with open(mf, "w") as f:
             json.dump(doc, f)
         with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg) as t:
-            assert all(p.bloom_algo == "md5x3" for p in t.manifest.parts)
-            assert len(t.parts_for_key("k0050")) == 2  # no claim
+            assert all(p.bloom_algo == BLOOM_ALGO for p in t.manifest.parts)
+            assert len(t.parts_for_key("k0050")) == 1  # odd-key part pruned
+            assert len(t.parts_for_key("k0051")) == 1
             rows = t.query_key("k0051").collect()
             assert [(r["key"], r["value"]) for r in rows] == [("k0051",
                                                                "v51")]
+        with open(mf) as f:  # the rebuilt blooms were persisted
+            assert all(pd["bloom_algo"] == BLOOM_ALGO
+                       for pd in json.load(f)["parts"])
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg) as t:
             t.optimize(final=True)
             (p,) = t.manifest.parts
             assert p.bloom_algo == BLOOM_ALGO

@@ -1109,6 +1109,34 @@ def test_unknown_sizes_keep_the_parallel_plan(spark, tmp_path):
         t.close()
 
 
+def test_inputs_above_one_task_bound_keep_the_parallel_plan(
+        spark, tmp_path, monkeypatch):
+    """The gate also stops at ONE_TASK_MAX_ROWS, and match-count probes
+    at ONE_TASK_MAX_PROBE_ROWS (the measured crossovers), whatever
+    rows_per_file allows."""
+    from clickhouse_mergetree_spark.engine import merge_tree
+
+    t = _gate_table(spark, str(tmp_path / "t"))
+    try:
+        assert not _has_exchange(t.query("k010", "k030"))
+        want = _rows(t.query("k010", "k030"))
+        parts = list(t.manifest.parts)
+        counts, jobs, _ = _jobs(spark, lambda: t._match_counts(parts))
+        assert jobs == 1 and counts == [60] * 4
+        monkeypatch.setattr(merge_tree, "ONE_TASK_MAX_PROBE_ROWS", 100)
+        again, jobs, _ = _jobs(spark, lambda: t._match_counts(parts))
+        assert jobs > 1 and again == counts
+        assert not _has_exchange(t.query("k010", "k030"))  # reads unchanged
+        monkeypatch.setattr(merge_tree, "ONE_TASK_MAX_ROWS", 100)
+        assert t.config.rows_per_file > 240
+        assert _has_exchange(t.query("k010", "k030"))
+        assert _rows(t.query("k010", "k030")) == want
+        merged, jobs, _ = _jobs(spark, t.merge_parts_sync)
+        assert merged and jobs > 1
+    finally:
+        t.close()
+
+
 def test_background_maintenance_records_errors(spark, base_path):
     """A failing background merge must not vanish: the loop stays alive,
     and the table keeps the exception and its time as last_error."""

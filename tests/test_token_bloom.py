@@ -88,6 +88,25 @@ def test_scheme_mismatch_yields_no_claim(table):
     assert p.may_contain_token("text", "zzznothere") is True
 
 
+def test_stale_scheme_token_bloom_rebuilt_at_reopen(spark, table):
+    """A token bloom tagged with an older hash scheme is rebuilt when the
+    table opens, so the part prunes again without waiting for a rewrite."""
+    table.wait_for_index_builds()
+    for p in table.manifest.parts:
+        p.token_blooms["text"]["algo"] = "md5x3"
+    table.manifest.save()
+    table.close()
+    t = SparkMergeTree(spark, table.base_path, schema=SCHEMA,
+                       config=table.config)
+    try:
+        assert all(p.token_blooms["text"]["algo"] == BLOOM_ALGO
+                   for p in t.manifest.parts)
+        assert len(t.parts_for_token("text", "gamma")) == 1
+        assert t.query_token("text", "gamma").count() == 40
+    finally:
+        t.close()
+
+
 def test_unindexed_column_never_skips(table):
     p = table.manifest.parts[0]
     assert p.may_contain_token("nope", "anything") is True
