@@ -38,6 +38,7 @@ path).
 
 from __future__ import annotations
 
+import base64
 import json
 import logging
 import os
@@ -117,26 +118,36 @@ def bloom_bitmap_aggs(prefix: str) -> list:
     (bloom_position_cols) into fixed-size bitmaps (one per hash function
     and 32 Kib chunk) — a few KiB of buffer per task however many rows
     it sees, so they ride an ``observe`` as well as a plain ``agg``.
-    bloom_hex_from_row ORs and folds the result to the part's bitmap
-    size."""
+    Each 4 KiB bitmap comes back base64-encoded: 5,464 characters, so
+    the write observation can read them from the JVM one py4j answer at
+    a time (SparkMergeTree._read_bloom_observation). bloom_hex_from_row
+    ORs and folds the result to the part's bitmap size."""
     return [
-        F.expr(f"bitmap_construct_agg(CASE WHEN "
+        F.expr(f"base64(bitmap_construct_agg(CASE WHEN "
                f"shiftright(`{prefix}p{i}`, {_BITMAP_SHIFT}) = {c} "
-               f"THEN `{prefix}p{i}` & {_BITMAP_BITS - 1} END) "
+               f"THEN `{prefix}p{i}` & {_BITMAP_BITS - 1} END)) "
                f"AS `{prefix}{i}_{c}`")
         for i in range(BLOOM_K)
         for c in range(_BLOOM_CHUNKS)
     ]
 
 
+def bloom_bitmap_names(prefix: str) -> list[str]:
+    """The output names of bloom_bitmap_aggs, in its order."""
+    return [f"{prefix}{i}_{c}"
+            for i in range(BLOOM_K) for c in range(_BLOOM_CHUNKS)]
+
+
 def bloom_hex_from_row(row, prefix: str, n_bits: int) -> str:
     """The ``n_bits`` hex bitmap from bloom_bitmap_aggs' results in
-    ``row`` — byte-identical to bloom_to_hex over the same positions."""
+    ``row`` (a Row or a name -> base64 mapping) — byte-identical to
+    bloom_to_hex over the same positions."""
     cap = b""
     for c in range(_BLOOM_CHUNKS):
         acc = 0
         for i in range(BLOOM_K):
-            acc |= int.from_bytes(row[f"{prefix}{i}_{c}"] or b"", "little")
+            acc |= int.from_bytes(
+                base64.b64decode(row[f"{prefix}{i}_{c}"] or ""), "little")
         cap += acc.to_bytes(_BITMAP_BITS // 8, "little")
     return bloom_fold(cap, n_bits)
 
@@ -398,6 +409,7 @@ class SparkMergeTree:
         self._index_drain_lock = threading.Lock()
         self._index_pool = None  # lazy ThreadPoolExecutor(max_workers=2)
         self._pending_index: list[tuple[PartMeta, object]] = []
+        self._write_cols: dict | None = None  # see _write_columns
         self._closed = False
         # system.query_log analog: per-session plan-time read ledger
         # (kind + parts pruned/scanned). In-memory by design — ClickHouse's
@@ -475,7 +487,8 @@ class SparkMergeTree:
                 stacklevel=2)
         self._bg_stop = threading.Event()
         self._bg_thread: threading.Thread | None = None
-        # the background loop's latest failure: {"error", "time"} or None
+        # the latest failure of the background loop, or of a deferred
+        # index build drained at close(): {"error", "time"} or None
         self.last_error: dict | None = None
         # SYSTEM STOP MERGES state — deliberately in-memory only, like
         # ClickHouse's (the flag does not survive a server restart)
@@ -957,6 +970,46 @@ class SparkMergeTree:
                     ignore_errors=True)
             raise
 
+    def _write_columns(self) -> dict:
+        """The part write's table-invariant Columns, built once per
+        instance: every Column call is a py4j round trip, and rebuilding
+        these on each write was most of an insert's round trips
+        (PERF_NOTES, "the py4j stall"). The metrics that ALTERs change
+        (minmax, set, CHECK) are built per write."""
+        cols = self._write_cols
+        if cols is None:
+            key, ts = F.col(self._key), F.col(self._ts)
+            cols = {
+                "sort": [key, ts],
+                "stats": [
+                    F.min(key).alias("min_key"),
+                    F.max(key).alias("max_key"),
+                    F.min(ts).alias("min_ts"),
+                    F.max(ts).alias("max_ts"),
+                    F.count(F.lit(1)).alias("row_count"),
+                ],
+            }
+            if self.config.enable_bloom_index:
+                # approx_count_distinct sizes the bitmap (observe forbids
+                # exact DISTINCT aggregates; sizing needs the magnitude)
+                cols["stats"].append(
+                    F.approx_count_distinct(key).alias("bloom_nd"))
+                cols["bloom_pos"] = bloom_position_cols(self._key,
+                                                        "__bloom_")
+                cols["bloom_aggs"] = bloom_bitmap_aggs("__bloom_")
+            self._write_cols = cols
+        return cols
+
+    @staticmethod
+    def _read_bloom_observation(obs) -> dict[str, str]:
+        """The base64 bitmaps of a bloom_bitmap_aggs Observation, read
+        one field at a time: a py4j answer over 8 KiB stalls ~44 ms
+        (PERF_NOTES, "the py4j stall"), and Observation.get would pickle
+        all six into one ~37k-character answer."""
+        jrow = obs._jo.getRow()
+        return {name: jrow.getString(i)
+                for i, name in enumerate(bloom_bitmap_names("__bloom_"))}
+
     def _write_part_files(self, part_id: int, df: DataFrame, n_rows: int,
                           partition: str | None = None,
                           enforce_constraints: bool = False) -> PartMeta:
@@ -969,38 +1022,25 @@ class SparkMergeTree:
         The R24 manifest stats ride along on the write job itself via
         ``observe`` — no second read-back scan of the part. (The reference
         also computes metadata during the part write, src/part.cpp:23-28.)
+        Two Observations: the scalar stats come back as one small pickled
+        row, the key bloom's six 4 KiB bitmaps as base64 strings read one
+        field at a time — no py4j answer on this path exceeds 8 KiB.
         """
         import uuid
 
+        from pyspark.sql import Observation
+
+        wc = self._write_columns()
         path = os.path.join(self.base_path, f"part_{part_id}")
         n_files = max(1, ceil(n_rows / self.config.rows_per_file))
         shaped = (
-            df.repartitionByRange(n_files, self._key, self._ts)
-            .sortWithinPartitions(self._key, self._ts)
+            df.repartitionByRange(n_files, *wc["sort"])
+            .sortWithinPartitions(*wc["sort"])
             if n_files > 1
-            else df.coalesce(1).sortWithinPartitions(self._key, self._ts)
+            else df.coalesce(1).sortWithinPartitions(*wc["sort"])
         )
-        obs_name = f"part_stats_{uuid.uuid4().hex[:8]}"
-        from pyspark.sql import Observation
-
-        metrics = [
-            F.min(self._key).alias("min_key"),
-            F.max(self._key).alias("max_key"),
-            F.min(self._ts).alias("min_ts"),
-            F.max(self._ts).alias("max_ts"),
-            F.count(F.lit(1)).alias("row_count"),
-        ]
-        if self.config.enable_bloom_index:
-            # The bloom rides the SAME write job as fixed-size bitmap
-            # aggregates — no second scan of the part, a few KiB back to
-            # the driver regardless of part size; approx_count_distinct
-            # sizes the bitmap (observe forbids exact DISTINCT aggregates,
-            # and sizing only needs the magnitude).
-            shaped = shaped.select("*", *bloom_position_cols(self._key,
-                                                             "__bloom_"))
-            metrics += bloom_bitmap_aggs("__bloom_")
-            metrics.append(
-                F.approx_count_distinct(self._key).alias("bloom_nd"))
+        tag = uuid.uuid4().hex[:8]
+        metrics = list(wc["stats"])
         for c in self.config.minmax_cols:
             # minmax skip index rides the same write-job observation
             metrics += [F.min(c).alias(f"mm_min_{c}"),
@@ -1022,10 +1062,16 @@ class SparkMergeTree:
             metrics.append(F.sum(
                 F.when(F.expr(c["expr"]), 0).otherwise(1))
                 .alias(f"viol_{i}"))
-        obs = Observation(obs_name)
+        obs = Observation(f"part_stats_{tag}")
         shaped = shaped.observe(obs, *metrics)
         if self.config.enable_bloom_index:
-            shaped = shaped.drop(*[f"__bloom_p{i}" for i in range(BLOOM_K)])
+            # The key bloom rides the SAME write job as fixed-size bitmap
+            # aggregates — no second scan of the part, and six 4 KiB
+            # bitmaps back to the driver whatever the part's size.
+            bloom_obs = Observation(f"part_bloom_{tag}")
+            shaped = (shaped.select("*", *wc["bloom_pos"])
+                      .observe(bloom_obs, *wc["bloom_aggs"])
+                      .drop(*[f"__bloom_p{i}" for i in range(BLOOM_K)]))
         writer = shaped.write.mode("overwrite")
         if self.config.part_compression:
             # ClickHouse CODEC(...) analog at part granularity: parquet
@@ -1063,8 +1109,9 @@ class SparkMergeTree:
             meta.bloom_bits = bloom_size_for(int(stats["bloom_nd"]))
             meta.bloom_k = BLOOM_K
             meta.bloom_algo = BLOOM_ALGO
-            meta.bloom_hex = bloom_hex_from_row(stats, "__bloom_",
-                                                meta.bloom_bits)
+            meta.bloom_hex = bloom_hex_from_row(
+                self._read_bloom_observation(bloom_obs), "__bloom_",
+                meta.bloom_bits)
         if self.config.minmax_cols:
             meta.col_stats = {
                 c: [stats[f"mm_min_{c}"], stats[f"mm_max_{c}"]]
@@ -1270,6 +1317,12 @@ class SparkMergeTree:
                         ignore_errors=True)
                 raise
 
+        from clickhouse_mergetree_spark.parallel import (
+            with_caller_properties,
+        )
+
+        # the build's jobs belong to the operation that wrote the part
+        (build,) = with_caller_properties([build])
         with self._index_lock:
             if self._index_pool is None:
                 from concurrent.futures import ThreadPoolExecutor
@@ -4761,8 +4814,14 @@ class SparkMergeTree:
         self._closed = True
         self.stop_background_maintenance()
         self.flush()
-        # land + persist any deferred index builds, then stop the pool
-        self._drain_index_builds(suppress=True)
+        # land + persist any deferred index builds, then stop the pool; a
+        # failed build is recorded like a background failure, not lost
+        try:
+            self._drain_index_builds()
+        except Exception as exc:
+            self.last_error = {"error": exc, "time": time.time()}
+            _log.warning("deferred index build of %s failed at close: %r",
+                         self.base_path, exc)
         with self._index_lock:
             pool, self._index_pool = self._index_pool, None
         if pool is not None:

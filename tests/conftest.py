@@ -34,3 +34,23 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def py4j_answers(monkeypatch):
+    """Lengths of every py4j answer the JVM sends while the test runs.
+    Answers over 8,192 characters overflow the gateway's 8 KiB socket
+    buffer and cost ~44 ms each (PERF_NOTES, "the py4j stall")."""
+    import py4j.clientserver
+
+    lengths: list[int] = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def recording(self, command):
+        answer = send(self, command)
+        lengths.append(len(answer))
+        return answer
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
+                        "send_command", recording)
+    return lengths

@@ -157,6 +157,32 @@ def test_written_bloom_equals_driver_bitmap(table):
     assert (p.bloom_hex, p.bloom_bits) == (hex_before, bits_before)
 
 
+def test_write_path_py4j_answers_stay_under_8k(spark, py4j_answers):
+    """No py4j answer on the part-write path exceeds 8,192 characters:
+    the key bloom's six 4 KiB bitmaps come back one base64 field at a
+    time, not in one pickled ~37k-character row. Covers a flush, a
+    merge, an UPDATE rewrite and a TTL rewrite with the bloom on."""
+    base = tempfile.mkdtemp(prefix="bloom_py4j_")
+    cfg = MergeTreeConfig(memtable_flush_threshold=200, max_parts=3)
+    try:
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg) as t:
+            for band in range(4):
+                df = spark.createDataFrame(
+                    [(f"k{k:04d}", "v", band * 1000 + k)
+                     for k in range(band, 800, 4)][:200], SCHEMA)
+                t.insert_batch(df, row_count=200)
+            assert t.merge_parts_sync()
+            res = t.update_where(F.col("key") < "k0400",
+                                 {"value": F.lit("u")})
+            assert res["parts_rewritten"] >= 1
+            res = t.expire(2500)
+            assert res["parts_rewritten"] >= 1
+            assert py4j_answers
+            assert max(py4j_answers) <= 8192
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_md5x3_parts_get_new_scheme_blooms_at_reopen(spark):
     """Parts whose manifest says bloom_algo="md5x3" (three md5s per key,
     the scheme before md5dh3) carry bits the check cannot read. Opening

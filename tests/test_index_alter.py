@@ -108,6 +108,31 @@ def test_new_parts_index_at_write_time(spark, base):
     assert len(t.parts_for_token("text", "zebra")) == 2
 
 
+def test_alters_after_a_write_reach_the_next_part(spark, base):
+    """The part write keeps its table-invariant Columns across writes;
+    a CHECK constraint and minmax/set indexes added after the first
+    write still apply to the very next part."""
+    t = _three_parts(spark, base)
+    t.add_constraint("pos_score", "score > 0")
+    t.add_index("score", "minmax")
+    t.add_index("tag", "set", n=8)
+    t.insert_rows([_row(7, "bad", -1.0, "negative")])
+    with pytest.raises(ValueError, match="pos_score"):
+        t.flush()
+    assert t.part_count() == 3 and t.total_rows() == 6
+    t.insert_rows([_row(8, "new", 40.0, "lambda"),
+                   _row(9, "new", 42.0, "pi")])
+    t.flush()
+    new_part = t.manifest.parts[-1]
+    assert new_part.col_stats["score"] == [40.0, 42.0]
+    assert new_part.col_sets["tag"] == ["new"]
+    # the three pre-ALTER parts make no claim; the new part matches
+    assert len(t.parts_for_col_range("score", 39.0, 50.0)) == 4
+    assert sorted(r["key"] for r in
+                  t.query_col_range("score", 39.0, 50.0).collect()) == [8, 9]
+    t.close()
+
+
 def test_ddl_survives_reopen_and_merge(spark, base):
     t = _three_parts(spark, base)
     t.add_index("text", "ngrambf")

@@ -146,3 +146,63 @@ def test_deferred_builds_land_persist_and_match_sync(spark, tmp_path):
     assert len(r.parts_for_token("text", "alpha")) == 1
     t.close()
     r.close()
+
+
+def test_close_records_a_failed_deferred_build(spark, tmp_path, caplog):
+    """close() drains the deferred index builds; a build that failed is
+    kept as last_error ({"error", "time"}) and logged, not dropped."""
+    import logging
+    import time
+
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**12, max_parts=10,
+                          token_bloom_cols=("text",),
+                          key_col="doc_id", ts_col="ts_us")
+    t = SparkMergeTree(spark, str(tmp_path / "t"), schema=SCHEMA, config=cfg)
+
+    def broken(path, col):
+        raise RuntimeError("token build failed")
+
+    t._token_bloom_for = broken
+    t.insert_rows([(i, i, f"alpha doc {i}") for i in range(10)])
+    t.flush()
+    before = time.time()
+    with caplog.at_level(logging.WARNING):
+        t.close()
+    assert t.last_error is not None
+    assert isinstance(t.last_error["error"], RuntimeError)
+    assert str(t.last_error["error"]) == "token build failed"
+    assert before <= t.last_error["time"] <= time.time()
+    assert "token build failed" in caplog.text
+
+
+def test_fanout_jobs_inherit_the_callers_job_group(table):
+    """Part rewrites run on worker threads and token blooms build on the
+    deferred pool; every job they start carries the caller's job group."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    sc = table.spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex[:8]
+
+    def marker(name):
+        sc.setJobGroup(name, name)
+        table.spark.range(1).count()
+        return tracker.getJobIdsForGroup(name)
+
+    table.wait_for_index_builds()
+    try:
+        first = max(marker(f"before_{tag}"))
+        sc.setJobGroup(f"op_{tag}", "update_where")
+        res = table.update_where(F.col("doc_id") % 2 == 0,
+                                 {"text": F.lit("rewritten doc")})
+        table.wait_for_index_builds()
+        last = min(marker(f"after_{tag}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res["parts_rewritten"] >= 2
+    window = set(range(first + 1, last))
+    assert window
+    assert window == set(tracker.getJobIdsForGroup(f"op_{tag}"))
