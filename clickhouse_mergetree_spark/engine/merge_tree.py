@@ -842,7 +842,7 @@ class SparkMergeTree:
                     # possible only via an uncounted (defer_count) block
                     # that evaluated empty: a 0-row part has None stats
                     # and would poison pruning/TTL classification (the
-                    # _swap_or_remove rule, applied to inserts)
+                    # zero-row rule of _rewrite_parts, applied to inserts)
                     self._delete_part_dirs(meta)
                     continue
                 self.manifest.append(meta)
@@ -889,10 +889,80 @@ class SparkMergeTree:
             # BaseException, not Exception: run_concurrently re-raises
             # KeyboardInterrupt etc. from worker thunks, and skipping the
             # cleanup would leak every completed part dir invisibly (the
-            # manifest never saw them) — same clause as the commit loops
+            # manifest never saw them) — same clause as _rewrite_parts
             for m in written:
                 self._delete_part_dirs(m)
             raise
+
+    def _rewrite_parts(self, plan, on_commit=None) -> list[PartMeta | None]:
+        """The rewrite-and-commit primitive every lifecycle rewrite runs
+        through (merges, TTL, mutations, materialized deletes — the
+        reference's ``perform_merge``, src/merge_tree.cpp:245-288).
+
+        ``plan`` is a list of ``(old_parts, build)`` entries: ``build()``
+        returns ``(df, n_rows)`` for the part that replaces ``old_parts``
+        (written into ``old_parts[0].partition``); ``build=None`` drops
+        ``old_parts`` with no replacement.
+
+        Part ids are allocated upfront in plan order and the writes run as
+        concurrent jobs (_run_part_writes — a failed write deletes every
+        completed new dir and commits nothing). The commits then run
+        sequentially in plan order, one locked swap (or, for a drop or a
+        ZERO-row output, a remove: a 0-row part has None stats and would
+        poison range pruning, TTL classification and merge scoring) →
+        ``on_commit(old_parts)`` → lightweight-delete GC (the rewrite read
+        through the masked path, so it materialized the masks) → save per
+        entry. So part ids and the manifest's version history are
+        bit-identical to running the entries one at a time, and a crash
+        mid-batch leaves a committed prefix. After each commit the old
+        dirs are deleted, unless snapshots retain them; then one
+        ``vacuum()`` at the end reclaims what fell out of the retention
+        window (its cutoff is at least every intermediate one).
+
+        A failed commit deletes the new dirs whose commit was never
+        ATTEMPTED — no reclaim path can see them — before re-raising. The
+        attempted-but-failed one is left alone: its in-memory manifest
+        state is ambiguous, exactly the sequential loop's worst case.
+        Returns one PartMeta per entry (None for drops)."""
+        retain = self.config.snapshot_retention > 0
+        with self._lock:
+            ids = [None if build is None else self.manifest.allocate_part_id()
+                   for _old, build in plan]
+        metas = self._run_part_writes([
+            (lambda pid=pid, old=old, build=build: self._write_part(
+                pid, *build(), partition=old[0].partition))
+            for pid, (old, build) in zip(ids, plan) if build is not None])
+        out: list[PartMeta | None] = []
+        attempted = 0
+        try:
+            for old, build in plan:
+                new = None
+                if build is not None:
+                    new = metas[attempted]
+                    attempted += 1
+                out.append(new)
+                old_ids = [p.part_id for p in old]
+                with self._lock:
+                    if new is not None and new.row_count > 0:
+                        self.manifest.swap(old_ids, new, retain=retain)
+                    else:
+                        self.manifest.remove(old_ids, retain=retain)
+                        if new is not None:
+                            self._delete_part_dirs(new)
+                    if on_commit is not None:
+                        on_commit(old)
+                    self._gc_lw_deletes()
+                    self.manifest.save()
+                if not retain:
+                    for p in old:
+                        self._delete_part_dirs(p)
+        except BaseException:
+            for m in metas[attempted:]:
+                self._delete_part_dirs(m)
+            raise
+        if retain:
+            self.vacuum()
+        return out
 
     def _single_task(self, df: DataFrame, n_rows: int | None,
                      probe: bool = False) -> DataFrame:
@@ -2213,15 +2283,7 @@ class SparkMergeTree:
                 for p in take:
                     new_id = self.manifest.allocate_part_id()
                     new_path = os.path.join(self.base_path, f"part_{new_id}")
-                    os.makedirs(new_path)
-                    for fn in os.listdir(p.path):
-                        s = os.path.join(p.path, fn)
-                        if not os.path.isfile(s):
-                            continue
-                        try:
-                            os.link(s, os.path.join(new_path, fn))
-                        except OSError:
-                            shutil.copy2(s, os.path.join(new_path, fn))
+                    _link_files(p.path, new_path)
                     doc = asdict(p)
                     doc["part_id"] = new_id
                     doc["path"] = new_path
@@ -2280,19 +2342,10 @@ class SparkMergeTree:
                 if os.path.exists(shadow):
                     raise ValueError(f"backup {name!r} already exists")
                 os.makedirs(shadow)
-                n_files = 0
-                for p in parts:
-                    dst = os.path.join(shadow, os.path.basename(p.path))
-                    os.makedirs(dst)
-                    for fn in os.listdir(p.path):
-                        src = os.path.join(p.path, fn)
-                        if not os.path.isfile(src):
-                            continue
-                        try:
-                            os.link(src, os.path.join(dst, fn))
-                        except OSError:
-                            shutil.copy2(src, os.path.join(dst, fn))
-                        n_files += 1
+                n_files = sum(
+                    _link_files(p.path,
+                                os.path.join(shadow, os.path.basename(p.path)))
+                    for p in parts)
                 with open(os.path.join(shadow, "frozen_manifest.json"),
                           "w") as f:
                     json.dump({"parts": [asdict(p) for p in parts],
@@ -2342,15 +2395,7 @@ class SparkMergeTree:
                     new_id = self.manifest.allocate_part_id()
                     new_path = os.path.join(self.base_path,
                                             f"part_{new_id}")
-                    os.makedirs(new_path)
-                    for fn in os.listdir(frozen_dir):
-                        src = os.path.join(frozen_dir, fn)
-                        if not os.path.isfile(src):
-                            continue
-                        try:
-                            os.link(src, os.path.join(new_path, fn))
-                        except OSError:
-                            shutil.copy2(src, os.path.join(new_path, fn))
+                    _link_files(frozen_dir, new_path)
                     meta = PartMeta(**pd)
                     meta.part_id = new_id
                     meta.path = new_path
@@ -2852,82 +2897,23 @@ class SparkMergeTree:
     def _merge_groups(self, groups: list[list[PartMeta]],
                       transform=None) -> list[PartMeta]:
         """N independent merge jobs over DISJOINT part groups (FINAL's
-        per-partition merges, pending-transform rewrites, dedup passes).
-
-        Merged part ids are allocated upfront in group order and the
-        commits (atomic swap → lw-delete GC → save → reclaim) run
-        sequentially in that same order, so part ids and the manifest's
-        version history are bit-identical to merging the groups one at a
-        time — only the expensive read→collapse→write jobs overlap
-        (wall-clock ~max(job) instead of sum). A failure in ANY write
-        deletes every completed new part dir and commits nothing.
-        ``transform`` (optional) maps the collapsed frame before the
-        write — OPTIMIZE ... DEDUPLICATE's extra dedup step.
-        Caller holds _merge_lock."""
-        if not groups:
-            return []
-        with self._lock:
-            ids = [self.manifest.allocate_part_id() for _ in groups]
-
-        def write_one(pid: int, group: list[PartMeta]) -> PartMeta:
+        per-partition merges, pending-transform rewrites, dedup passes),
+        written concurrently and committed in group order
+        (_rewrite_parts). ``transform`` (optional) maps the collapsed
+        frame before the write — OPTIMIZE ... DEDUPLICATE's extra dedup
+        step. Caller holds _merge_lock."""
+        def merged(group: list[PartMeta]) -> tuple[DataFrame, int]:
             # _read_parts materializes evolved-column defaults into the
             # merged part (ClickHouse materializes ALTER defaults on
             # merge)
-            merged = self._collapse(self._single_task(
+            df = self._collapse(self._single_task(
                 self._read_parts(group), self._known_rows(group)))
             if transform is not None:
-                merged = transform(merged)
-            return self._write_part(pid, merged,
-                                    sum(p.row_count for p in group),
-                                    partition=group[0].partition)
+                df = transform(df)
+            return df, sum(p.row_count for p in group)
 
-        metas = self._run_part_writes(
-            [(lambda pid=pid, g=g: write_one(pid, g))
-             for pid, g in zip(ids, groups)])
-        retain = self.config.snapshot_retention > 0
-        attempted = 0
-        try:
-            for group, meta in zip(groups, metas):
-                attempted += 1
-                with self._lock:
-                    self._swap_or_remove([p.part_id for p in group], meta,
-                                         retain=retain)
-                    # the merged part materialized any lightweight-delete
-                    # masks (read path applied them); reclaim satisfied
-                    # entries
-                    self._gc_lw_deletes()
-                    self.manifest.save()
-                if retain:
-                    # snapshots keep the old parts readable; vacuum
-                    # reclaims what just fell out of the retention window
-                    self.vacuum()
-                else:
-                    # commit point passed — old parts unreachable
-                    for p in group:
-                        self._delete_part_dirs(p)
-        except BaseException:
-            # a commit failed mid-batch: parts whose commit was never
-            # ATTEMPTED are invisible to every reclaim path — delete
-            # their dirs before re-raising (the attempted-but-failed one
-            # is left alone: its in-memory manifest state is ambiguous,
-            # exactly the sequential loop's worst case)
-            for m in metas[attempted:]:
-                self._delete_part_dirs(m)
-            raise
-        return metas
-
-    def _swap_or_remove(self, old_part_ids: list[int], meta: PartMeta,
-                        retain: bool) -> None:
-        """Commit a part rewrite — unless the rewrite produced ZERO rows
-        (every row masked / cancelled / expired), in which case the old
-        parts are removed WITHOUT appending the empty part: a 0-row part
-        has no stats (None min/max) and would poison range pruning, TTL
-        part classification, and merge scoring. Caller holds _lock."""
-        if meta.row_count == 0:
-            self.manifest.remove(old_part_ids, retain=retain)
-            self._delete_part_dirs(meta)
-        else:
-            self.manifest.swap(old_part_ids, meta, retain=retain)
+        return self._rewrite_parts(
+            [(g, lambda g=g: merged(g)) for g in groups])
 
     def _parts_with_pending_transforms(
             self, include_masks: bool) -> list[PartMeta]:
@@ -3020,7 +3006,7 @@ class SparkMergeTree:
             # and single-part pending-transform rewrites touch disjoint
             # parts — each round batches every target into one concurrent
             # write pass (wall-clock ~max(partition) instead of
-            # sum(partitions)); ids/commits keep the sequential order.
+            # sum(partitions)).
             while True:
                 with self._merge_lock:
                     with self._lock:
@@ -3164,62 +3150,27 @@ class SparkMergeTree:
                     self._buffer_dfs = filtered
                 self._buffer_count -= removed_buf
 
-                # row_count == 0 guards legacy empty parts (pre-
-                # _swap_or_remove manifests): no rows ⇒ droppable, and
-                # their None min/max stats must not hit the comparisons
+                # row_count == 0 guards legacy empty parts (written
+                # before the zero-row rule of _rewrite_parts): no rows ⇒
+                # droppable, and their None min/max stats must not hit
+                # the comparisons
                 drop = [p for p in self.manifest.parts
                         if p.row_count == 0 or p.max_ts < before_ts]
                 rewrite = [p for p in self.manifest.parts
                            if p.row_count > 0
                            and p.min_ts < before_ts <= p.max_ts]
 
-            retain = self.config.snapshot_retention > 0
-            rows_removed = removed_buf + sum(p.row_count for p in drop)
-            # whole-part drops: metadata only
-            if drop:
-                with self._lock:
-                    self.manifest.remove([p.part_id for p in drop],
-                                         retain=retain)
-                    self.manifest.save()
-                if not retain:
-                    for p in drop:
-                        self._delete_part_dirs(p)
-
-            # straddling parts: one filtered rewrite each — independent
-            # per-part jobs, overlapped concurrently with ids/commits in
-            # part order (bit-identical manifest history)
-            if rewrite:
-                with self._lock:
-                    ids = [self.manifest.allocate_part_id()
-                           for _ in rewrite]
-                metas = self._run_part_writes([
-                    (lambda pid=pid, part=p: self._write_part(
-                        pid,
-                        self._read_parts([part]).filter(
-                            F.col(self._ts) >= F.lit(before_ts)),
-                        part.row_count, partition=part.partition))
-                    for pid, p in zip(ids, rewrite)])
-                attempted = 0
-                try:
-                    for p, meta in zip(rewrite, metas):
-                        attempted += 1
-                        rows_removed += p.row_count - meta.row_count
-                        with self._lock:
-                            self._swap_or_remove([p.part_id], meta,
-                                                 retain=retain)
-                            self.manifest.save()
-                        if not retain:
-                            self._delete_part_dirs(p)
-                except BaseException:
-                    for m in metas[attempted:]:
-                        self._delete_part_dirs(m)
-                    raise
-            if retain:
-                self.vacuum()
-            if drop or rewrite:
-                with self._lock:
-                    self._gc_lw_deletes()
-                    self.manifest.save()
+            # whole-part drops are one metadata-only commit; straddling
+            # parts get one filtered rewrite each
+            plan = [(drop, None)] if drop else []
+            plan += [([p], lambda p=p: (
+                self._read_parts([p]).filter(
+                    F.col(self._ts) >= F.lit(before_ts)), p.row_count))
+                for p in rewrite]
+            kept = sum(m.row_count for m in self._rewrite_parts(plan)
+                       if m is not None)
+            rows_removed = (removed_buf - kept
+                            + sum(p.row_count for p in drop + rewrite))
 
             return {
                 "parts_dropped": len(drop),
@@ -3270,12 +3221,10 @@ class SparkMergeTree:
                 for p in self.manifest.parts:
                     if p.min_ts < before_ts:
                         groups.setdefault(p.partition, []).append(p)
-            retain = self.config.snapshot_retention > 0
             types = {f.name: f.dataType for f in self.schema.fields}
             others = [f.name for f in self.schema.fields
                       if f.name not in (self._key, self._ts)
                       and f.name not in aggs]
-            replaced = rows_before = rows_after = 0
 
             def rollup_df(parts: list[PartMeta]) -> DataFrame:
                 # collapse FIRST (the merge primitive): unmerged parts can
@@ -3297,44 +3246,15 @@ class SparkMergeTree:
                 return young.unionByName(rolled).select(
                     [f.name for f in self.schema.fields])
 
-            # partition groups roll up independently — overlap the
-            # write jobs, commit in group order (ids/history identical
-            # to the sequential loop)
-            items = list(groups.items())
-            if items:
-                with self._lock:
-                    ids = [self.manifest.allocate_part_id() for _ in items]
-                metas = self._run_part_writes([
-                    (lambda pid=pid, partition=partition, parts=parts:
-                     self._write_part(pid, rollup_df(parts),
-                                      sum(p.row_count for p in parts),
-                                      partition=partition))
-                    for pid, (partition, parts) in zip(ids, items)])
-                attempted = 0
-                try:
-                    for (partition, parts), meta in zip(items, metas):
-                        attempted += 1
-                        with self._lock:
-                            self._swap_or_remove(
-                                [p.part_id for p in parts], meta,
-                                retain=retain)
-                            self._gc_lw_deletes()
-                            self.manifest.save()
-                        if not retain:
-                            for p in parts:
-                                self._delete_part_dirs(p)
-                        replaced += len(parts)
-                        rows_before += sum(p.row_count for p in parts)
-                        rows_after += meta.row_count
-                except BaseException:
-                    for m in metas[attempted:]:
-                        self._delete_part_dirs(m)
-                    raise
-            if retain and groups:
-                self.vacuum()
-            return {"parts_replaced": replaced,
-                    "rows_before": rows_before,
-                    "rows_after": rows_after}
+            # partition groups roll up independently
+            olds = list(groups.values())
+            metas = self._rewrite_parts([
+                (parts, lambda parts=parts: (
+                    rollup_df(parts), sum(p.row_count for p in parts)))
+                for parts in olds])
+            return {"parts_replaced": sum(len(g) for g in olds),
+                    "rows_before": sum(p.row_count for g in olds for p in g),
+                    "rows_after": sum(m.row_count for m in metas)}
 
     # ------------------------------------------------------ schema evolution
 
@@ -3690,8 +3610,7 @@ class SparkMergeTree:
             # rewriting one lagging part never changes whether ANOTHER
             # part lags, so the frontier is fixed upfront and the
             # independent single-part rewrites overlap as one concurrent
-            # pass (ids/commits in manifest-part order — identical to
-            # the one-at-a-time loop)
+            # pass
             self._merge_groups([[p] for p in targets])
         return {"parts_rewritten": len(targets),
                 "rows_rewritten": sum(p.row_count for p in targets)}
@@ -4037,10 +3956,9 @@ class SparkMergeTree:
             self.flush()
             with self._lock:
                 parts = list(self.manifest.parts)
-            retain = self.config.snapshot_retention > 0
             added = self.manifest.table_meta.get("added_columns", [])
             defaults = {a["name"]: a for a in added}
-            meta_expired = rewritten = cells = 0
+            meta_expired = cells = 0
             dirty = False
             todo: list[tuple] = []  # (part, full, straddle) rewrites
             for p in parts:
@@ -4058,65 +3976,41 @@ class SparkMergeTree:
                     cells += p.row_count * len(full)
                     meta_expired += 1
                     dirty = True
-            if todo:
-                # straddling parts rewrite independently: overlap the
-                # cell-count aggregates, then the rewrites; commit in
-                # part order (ids/history identical to sequential)
-                from clickhouse_mergetree_spark.parallel import (
-                    run_concurrently,
-                )
+            # straddling parts rewrite independently: overlap the
+            # cell-count aggregates, then the rewrites
+            from clickhouse_mergetree_spark.parallel import run_concurrently
 
-                srcs = [self._read_parts([p]) for p, _f, _s in todo]
-                counts = run_concurrently([
-                    (lambda s=s, straddle=straddle: s.agg(*[
-                        F.sum(F.when(F.col(self._ts) < F.lit(cut), 1)
-                              .otherwise(0)).alias(c)
-                        for c, cut in straddle.items()]).first())
-                    for s, (_p, _f, straddle) in zip(srcs, todo)],
-                    max_workers=min(8, len(todo)))
-                with self._lock:
-                    ids = [self.manifest.allocate_part_id() for _ in todo]
+            srcs = [self._read_parts([p]) for p, _f, _s in todo]
+            counts = run_concurrently([
+                (lambda s=s, straddle=straddle: s.agg(*[
+                    F.sum(F.when(F.col(self._ts) < F.lit(cut), 1)
+                          .otherwise(0)).alias(c)
+                    for c, cut in straddle.items()]).first())
+                for s, (_p, _f, straddle) in zip(srcs, todo)],
+                max_workers=min(8, len(todo)))
+            for (p, full, straddle), row in zip(todo, counts):
+                cells += sum(row[c] or 0 for c in straddle)
+                cells += p.row_count * len(full)
 
-                def rewrite_df(src, full, straddle) -> DataFrame:
-                    new_df = src.withColumns({
-                        c: F.when(F.col(self._ts) < F.lit(cut),
-                                  self._default_col(defaults.get(c)))
-                        .otherwise(F.col(c))
-                        .cast(self.schema[c].dataType)
-                        for c, cut in straddle.items()
-                    })
-                    if full:
-                        new_df = new_df.withColumns({
-                            c: self._default_col(defaults.get(c)).cast(
-                                self.schema[c].dataType)
-                            for c in full})
-                    return new_df
+            def rewrite_df(src, full, straddle) -> DataFrame:
+                new_df = src.withColumns({
+                    c: F.when(F.col(self._ts) < F.lit(cut),
+                              self._default_col(defaults.get(c)))
+                    .otherwise(F.col(c))
+                    .cast(self.schema[c].dataType)
+                    for c, cut in straddle.items()
+                })
+                if full:
+                    new_df = new_df.withColumns({
+                        c: self._default_col(defaults.get(c)).cast(
+                            self.schema[c].dataType)
+                        for c in full})
+                return new_df
 
-                metas = self._run_part_writes([
-                    (lambda pid=pid, src=src, part=p, full=full,
-                     straddle=straddle: self._write_part(
-                         pid, rewrite_df(src, full, straddle),
-                         part.row_count, partition=part.partition))
-                    for pid, src, (p, full, straddle)
-                    in zip(ids, srcs, todo)])
-                attempted = 0
-                try:
-                    for (p, full, straddle), row, meta in zip(
-                            todo, counts, metas):
-                        attempted += 1
-                        cells += sum(row[c] or 0 for c in straddle)
-                        cells += p.row_count * len(full)
-                        with self._lock:
-                            self._swap_or_remove([p.part_id], meta,
-                                                 retain=retain)
-                            self.manifest.save()
-                        if not retain:
-                            self._delete_part_dirs(p)
-                        rewritten += 1
-                except BaseException:
-                    for m in metas[attempted:]:
-                        self._delete_part_dirs(m)
-                    raise
+            self._rewrite_parts([
+                ([p], lambda src=src, p=p, full=full, straddle=straddle: (
+                    rewrite_df(src, full, straddle), p.row_count))
+                for src, (p, full, straddle) in zip(srcs, todo)])
             # tombstoned snapshot parts: mark fully-expired columns so
             # time-travel reads observe post-TTL values instead of leaking
             # the expired data (straddling tombstoned parts are exempt —
@@ -4135,10 +4029,8 @@ class SparkMergeTree:
             if dirty:
                 with self._lock:
                     self.manifest.save()
-            if retain:
-                self.vacuum()
             return {"parts_meta_expired": meta_expired,
-                    "parts_rewritten": rewritten,
+                    "parts_rewritten": len(todo),
                     "cells_cleared": cells}
 
     # -------------------------------------------------------------- mutations
@@ -4206,8 +4098,6 @@ class SparkMergeTree:
                     cands = [p for p in cands if p.may_match_range(c, lo, hi)]
                 if partition is not None:
                     cands = [p for p in cands if p.partition == partition]
-            retain = self.config.snapshot_retention > 0
-            parts_rewritten = 0
             rows_affected = 0
             # Commit the mutation intent BEFORE touching any part: if the
             # process dies mid-loop, reopen sees the record and reports an
@@ -4222,85 +4112,49 @@ class SparkMergeTree:
                 }
                 self.manifest.save()
 
-            def _done(part_id: int) -> None:
-                # caller holds self._lock and saves right after
+            def _done(old: list[PartMeta]) -> None:
+                # caller holds self._lock (and saves right after, when
+                # this runs as _rewrite_parts' on_commit)
                 am = self.manifest.table_meta.get("active_mutation")
-                if am and part_id in am["pending_part_ids"]:
-                    am["pending_part_ids"].remove(part_id)
+                for p in old:
+                    if am and p.part_id in am["pending_part_ids"]:
+                        am["pending_part_ids"].remove(p.part_id)
 
             # ClickHouse runs per-part mutation tasks from a background
             # pool; here the match-count probe is ONE job over every
             # candidate part (_match_counts — one scheduler round-trip
             # instead of a wave of N count() jobs), then the
             # independent per-part rewrites overlap as concurrent Spark
-            # jobs with ids allocated and commits applied in candidate
-            # order — part ids and manifest history are bit-identical to
-            # the sequential loop. All writes land before the first
+            # jobs (_rewrite_parts). All writes land before the first
             # commit, so a failure mid-writes leaves the table untouched
             # (new dirs deleted, intent record intact); a crash
             # mid-commits still leaves the documented
             # applied-to-a-prefix state.
             n_matches = self._match_counts(cands, hit)
-            plan: list[tuple] = []  # (part, kind, n_match, new_id|None)
-            writes: list = []       # write thunks, one per "rewrite" row
+            plan: list[tuple] = []
             for p, n_match in zip(cands, n_matches):
                 if n_match == 0:
-                    plan.append((p, "clean", 0, None))
+                    # no manifest save: the stale pending entry only
+                    # makes a crash report conservative (part listed
+                    # but clean)
+                    with self._lock:
+                        _done([p])
                     continue
                 rows_affected += n_match
-                parts_rewritten += 1
                 if assignments is None and n_match == p.row_count:
                     # whole part deleted: metadata-only, no write job
-                    plan.append((p, "drop", n_match, None))
+                    plan.append(([p], None))
                     continue
                 src = self._read_parts([p])
                 if assignments is None:
-                    new_df = src.filter(~hit)
-                    n_est = max(1, p.row_count - n_match)
+                    new = (src.filter(~hit), max(1, p.row_count - n_match))
                 else:
-                    new_df = src.withColumns({
+                    new = (src.withColumns({
                         c: F.when(hit, e).otherwise(F.col(c)).cast(
                             self.schema[c].dataType)
-                        for c, e in assignments.items()})
-                    n_est = p.row_count
-                with self._lock:
-                    new_id = self.manifest.allocate_part_id()
-                plan.append((p, "rewrite", n_match, new_id))
-                writes.append(
-                    lambda pid=new_id, df=new_df, ne=n_est, part=p:
-                    self._write_part(pid, df, ne, partition=part.partition))
-            metas = self._run_part_writes(writes)
-            used = 0
-            try:
-                for p, kind, _n, _pid in plan:
-                    if kind == "clean":
-                        # no manifest save: the stale pending entry only
-                        # makes a crash report conservative (part listed
-                        # but clean)
-                        with self._lock:
-                            _done(p.part_id)
-                        continue
-                    if kind == "drop":
-                        with self._lock:
-                            self.manifest.remove([p.part_id],
-                                                 retain=retain)
-                            _done(p.part_id)
-                            self.manifest.save()
-                    else:
-                        used += 1
-                        with self._lock:
-                            self._swap_or_remove([p.part_id],
-                                                 metas[used - 1],
-                                                 retain=retain)
-                            _done(p.part_id)
-                            self.manifest.save()
-                    if not retain:
-                        self._delete_part_dirs(p)
-            except BaseException:
-                # never-attempted rewrites would leak invisibly
-                for m in metas[used:]:
-                    self._delete_part_dirs(m)
-                raise
+                        for c, e in assignments.items()}), p.row_count)
+                plan.append(([p], lambda new=new: new))
+            self._rewrite_parts(plan, on_commit=_done)
             with self._lock:
                 self.manifest.table_meta.pop("active_mutation", None)
                 try:
@@ -4310,14 +4164,12 @@ class SparkMergeTree:
                 self._log_mutation(
                     kind="delete" if assignments is None else "update",
                     command=cmd, parts_scanned=len(cands),
-                    parts_rewritten=parts_rewritten,
+                    parts_rewritten=len(plan),
                     rows_affected=rows_affected)
                 self._gc_lw_deletes()  # rewrites materialized masks
                 self.manifest.save()
-            if retain:
-                self.vacuum()
             return {"parts_scanned": len(cands),
-                    "parts_rewritten": parts_rewritten,
+                    "parts_rewritten": len(plan),
                     "rows_affected": rows_affected}
 
     def lightweight_delete(self, pred_sql: str) -> dict:
@@ -4398,78 +4250,34 @@ class SparkMergeTree:
                 masked_ids = {pid for e in lw for pid in e["parts"]}
                 cands = [p for p in self.manifest.parts
                          if p.part_id in masked_ids]
-            retain = self.config.snapshot_retention > 0
-            rewritten = clean = rows_removed = 0
             # same shape as mutate(): ONE kept-count job over every
             # masked part (_match_counts — the masks are already applied
-            # inside _read_parts), then concurrent rewrites, with
-            # ids/commits in candidate order (bit-identical manifest
-            # history)
+            # inside _read_parts), then concurrent rewrites
             kepts = self._match_counts(cands)
-            plan: list[tuple] = []
-            writes: list = []
-            for p, n_kept in zip(cands, kepts):
-                if n_kept == p.row_count:
-                    plan.append((p, "clean", n_kept))
-                    continue
-                rewritten += 1
-                rows_removed += p.row_count - n_kept
-                if n_kept == 0:
-                    plan.append((p, "drop", n_kept))
-                    continue
+            clean = [p for p, n in zip(cands, kepts) if n == p.row_count]
+            if clean:
+                # no mask matches these parts' rows: filters are no-ops,
+                # so dropping them from the entries changes nothing (for
+                # current reads OR snapshots) and unblocks GC
+                clean_ids = {p.part_id for p in clean}
                 with self._lock:
-                    new_id = self.manifest.allocate_part_id()
-                plan.append((p, "rewrite", n_kept))
-                writes.append(lambda pid=new_id, nk=n_kept, part=p:
-                              self._write_part(pid, self._read_parts([part]),
-                                               nk, partition=part.partition))
-            metas = self._run_part_writes(writes)
-            used = 0
-            try:
-                for p, kind, _nk in plan:
-                    if kind == "clean":
-                        # no mask matches this part's rows: filters are
-                        # no-ops, so dropping the part from the entries
-                        # changes nothing (for current reads OR
-                        # snapshots) and unblocks GC
-                        clean += 1
-                        with self._lock:
-                            for e in self._lw_entries():
-                                if p.part_id in e["parts"]:
-                                    e["parts"].remove(p.part_id)
-                            self._gc_lw_deletes()
-                            self.manifest.save()
-                        continue
-                    if kind == "drop":
-                        with self._lock:
-                            self.manifest.remove([p.part_id],
-                                                 retain=retain)
-                            self._gc_lw_deletes()
-                            self.manifest.save()
-                    else:
-                        used += 1
-                        with self._lock:
-                            self.manifest.swap([p.part_id],
-                                               metas[used - 1],
-                                               retain=retain)
-                            self._gc_lw_deletes()
-                            self.manifest.save()
-                    if not retain:
-                        self._delete_part_dirs(p)
-            except BaseException:
-                # never-attempted rewrites would leak invisibly
-                for m in metas[used:]:
-                    self._delete_part_dirs(m)
-                raise
+                    for e in self._lw_entries():
+                        e["parts"] = [i for i in e["parts"]
+                                      if i not in clean_ids]
+                    self._gc_lw_deletes()
+                    self.manifest.save()
+            plan = [([p], None if n == 0 else
+                     (lambda p=p, n=n: (self._read_parts([p]), n)))
+                    for p, n in zip(cands, kepts) if n != p.row_count]
+            rows_removed = sum(p.row_count - n for p, n in zip(cands, kepts))
+            self._rewrite_parts(plan)
             with self._lock:
                 self._log_mutation(
                     kind="apply_mask", command=None,
-                    parts_scanned=len(cands), parts_rewritten=rewritten,
+                    parts_scanned=len(cands), parts_rewritten=len(plan),
                     rows_affected=rows_removed)
                 self.manifest.save()
-            if retain:
-                self.vacuum()
-            return {"parts_rewritten": rewritten, "parts_clean": clean,
+            return {"parts_rewritten": len(plan), "parts_clean": len(clean),
                     "rows_removed": rows_removed}
 
     def _gc_lw_deletes(self) -> None:
@@ -4840,3 +4648,22 @@ def _dir_size(path: str) -> int:
         for name in files:
             total += os.path.getsize(os.path.join(root, name))
     return total
+
+
+def _link_files(src_dir: str, dst_dir: str) -> int:
+    """Create ``dst_dir`` holding every regular file of ``src_dir``,
+    hardlinked (immutable parts make links safe), or copied where the
+    filesystem refuses the link (e.g. across devices). Returns the number
+    of files."""
+    os.makedirs(dst_dir)
+    n = 0
+    for fn in os.listdir(src_dir):
+        src = os.path.join(src_dir, fn)
+        if not os.path.isfile(src):
+            continue
+        try:
+            os.link(src, os.path.join(dst_dir, fn))
+        except OSError:
+            shutil.copy2(src, os.path.join(dst_dir, fn))
+        n += 1
+    return n

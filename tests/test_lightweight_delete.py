@@ -247,3 +247,26 @@ def test_optimize_final_respects_partitions(spark, tmp_path):
         # FINAL never crosses partitions: one part per partition value
         assert sorted(p.partition for p in t.manifest.parts) == ["b0", "b1"]
         assert t.query_all().count() == 60
+
+
+def test_column_ttl_rewrite_collects_satisfied_entry(spark, base_path):
+    # expire_columns reads straddling parts through the masked path, so
+    # its rewrites materialize the delete like any other rewrite: once
+    # every masked part is rewritten the entry is collected, and the
+    # mutation is reported done (nothing left for KILL to cancel)
+    with SparkMergeTree(spark, base_path, schema=SCHEMA,
+                        config=MergeTreeConfig(**CFG)) as t:
+        for lo in (0, 50):
+            t.insert_rows([(lo + k, 1000 + k, float(k)) for k in range(50)])
+            t.flush()
+        t.lightweight_delete("key % 2 = 0")
+        r = t.expire_columns({"value": 1025})
+        assert r["parts_rewritten"] == 2
+        assert not t.manifest.table_meta.get("lw_deletes")
+        assert sum(p.row_count for p in t.manifest.parts) == 50
+        (m,) = t.system_mutations().collect()
+        assert m["kind"] == "lw_delete" and m["is_done"]
+        with pytest.raises(ValueError, match="already done"):
+            t.kill_mutation(m["mutation_id"])
+        assert t.query_all().count() == 50
+        assert t.query_all().filter(F.col("value").isNull()).count() == 24

@@ -1,10 +1,18 @@
-"""Regenerate PLANS.md — formatted physical plans for the headline queries.
+"""Dump explain("formatted") physical plans of the declared queries.
 
 Run: python tools/dump_plans.py [sf_dir]   (default /root/testdata/sf0.01)
 
-Each section: the query's docstring (which carries its scale rationale)
-followed by `explain("formatted")` output, so plan shape claims in the
+With no query names it regenerates PLANS.md for the headline queries
+below. Each section: the query's docstring (which carries its scale
+rationale) followed by its explain output, so plan shape claims in the
 docstrings are checkable against the actual Catalyst output.
+
+With ``--out OUT_DIR --suffix S q_name [...]`` it writes
+OUT_DIR/<q_name>_<S>.txt per named query instead — plan evidence files
+such as plans/rNN/<query>_before.txt / _after.txt. The plan captured is
+the returned DataFrame's physical plan (for engine-lifecycle queries that
+is the READ path; the fixture build is job-level work that a single plan
+cannot show).
 """
 
 from __future__ import annotations
@@ -81,14 +89,49 @@ HEADLINE = [
 ]
 
 
+def explain(df) -> str:
+    """``df.explain("formatted")`` output as text."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().rstrip()
+
+
+def _pop_option(flag: str) -> str | None:
+    """Remove ``flag VALUE`` from sys.argv and return VALUE (None if
+    absent), leaving the optional sf_dir as sys.argv[1]."""
+    if flag not in sys.argv:
+        return None
+    i = sys.argv.index(flag)
+    value = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
+    return value
+
+
 def main() -> None:
+    out_dir, suffix = _pop_option("--out"), _pop_option("--suffix")
+    names = [a for a in sys.argv[1:] if a.startswith("q_")]
+    sys.argv[1:] = [a for a in sys.argv[1:] if a not in names]
+    if (out_dir is None) != (suffix is None) or (names and out_dir is None):
+        sys.exit(__doc__)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
     from clickhouse_mergetree_spark.registry import all_queries
     from clickhouse_mergetree_spark.session import get_spark
 
-    spark = get_spark("plans", cpus=8)
     qs = all_queries()
+    if out_dir is not None:
+        spark = get_spark("dump-query-plans")
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names:
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write(explain(qs[name].fn(spark, sf_dir)) + "\n")
+            print(f"wrote {path}", file=sys.stderr, flush=True)
+        spark.stop()
+        return
+    spark = get_spark("plans", cpus=8)
     out = [
         "# PLANS — physical plans of the headline queries",
         "",
@@ -101,13 +144,8 @@ def main() -> None:
     ]
     for name in HEADLINE:
         q = qs[name]
-        df = q.fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", q.doc, "", "```", buf.getvalue().rstrip(),
-                "```", ""]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out += [f"## {name}", "", q.doc, "", "```",
+                explain(q.fn(spark, sf_dir)), "```", ""]
     with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE)} queries)")
