@@ -761,6 +761,32 @@ class SparkMergeTree:
             out = out.unionByName(d)
         return out
 
+    def _filter_buffer(self, keep_row, keep_col) -> int:
+        """Drop buffered rows in place: driver-side tuples failing
+        ``keep_row(tuple)`` and rows of buffered DataFrame blocks failing
+        the Column ``keep_col``. Keeps ``_buffer_count`` exact — a
+        defer_count block that slipped past the caller's pre-lock
+        resolve pass is counted here first. Returns the rows removed.
+        Caller holds _lock."""
+        removed = 0
+        if self._buffer_rows:
+            kept = [r for r in self._buffer_rows if keep_row(r)]
+            removed += len(self._buffer_rows) - len(kept)
+            self._buffer_rows = kept
+        filtered = []
+        for d, n in self._buffer_dfs:
+            if n is None:
+                n = d.count()
+                self._buffer_count += n
+            fd = d.filter(keep_col)
+            fn = fd.count()
+            removed += n - fn
+            if fn:
+                filtered.append((fd, fn))
+        self._buffer_dfs = filtered
+        self._buffer_count -= removed
+        return removed
+
     def flush(self) -> int | None:
         """R16: drain buffer → one sorted parquet part + manifest append
         (reference src/merge_tree.cpp:69-91, src/part.cpp:39-65); with
@@ -1308,7 +1334,7 @@ class SparkMergeTree:
 
     def _ngram_col(self, col: str):
         """Distinct lowercased character n-grams of a string column —
-        the contract shared by the index build and may_contain_substring.
+        the contract shared by the index build and LIKE pruning (_prune).
         Strings shorter than n contribute nothing (and can't match any
         indexable needle anyway)."""
         n = self.config.ngram_n
@@ -1478,11 +1504,11 @@ class SparkMergeTree:
         ClickHouse's CHECK-at-INSERT contract. Persisted in the manifest,
         replayed on reopen, analyzed against the schema at ADD.
 
-        Caveats (documented, matching ClickHouse's own block semantics):
-        the rejected buffered batch is discarded — the caller fixes and
-        re-inserts; on a partitioned table each partition's part commits
-        independently, so a violation in a later partition split leaves
-        earlier splits of the same flush committed."""
+        The rejected buffered batch is discarded — the caller fixes and
+        re-inserts. On a partitioned table the whole flush is one
+        all-or-nothing commit (flush's two-stage commit): a violation in
+        any partition split leaves the manifest untouched and deletes
+        every sibling split's files."""
         self._empty_df().filter(F.expr(expr_sql)).schema
         with self._lock:
             recs = self.manifest.table_meta.setdefault("constraints", [])
@@ -1602,8 +1628,8 @@ class SparkMergeTree:
         """The parts a point lookup of ``key`` would actually scan, after
         min/max range pruning and the bloom check (introspection/tests)."""
         with self._lock:
-            return [p for p in self.manifest.prune(key, key)
-                    if p.may_contain_key(key)]
+            return self._prune(self.manifest.parts, key_range=(key, key),
+                               point_key=key)
 
     def query_all(self) -> DataFrame:
         return self._assemble(None)
@@ -1621,8 +1647,7 @@ class SparkMergeTree:
     def parts_for_col_range(self, col: str, lo, hi) -> list[PartMeta]:
         """The parts query_col_range would scan (introspection/tests)."""
         with self._lock:
-            return [p for p in self.manifest.parts
-                    if p.may_match_range(col, lo, hi)]
+            return self._prune(self.manifest.parts, col_range=(col, lo, hi))
 
     SAMPLE_BUCKETS = 256
 
@@ -1685,32 +1710,13 @@ class SparkMergeTree:
         types, tenant tiers — touch only the parts that hold the value
         instead of every part covering the key range."""
         values = list(values)
-        with self._lock:
-            pruned = [p for p in self.manifest.parts
-                      if p.may_match_values(col, values)]
-            n_total = len(self.manifest.parts)
-            buf = self._buffer_df()
-        self._log_query("in_scan", n_total, len(pruned))
-        pred = F.col(col).isin(values)
-        sources = []
-        df = self._read_parts(pruned)
-        if df is not None:
-            sources.append(df)
-        if buf is not None:
-            sources.append(buf)
-        if not sources:
-            return self._empty_df()
-        out = sources[0]
-        for s in sources[1:]:
-            out = out.unionByName(s)
-        return self._apply_policies(self._dedup_sort(out.filter(pred)))
+        return self._assemble(F.col(col).isin(values), values=(col, values))
 
     def parts_for_in(self, col: str, values) -> list[PartMeta]:
         """The parts query_in would scan (introspection/tests)."""
-        values = list(values)
         with self._lock:
-            return [p for p in self.manifest.parts
-                    if p.may_match_values(col, values)]
+            return self._prune(self.manifest.parts,
+                               values=(col, list(values)))
 
     def query_token(self, col: str, token: str) -> DataFrame:
         """Token-containment read (ClickHouse ``hasToken(col, t)`` +
@@ -1720,34 +1726,15 @@ class SparkMergeTree:
         At 100 TB this turns needle-in-haystack text search — error IDs,
         SKUs, usernames — from a full scan into touching only the parts
         that can match."""
-        self._drain_index_builds()  # land pending blooms so pruning engages
-        tok = token.lower()
-        with self._lock:
-            pruned = [p for p in self.manifest.parts
-                      if p.may_contain_token(col, tok)]
-            n_total = len(self.manifest.parts)
-            buf = self._buffer_df()
-        self._log_query("token_search", n_total, len(pruned))
-        pred = F.array_contains(self._token_col(col), tok)
-        sources = []
-        df = self._read_parts(pruned)
-        if df is not None:
-            sources.append(df)
-        if buf is not None:
-            sources.append(buf)
-        if not sources:
-            return self._empty_df()
-        out = sources[0]
-        for s in sources[1:]:
-            out = out.unionByName(s)
-        return self._apply_policies(self._dedup_sort(out.filter(pred)))
+        return self._assemble(
+            F.array_contains(self._token_col(col), token.lower()),
+            token=(col, token))
 
     def parts_for_token(self, col: str, token: str) -> list[PartMeta]:
         """The parts query_token would scan (introspection/tests)."""
         self._drain_index_builds()
         with self._lock:
-            return [p for p in self.manifest.parts
-                    if p.may_contain_token(col, token.lower())]
+            return self._prune(self.manifest.parts, token=(col, token))
 
     def query_like(self, col: str, needle: str) -> DataFrame:
         """Substring-containment read (ClickHouse ``LIKE '%needle%'`` /
@@ -1760,34 +1747,15 @@ class SparkMergeTree:
         free-text substring search — stack traces, request ids, SKUs
         embedded in payloads — from a full scan into touching only the
         parts that can match."""
-        self._drain_index_builds()  # land pending blooms so pruning engages
-        low = needle.lower()
-        with self._lock:
-            pruned = [p for p in self.manifest.parts
-                      if p.may_contain_substring(col, low)]
-            n_total = len(self.manifest.parts)
-            buf = self._buffer_df()
-        self._log_query("like_search", n_total, len(pruned))
-        pred = F.instr(F.lower(F.col(col)), low) > 0
-        sources = []
-        df = self._read_parts(pruned)
-        if df is not None:
-            sources.append(df)
-        if buf is not None:
-            sources.append(buf)
-        if not sources:
-            return self._empty_df()
-        out = sources[0]
-        for s in sources[1:]:
-            out = out.unionByName(s)
-        return self._apply_policies(self._dedup_sort(out.filter(pred)))
+        return self._assemble(
+            F.instr(F.lower(F.col(col)), needle.lower()) > 0,
+            substring=(col, needle))
 
     def parts_for_like(self, col: str, needle: str) -> list[PartMeta]:
         """The parts query_like would scan (introspection/tests)."""
         self._drain_index_builds()
         with self._lock:
-            return [p for p in self.manifest.parts
-                    if p.may_contain_substring(col, needle.lower())]
+            return self._prune(self.manifest.parts, substring=(col, needle))
 
     # ------------------------------------------------------------ projections
 
@@ -2046,9 +2014,9 @@ class SparkMergeTree:
                           key=str)
 
     def parts_in_partition(self, value) -> list["PartMeta"]:
+        """The parts query_partition would scan (introspection/tests)."""
         with self._lock:
-            return [p for p in self.manifest.parts
-                    if p.partition == str(value)]
+            return self._prune(self.manifest.parts, partition=str(value))
 
     def query_partition(self, value) -> DataFrame:
         """Partition-scoped read: only parts tagged with ``value`` are
@@ -2079,36 +2047,12 @@ class SparkMergeTree:
                 victims = [p for p in self.manifest.parts
                            if p.partition == str(value)]
                 removed = sum(p.row_count for p in victims)
-                # buffer: drop the partition's rows in place
-                if pc is not None and self._buffer_rows:
+                if pc is not None:
+                    # buffer: drop the partition's rows in place
                     ix = [f.name for f in self.schema.fields].index(pc)
-                    kept = [r for r in self._buffer_rows
-                            if str(r[ix]) != str(value)]
-                    removed += len(self._buffer_rows) - len(kept)
-                    self._buffer_count -= (len(self._buffer_rows)
-                                           - len(kept))
-                    self._buffer_rows = kept
-                if pc is not None and self._buffer_dfs:
-                    filtered = []
-                    for d, n in self._buffer_dfs:
-                        uncounted = n is None
-                        if uncounted:
-                            # deferred block slipped in between the
-                            # pre-lock resolve pass and this lock: count
-                            # it here; it never contributed to
-                            # _buffer_count, so only the kept remainder
-                            # is added back below
-                            n = d.count()
-                        fd = d.filter(~F.col(pc).eqNullSafe(value))
-                        fn = fd.count()
-                        removed += n - fn
-                        if uncounted:
-                            self._buffer_count += fn
-                        else:
-                            self._buffer_count -= n - fn
-                        if fn:
-                            filtered.append((fd, fn))
-                    self._buffer_dfs = filtered
+                    removed += self._filter_buffer(
+                        lambda r: str(r[ix]) != str(value),
+                        ~F.col(pc).eqNullSafe(value))
                 retain = self.config.snapshot_retention > 0
                 if victims:
                     self.manifest.remove([p.part_id for p in victims],
@@ -2535,26 +2479,77 @@ class SparkMergeTree:
             out = out.unionByName(d)
         return out
 
+    @staticmethod
+    def _prune(parts: list[PartMeta], *, key_range=None, point_key=None,
+               partition=None, col_range=None, values=None, token=None,
+               substring=None) -> list[PartMeta]:
+        """The one part-skipping decision shared by every read, its
+        ``parts_for_*`` twin, mutation probes and EXPLAIN ESTIMATE: the
+        parts of ``parts`` that may hold a row matching every given hint.
+        Each check is pure metadata and never has a false negative, so
+        the caller still applies the exact predicate to surviving rows.
+
+        - ``key_range`` (lo, hi): manifest min/max (reference
+          src/part.cpp:201-203); parts without stats always survive.
+        - ``point_key``: the per-part key bloom.
+        - ``partition``: the part's partition tag, compared as
+          ``str(value)`` — the form flush writes.
+        - ``col_range`` (col, lo, hi): a minmax skip index.
+        - ``values`` (col, [v, ...]): a set(N) skip index.
+        - ``token`` (col, token) / ``substring`` (col, needle): the token
+          and n-gram blooms, case-insensitive.
+
+        Pure; the caller holds _lock."""
+        out = list(parts)
+        if key_range is not None:
+            lo, hi = key_range
+            out = [p for p in out
+                   if p.min_key is None or p.overlaps_range(lo, hi)]
+        if point_key is not None:
+            out = [p for p in out if p.may_contain_key(point_key)]
+        if partition is not None:
+            out = [p for p in out if p.partition == str(partition)]
+        if col_range is not None:
+            out = [p for p in out if p.may_match_range(*col_range)]
+        if values is not None:
+            c, vs = values
+            out = [p for p in out if p.may_match_values(c, vs)]
+        if token is not None:
+            c, tok = token
+            out = [p for p in out if p.may_contain_token(c, tok.lower())]
+        if substring is not None:
+            c, needle = substring
+            out = [p for p in out
+                   if p.may_contain_substring(c, needle.lower())]
+        return out
+
     def _assemble(self, pred, key_range=None, point_key=None,
-                  partition=None, col_range=None) -> DataFrame:
-        if self.config.projections:
-            # land pending write-path projection builds so sort-projection
+                  partition=None, col_range=None, values=None, token=None,
+                  substring=None) -> DataFrame:
+        """The one logical read: the parts ``_prune`` keeps for the given
+        hints (sort-projection routing for a ``col_range`` hint) ∪ the
+        buffer, filtered by ``pred``, through the one-task gate, (key, ts)
+        dedup/sort and row policies; logs one ``system.query_log`` row."""
+        if token is not None or substring is not None \
+                or self.config.projections:
+            # land pending blooms so skip-index pruning engages, and
+            # pending write-path projection builds so sort-projection
             # routing sees them (a pending part would merely fall back to
             # its raw rows — same result, but the routed plan is the
             # tested/plan-gated shape)
             self._drain_index_builds()
         proj_paths: list[str] = []
         with self._lock:
-            if key_range is None:
-                pruned = list(self.manifest.parts)
-            else:
-                # R8: manifest min/max pruning — skipped parts are never
-                # listed, opened, or scheduled (reference src/part.cpp:201-203)
-                pruned = self.manifest.prune(*key_range)
-            if col_range is not None:
-                # minmax skip index on a non-key column
-                c, lo, hi = col_range
-                pruned = [p for p in pruned if p.may_match_range(c, lo, hi)]
+            pruned = self._prune(
+                self.manifest.parts, key_range=key_range,
+                point_key=point_key, partition=partition,
+                col_range=col_range, values=values, token=token,
+                substring=substring)
+            sspec = next(
+                (s for s in self.config.projections
+                 if col_range is not None and s.order_by
+                 and s.order_by[0] == col_range[0]), None)
+            if sspec is not None:
                 # sort-projection routing (ClickHouse's secondary-index
                 # planner): a part whose physical layout matches the
                 # current schema and carries a sort projection led by the
@@ -2564,29 +2559,16 @@ class SparkMergeTree:
                 # Parts lagging the schema or under a live delete mask
                 # fall back to the evolved/masked primary read path;
                 # correctness never depends on materialization state.
-                sspec = next(
-                    (s for s in self.config.projections
-                     if s.order_by and s.order_by[0] == c), None)
-                if sspec is not None:
-                    dirty = {p.part_id for p in
-                             self._parts_with_pending_transforms(
-                                 include_masks=True)}
-                    served = [p for p in pruned
-                              if p.proj_paths
-                              and sspec.name in p.proj_paths
-                              and p.part_id not in dirty]
-                    proj_paths = [p.proj_paths[sspec.name] for p in served]
-                    served_ids = {p.part_id for p in served}
-                    pruned = [p for p in pruned
-                              if p.part_id not in served_ids]
-            if point_key is not None:
-                # bloom skipping index: drop range-covering parts that
-                # provably lack the key (no false negatives by construction)
-                pruned = [p for p in pruned if p.may_contain_key(point_key)]
-            if partition is not None:
-                # partition pruning: a part's rows all share its partition
-                # value, so non-matching parts are skipped entirely
-                pruned = [p for p in pruned if p.partition == partition]
+                dirty = {p.part_id for p in
+                         self._parts_with_pending_transforms(
+                             include_masks=True)}
+                served = [p for p in pruned
+                          if p.proj_paths
+                          and sspec.name in p.proj_paths
+                          and p.part_id not in dirty]
+                proj_paths = [p.proj_paths[sspec.name] for p in served]
+                served_ids = {p.part_id for p in served}
+                pruned = [p for p in pruned if p.part_id not in served_ids]
             n_total = len(self.manifest.parts)
             buf = self._buffer_df()
             # rows proven by the manifest and the buffer; unknown with
@@ -2601,6 +2583,9 @@ class SparkMergeTree:
             "point_lookup" if point_key is not None else
             "partition_scan" if partition is not None else
             "col_range_scan" if col_range is not None else
+            "in_scan" if values is not None else
+            "token_search" if token is not None else
+            "like_search" if substring is not None else
             "range_scan" if key_range is not None else "full_scan",
             n_total, len(pruned) + len(proj_paths))
         sources = []
@@ -3127,28 +3112,10 @@ class SparkMergeTree:
         with self._merge_lock:
             with self._lock:
                 # buffer: drop expired rows driver-side / lazily
-                removed_buf = 0
-                if self._buffer_rows:
-                    ts_ix = [f.name for f in self.schema.fields].index(self._ts)
-                    kept = [r for r in self._buffer_rows if r[ts_ix] >= before_ts]
-                    removed_buf += len(self._buffer_rows) - len(kept)
-                    self._buffer_rows = kept
-                if self._buffer_dfs:
-                    filtered = []
-                    for d, n in self._buffer_dfs:
-                        if n is None:
-                            # deferred block slipped past the pre-lock
-                            # resolve pass: count and register it so the
-                            # removed_buf subtraction below stays exact
-                            n = d.count()
-                            self._buffer_count += n
-                        fd = d.filter(F.col(self._ts) >= F.lit(before_ts))
-                        fn = fd.count()
-                        removed_buf += n - fn
-                        if fn:
-                            filtered.append((fd, fn))
-                    self._buffer_dfs = filtered
-                self._buffer_count -= removed_buf
+                ts_ix = [f.name for f in self.schema.fields].index(self._ts)
+                removed_buf = self._filter_buffer(
+                    lambda r: r[ts_ix] >= before_ts,
+                    F.col(self._ts) >= F.lit(before_ts))
 
                 # row_count == 0 guards legacy empty parts (written
                 # before the zero-row rule of _rewrite_parts): no rows ⇒
@@ -3590,23 +3557,7 @@ class SparkMergeTree:
         self.flush()
         with self._merge_lock:
             with self._lock:
-                added_names = {
-                    a["name"] for a in
-                    self.manifest.table_meta.get("added_columns", [])}
-                original = [f.name for f in self.schema.fields
-                            if f.name not in added_names]
-                chain = self._rename_chains().get(name, (name,))
-                targets = []
-                for p in self.manifest.parts:
-                    present = (set(p.columns) if p.columns is not None
-                               else set(original))
-                    phys = next((c for c in chain if c in present), None)
-                    if (phys is None                   # lazy default
-                            or phys != name            # pending rename
-                            or (p.cast_cols or {}).get(phys)  # cast
-                            # column-TTL / CLEAR COLUMN expiry mark
-                            or name in (p.expired_cols or ())):
-                        targets.append(p)
+                targets = self._lagging_parts(name)
             # rewriting one lagging part never changes whether ANOTHER
             # part lags, so the frontier is fixed upfront and the
             # independent single-part rewrites overlap as one concurrent
@@ -3614,6 +3565,28 @@ class SparkMergeTree:
             self._merge_groups([[p] for p in targets])
         return {"parts_rewritten": len(targets),
                 "rows_rewritten": sum(p.row_count for p in targets)}
+
+    def _lagging_parts(self, name: str) -> list[PartMeta]:
+        """Live parts whose bytes lag the declared column ``name`` — the
+        parts materialize_column rewrites and system_columns counts: the
+        column's physical name via the rename chain is missing (lazy
+        default) or differs from ``name`` (pending rename), a MODIFY cast
+        is pending, or a column-TTL / CLEAR COLUMN expiry mark is set.
+        Caller holds _lock."""
+        added = {a["name"] for a in
+                 self.manifest.table_meta.get("added_columns", [])}
+        original = {f.name for f in self.schema.fields
+                    if f.name not in added}
+        chain = self._rename_chains().get(name, (name,))
+        out = []
+        for p in self.manifest.parts:
+            present = set(p.columns) if p.columns is not None else original
+            phys = next((c for c in chain if c in present), None)
+            if (phys is None or phys != name
+                    or (p.cast_cols or {}).get(phys)
+                    or name in (p.expired_cols or ())):
+                out.append(p)
+        return out
 
     def _apply_index_config(self, col: str, kind: str,
                             n: int | None = None) -> None:
@@ -3794,9 +3767,8 @@ class SparkMergeTree:
             self.flush()
             with self._lock:
                 marked = cells = 0
-                for p in self.manifest.parts:
-                    if partition is not None and p.partition != partition:
-                        continue
+                for p in self._prune(self.manifest.parts,
+                                     partition=partition):
                     if name in (p.expired_cols or ()):
                         continue
                     p.expired_cols = sorted(
@@ -3815,9 +3787,9 @@ class SparkMergeTree:
                 # ALTERs (drop/rename/modify) DO mark detached parts —
                 # those are readability requirements, not data edits.
                 dirty = marked > 0
-                for p, _v in self.manifest.tombstones.values():
-                    if partition is not None and p.partition != partition:
-                        continue
+                for p in self._prune(
+                        [p for p, _v in self.manifest.tombstones.values()],
+                        partition=partition):
                     if name in (p.expired_cols or ()):
                         continue
                     p.expired_cols = sorted(
@@ -4091,13 +4063,8 @@ class SparkMergeTree:
         with self._merge_lock:
             self.flush()
             with self._lock:
-                cands = (self.manifest.prune(*key_range) if key_range
-                         else list(self.manifest.parts))
-                if col_range is not None:
-                    c, lo, hi = col_range
-                    cands = [p for p in cands if p.may_match_range(c, lo, hi)]
-                if partition is not None:
-                    cands = [p for p in cands if p.partition == partition]
+                cands = self._prune(self.manifest.parts, key_range=key_range,
+                                    partition=partition, col_range=col_range)
             rows_affected = 0
             # Commit the mutation intent BEFORE touching any part: if the
             # process dies mid-loop, reopen sees the record and reports an
@@ -4362,8 +4329,9 @@ class SparkMergeTree:
     def explain_estimate(self, start_key=None, end_key=None,
                          partition=None) -> dict:
         """``EXPLAIN ESTIMATE`` analog: how much a read WOULD touch —
-        parts/rows/bytes after manifest pruning (key range via part
-        min/max + bloom, partition scope) versus the table totals —
+        parts/rows/bytes after the read path's part pruning (_prune: key
+        range via part min/max, plus the key bloom when start_key ==
+        end_key, and partition scope) versus the table totals —
         without building a plan or opening a file. The capacity-planning
         primitive: "will this query scan 2 parts or 2000" answered from
         metadata at any table size. Buffered (unflushed) rows are
@@ -4374,12 +4342,12 @@ class SparkMergeTree:
             total = {"parts": len(parts),
                      "rows": sum(p.row_count for p in parts),
                      "bytes": sum(p.disk_size for p in parts)}
-            if partition is not None:
-                parts = [p for p in parts if p.partition == str(partition)]
-            if start_key is not None and end_key is not None:
-                parts = [p for p in parts
-                         if p.min_key is None
-                         or p.overlaps_range(start_key, end_key)]
+            ranged = start_key is not None and end_key is not None
+            parts = self._prune(
+                parts, key_range=(start_key, end_key) if ranged else None,
+                point_key=(start_key if ranged and start_key == end_key
+                           else None),
+                partition=partition)
             return {
                 "total": total,
                 "estimate": {"parts": len(parts),
@@ -4514,9 +4482,10 @@ class SparkMergeTree:
         position, name, declared type, ALTER provenance (original / added
         / renamed / type-modified), declared default, structural role,
         and how many live parts still lag the declaration physically
-        (missing bytes, pending rename, or pending cast — the count
-        ``materialize_column`` would rewrite). Metadata-sized: one row
-        per column from the manifest, zero data files touched."""
+        (_lagging_parts: missing bytes, pending rename, pending cast or
+        an expiry mark — the count ``materialize_column`` would rewrite).
+        Metadata-sized: one row per column from the manifest, zero data
+        files touched."""
         cols = [
             ("position", "int"), ("name", "string"), ("type", "string"),
             ("origin", "string"), ("default", "string"),
@@ -4530,22 +4499,10 @@ class SparkMergeTree:
             renamed_to = {r["to"] for r in tm.get("renamed_columns", [])}
             modified = {m["name"] for m in tm.get("modified_columns", [])}
             structural = self._structural_cols()
-            chains = self._rename_chains()
-            added_names = set(added)
-            original = [f.name for f in self.schema.fields
-                        if f.name not in added_names]
             rows = []
             for i, f in enumerate(self.schema.fields):
-                lagging = 0
-                chain = chains.get(f.name, [f.name])
-                for p in self.manifest.parts:
-                    present = (set(p.columns) if p.columns is not None
-                               else set(original))
-                    phys = next((c for c in chain if c in present), None)
-                    if (phys is None or phys != f.name
-                            or (p.cast_cols or {}).get(phys)):
-                        lagging += 1
-                origin = ("added" if f.name in added_names else "original")
+                lagging = len(self._lagging_parts(f.name))
+                origin = ("added" if f.name in added else "original")
                 if f.name in renamed_to:
                     origin += "+renamed"
                 if f.name in modified:

@@ -930,6 +930,14 @@ def test_explain_estimate(spark, base_path):
         assert est["estimate"]["parts"] == 1
         est = t.explain_estimate(100, 120, partition="p0")
         assert est["estimate"]["parts"] == 0
+        # a point range also checks the key bloom: the even-key p1 part
+        # overlaps the p0 part's [0, 9] but provably lacks key 3
+        t.insert_rows([(k, 1000 + k, "p1") for k in range(0, 10, 2)])
+        t.flush()
+        assert len(t.manifest.prune(3, 3)) == 2
+        assert len(t.parts_for_key(3)) == 1
+        est = t.explain_estimate(3, 3)
+        assert est["estimate"]["parts"] == len(t.parts_for_key(3))
 
 
 def test_insert_batch_defer_count_contract(spark, tmp_path):

@@ -211,6 +211,18 @@ def test_system_columns_tracks_alter_provenance(table):
     assert all(r["parts_lagging"] == 0 for r in info.values())
 
 
+def test_parts_lagging_counts_what_materialize_rewrites(table):
+    _flush(table, 0, 10)
+    table.clear_column("score")                    # expiry mark only
+    info = {r["name"]: r for r in table.system_columns().collect()}
+    assert info["score"]["parts_lagging"] == 1
+    assert info["code"]["parts_lagging"] == 0
+    assert table.materialize_column("score") == {
+        "parts_rewritten": 1, "rows_rewritten": 10}
+    info = {r["name"]: r for r in table.system_columns().collect()}
+    assert info["score"]["parts_lagging"] == 0
+
+
 def test_modify_refusals(table):
     _flush(table, 0, 10)
     with pytest.raises(ValueError, match="structural"):

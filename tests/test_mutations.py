@@ -80,6 +80,28 @@ def test_whole_part_delete_is_metadata_only(spark, base_path):
         assert t.query_all().count() == 50
 
 
+def test_int_partition_hint_reaches_its_parts(spark, base_path):
+    """Partition hints compare as str(value) — the form flush tags parts
+    with — so an int partition value prunes to its parts instead of
+    matching none of them."""
+    schema = T.StructType([*SCHEMA.fields,
+                           T.StructField("b", T.IntegerType(), True)])
+    cfg = MergeTreeConfig(**{**CFG, "partition_col": "b"})
+    with SparkMergeTree(spark, base_path, schema=schema, config=cfg) as t:
+        t.insert_rows([(k, 1000 + k, float(k), k % 2) for k in range(20)])
+        t.flush()
+        assert len(t.parts_in_partition(1)) == 1
+        r = t.delete_where(F.col("b") == 1, partition=1)
+        assert r["parts_scanned"] == 1 and r["rows_affected"] == 10
+        assert t.query_partition(1).count() == 0
+        r = t.update_where(F.col("key") < 4, {"value": F.lit(-1.0)},
+                           partition=0)
+        assert r["parts_scanned"] == 1 and r["rows_affected"] == 2
+        r = t.clear_column("value", partition=0)
+        assert r == {"parts_marked": 1, "cells_cleared": 10}
+        assert {x["value"] for x in t.query_all().collect()} == {None}
+
+
 def test_update_sorting_key_rejected(spark, base_path):
     with _fresh(spark, base_path) as t:
         with pytest.raises(ValueError, match="sorting/partition"):
