@@ -46,8 +46,10 @@ import shutil
 import threading
 import time
 import warnings
-from dataclasses import dataclass, field
+from collections import Counter
+from dataclasses import asdict, dataclass, field
 from math import ceil
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -150,6 +152,33 @@ def bloom_hex_from_row(row, prefix: str, n_bits: int) -> str:
                 base64.b64decode(row[f"{prefix}{i}_{c}"] or ""), "little")
         cap += acc.to_bytes(_BITMAP_BITS // 8, "little")
     return bloom_fold(cap, n_bits)
+
+
+class PartLayout(NamedTuple):
+    """How one part's files hold the declared columns — the read-time
+    transforms its scan applies (SparkMergeTree._layout). Parts with equal
+    layouts read as one scan."""
+
+    missing: tuple   # declared columns the part lacks: lazy default
+    masks: tuple     # ids of the lightweight deletes that mask the part
+    expired: tuple   # column-TTL / CLEAR marks: served as the default
+    renames: tuple   # (declared, physical): stored under an older name
+    casts: tuple     # (declared, physical ddl): stored at an older type
+
+    def lagging(self) -> set:
+        """Declared columns whose bytes lag their declaration."""
+        return {*self.missing, *self.expired,
+                *(c for c, _ in self.renames), *(c for c, _ in self.casts)}
+
+
+class _LayoutCtx(NamedTuple):
+    """The table-level inputs of SparkMergeTree._layout, built once per
+    call by _layout_ctx."""
+
+    cols: list           # declared columns, in schema order
+    original: frozenset  # what a part without a column list holds
+    chains: dict         # rename chains; {} when nothing was renamed
+    lw: tuple            # lightweight-delete entries whose masks apply
 
 
 @dataclass(frozen=True)
@@ -1225,24 +1254,25 @@ class SparkMergeTree:
             self._submit_index_builds(meta)
         return meta
 
-    def _build_projections(self, part_id: int, path: str,
-                           columns: list[str] | None) -> dict[str, str]:
-        """Build one part's projection files from its WRITTEN bytes.
-        Projections ride the part lifecycle (ClickHouse contract): every
-        new part — flush, merge, mutation rewrite, TTL rewrite — gets
-        its projections recomputed from the same rows, so they can never
-        drift from the data. Pure compute + deterministic-path writes —
-        no metadata mutation, safe from any thread (the deferred-build
-        pool runs this; _drain_index_builds attaches the result)."""
-        present = (set(columns) if columns is not None
-                   else {f.name for f in self.schema.fields})
-        part_df = self.spark.read.schema(
-            T.StructType([f for f in self.schema.fields
-                          if f.name in present])).parquet(path)
+    def _build_projections(self, meta: PartMeta, specs,
+                           ctx: _LayoutCtx | None = None) -> dict[str, str]:
+        """Build one part's files for the projections ``specs`` from its
+        rows as reads serve them (``_scan`` of its ``_layout``) — without
+        lightweight-delete masks: a partial counts every stored row, and
+        a masked part is routed to its raw rows until a rewrite
+        materializes the mask. Projections ride the part lifecycle
+        (ClickHouse contract): every new part — flush, merge, mutation
+        rewrite, TTL rewrite — gets its projections recomputed from the
+        same rows, so they can never drift from the data. Pure compute +
+        deterministic-path writes — no metadata mutation, safe from any
+        thread (the deferred-build pool runs this; _drain_index_builds
+        attaches the result)."""
+        part_df = self._scan(
+            [meta.path], self._layout(meta, ctx or self._layout_ctx()))
         proj_paths: dict[str, str] = {}
-        for spec in self.config.projections:
+        for spec in specs:
             ppath = os.path.join(self.base_path,
-                                 f"part_{part_id}_proj_{spec.name}")
+                                 f"part_{meta.part_id}_proj_{spec.name}")
             (self._apply_projection(part_df, spec)
              .coalesce(1).write.mode("overwrite").parquet(ppath))
             proj_paths[spec.name] = ppath
@@ -1289,14 +1319,24 @@ class SparkMergeTree:
             F.split(F.lower(F.col(col)), self.TOKEN_SPLIT_RE),
             lambda t: t != F.lit("")))
 
-    def _attach_token_blooms(self, meta: PartMeta) -> None:
+    def _held_cols(self, p: PartMeta, ctx: _LayoutCtx | None = None
+                   ) -> set:
+        """Declared columns ``p`` holds under their declared name and
+        type, unexpired (``_layout``): the only columns a skip index may
+        be built from. A lagging column makes no claim until the part's
+        next rewrite."""
+        ctx = ctx or self._layout_ctx()
+        return set(ctx.cols) - self._layout(p, ctx).lagging()
+
+    def _attach_token_blooms(self, meta: PartMeta,
+                             ctx: _LayoutCtx | None = None) -> None:
         """Synchronous build+attach of the per-part token blooms
         (recovery and MATERIALIZE INDEX backfill paths); the write path
         defers the identical compute via _submit_index_builds."""
+        held = self._held_cols(meta, ctx)
         meta.token_blooms = {
             col: self._token_bloom_for(meta.path, col)
-            for col in self.config.token_bloom_cols
-            if meta.columns is None or col in meta.columns}
+            for col in self.config.token_bloom_cols if col in held}
 
     def _token_bloom_for(self, path: str, col: str) -> dict:
         """Build one column's token bloom (tokenbf_v1 analog): one
@@ -1346,14 +1386,15 @@ class SparkMergeTree:
             f"  i -> substring(lower({col}), i, {n}))) END"
         )
 
-    def _attach_ngram_blooms(self, meta: PartMeta) -> None:
+    def _attach_ngram_blooms(self, meta: PartMeta,
+                             ctx: _LayoutCtx | None = None) -> None:
         """Synchronous build+attach of the per-part n-gram blooms
         (recovery and MATERIALIZE INDEX backfill paths); the write path
         defers the identical compute via _submit_index_builds."""
+        held = self._held_cols(meta, ctx)
         meta.ngram_blooms = {
             col: self._ngram_bloom_for(meta.path, col)
-            for col in self.config.ngram_bloom_cols
-            if meta.columns is None or col in meta.columns}
+            for col in self.config.ngram_bloom_cols if col in held}
 
     def _ngram_bloom_for(self, path: str, col: str) -> dict:
         """Build one column's n-gram bloom (ngrambf_v1 analog): one
@@ -1382,19 +1423,17 @@ class SparkMergeTree:
         and persisted manifest metadata are identical to the synchronous
         build. Called LAST in the part-write path, so a part that rolls
         back can never have a pending job reading its deleted files."""
-        cols_tok = [c for c in self.config.token_bloom_cols
-                    if meta.columns is None or c in meta.columns]
-        cols_ng = [c for c in self.config.ngram_bloom_cols
-                   if meta.columns is None or c in meta.columns]
+        held = self._held_cols(meta)
+        cols_tok = [c for c in self.config.token_bloom_cols if c in held]
+        cols_ng = [c for c in self.config.ngram_bloom_cols if c in held]
         specs = list(self.config.projections or [])
         if not cols_tok and not cols_ng and not specs:
             return
 
         def build() -> tuple[dict, dict, dict | None]:
             try:
-                proj = (self._build_projections(
-                    meta.part_id, meta.path, meta.columns)
-                    if specs else None)
+                proj = (self._build_projections(meta, specs)
+                        if specs else None)
                 return (
                     {c: self._token_bloom_for(meta.path, c)
                      for c in cols_tok},
@@ -1936,24 +1975,16 @@ class SparkMergeTree:
         self._drain_index_builds()
         with self._lock:
             parts = list(self.manifest.parts)
+            ctx = self._layout_ctx()
 
         def build(p: PartMeta) -> bool:
             """True = projection built for this part. Per-part aggregate
             jobs over disjoint inputs/outputs — run concurrently below."""
             if p.proj_paths and name in p.proj_paths:
                 return False
-            cols = (set(p.columns) if p.columns is not None
-                    else {f.name for f in self.schema.fields})
-            part_df = self.spark.read.schema(
-                T.StructType([f for f in self.schema.fields
-                              if f.name in cols])).parquet(p.path)
-            ppath = os.path.join(self.base_path,
-                                 f"part_{p.part_id}_proj_{name}")
-            (self._apply_projection(part_df, spec)
-             .coalesce(1).write.mode("overwrite").parquet(ppath))
+            built = self._build_projections(p, (spec,), ctx)
             with self._lock:
-                p.proj_paths = dict(p.proj_paths or {})
-                p.proj_paths[name] = ppath
+                p.proj_paths = {**(p.proj_paths or {}), **built}
             return True
 
         from clickhouse_mergetree_spark.parallel import run_concurrently
@@ -2044,8 +2075,8 @@ class SparkMergeTree:
             self.flush()
         with self._merge_lock:
             with self._lock:
-                victims = [p for p in self.manifest.parts
-                           if p.partition == str(value)]
+                victims = self._prune(self.manifest.parts,
+                                      partition=str(value))
                 removed = sum(p.row_count for p in victims)
                 if pc is not None:
                     # buffer: drop the partition's rows in place
@@ -2108,15 +2139,14 @@ class SparkMergeTree:
         the detach is exact. Returns rows detached. Metadata + rename
         only — zero rows read at any table size."""
         self._require_partitioning()
-        from dataclasses import asdict
         self.flush()
         # parked metadata snapshots must carry complete index claims,
         # and a pending build must not race the dir rename below
         self._drain_index_builds()
         with self._merge_lock:
             with self._lock:
-                victims = [p for p in self.manifest.parts
-                           if p.partition == str(value)]
+                victims = self._prune(self.manifest.parts,
+                                      partition=str(value))
                 if not victims:
                     return 0
                 parked = self.manifest.table_meta.setdefault("detached", [])
@@ -2140,25 +2170,23 @@ class SparkMergeTree:
         self._require_partitioning()
         with self._merge_lock:
             with self._lock:
-                parked = self.manifest.table_meta.get("detached", [])
-                take = [d for d in parked if d.get("partition") == str(value)]
+                parked = self._detached_metas()
+                take = self._prune(parked, partition=str(value))
                 if not take:
                     return 0
-                keep = [d for d in parked if d.get("partition") != str(value)]
-                rows = 0
-                for doc in take:
-                    base = os.path.basename(doc["path"])
+                for p in take:
+                    base = os.path.basename(p.path)
                     if base.startswith("detached_"):
-                        new_path = os.path.join(
-                            os.path.dirname(doc["path"]),
-                            base[len("detached_"):])
-                        os.rename(doc["path"], new_path)
-                        doc["path"] = new_path
-                    self.manifest.append(PartMeta(**doc))
-                    rows += doc["row_count"]
-                self.manifest.table_meta["detached"] = keep
+                        new_path = os.path.join(os.path.dirname(p.path),
+                                                base[len("detached_"):])
+                        os.rename(p.path, new_path)
+                        p.path = new_path
+                    self.manifest.append(p)
+                taken = {p.part_id for p in take}
+                self.manifest.table_meta["detached"] = [
+                    asdict(p) for p in parked if p.part_id not in taken]
                 self.manifest.save()
-                return rows
+                return sum(p.row_count for p in take)
 
     def attach_partition_from(self, src: "SparkMergeTree", value,
                               replace: bool = False) -> int:
@@ -2208,35 +2236,37 @@ class SparkMergeTree:
         # source's pending index builds so the claims come along
         src._drain_index_builds()
         with src._lock:
-            take = [p for p in src.manifest.parts
-                    if p.partition == str(value)]
+            take = src._prune(src.manifest.parts, partition=str(value))
             dirty = {p.part_id for p in
                      src._parts_with_pending_transforms(include_masks=True)}
         if any(p.part_id in dirty for p in take):
             raise ValueError(
                 "source partition has pending ALTER/TTL/delete transforms; "
                 "run src.optimize() first")
-        from dataclasses import asdict
         if replace:
             # REPLACE = drop-then-attach; drop_partition serializes on the
             # merge lock itself, so it runs before we take it here
             self.drop_partition(value)
         with self._merge_lock:
             with self._lock:
-                rows = 0
-                for p in take:
-                    new_id = self.manifest.allocate_part_id()
-                    new_path = os.path.join(self.base_path, f"part_{new_id}")
-                    _link_files(p.path, new_path)
-                    doc = asdict(p)
-                    doc["part_id"] = new_id
-                    doc["path"] = new_path
-                    doc["proj_paths"] = None  # rebuilt at next rewrite
-                    meta = PartMeta(**doc)
-                    self.manifest.append(meta)
-                    rows += meta.row_count
+                rows = sum(self._copy_in(p.path, asdict(p)).row_count
+                           for p in take)
                 self.manifest.save()
         return rows
+
+    def _copy_in(self, src_dir: str, doc: dict) -> PartMeta:
+        """Hardlink ``src_dir``'s files into a fresh part of this table and
+        append ``doc`` (a part's metadata) under the new id and path. The
+        projection partials are table-scoped and not copied: they are
+        rebuilt at the part's next rewrite. Caller holds _merge_lock and
+        _lock, and saves."""
+        new_id = self.manifest.allocate_part_id()
+        new_path = os.path.join(self.base_path, f"part_{new_id}")
+        _link_files(src_dir, new_path)
+        meta = PartMeta(**{**doc, "part_id": new_id, "path": new_path,
+                           "proj_paths": None})
+        self.manifest.append(meta)
+        return meta
 
     def move_partition_to(self, dst: "SparkMergeTree", value) -> int:
         """``ALTER TABLE src MOVE PARTITION ... TO TABLE dst`` analog —
@@ -2274,13 +2304,12 @@ class SparkMergeTree:
         Falls back to copy if the filesystem refuses cross-device links.
 
         Returns {"backup", "parts_frozen", "files"}."""
-        from dataclasses import asdict
         self.flush()
         self._drain_index_builds()  # frozen metadata carries full claims
         with self._merge_lock:
             with self._lock:
-                parts = [p for p in self.manifest.parts
-                         if value is None or p.partition == str(value)]
+                # value=None: the whole table (no partition hint)
+                parts = self._prune(self.manifest.parts, partition=value)
                 name = backup_name or f"backup_v{self.manifest.version}"
                 shadow = os.path.join(self.base_path, "shadow", name)
                 if os.path.exists(shadow):
@@ -2332,20 +2361,10 @@ class SparkMergeTree:
             doc = json.load(f)
         with self._merge_lock:
             with self._lock:
-                rows = 0
-                for pd in doc["parts"]:
-                    frozen_dir = os.path.join(
-                        shadow, os.path.basename(pd["path"]))
-                    new_id = self.manifest.allocate_part_id()
-                    new_path = os.path.join(self.base_path,
-                                            f"part_{new_id}")
-                    _link_files(frozen_dir, new_path)
-                    meta = PartMeta(**pd)
-                    meta.part_id = new_id
-                    meta.path = new_path
-                    meta.proj_paths = None  # rebuilt at next rewrite
-                    self.manifest.append(meta)
-                    rows += meta.row_count
+                rows = sum(
+                    self._copy_in(os.path.join(
+                        shadow, os.path.basename(pd["path"])), pd).row_count
+                    for pd in doc["parts"])
                 self.manifest.save()
         return {"parts_restored": len(doc["parts"]), "rows": rows}
 
@@ -2368,116 +2387,123 @@ class SparkMergeTree:
                     part_id_col: str | None = None) -> DataFrame | None:
         """Raw physical read of a part set at the CURRENT table schema.
 
-        Schema evolution makes parts heterogeneous: a part written before an
-        ALTER ADD COLUMN physically lacks that column. Group parts by which
-        added columns they're missing (almost always 1–2 groups), read each
-        group once, fill the missing columns with their declared defaults
-        (ClickHouse's lazy-default contract — old parts are never rewritten
-        by an ALTER), and union. With no evolution this is exactly one
-        multi-path parquet scan — zero overhead.
+        Schema evolution and lazy transforms make parts heterogeneous;
+        ``_layout`` says what each part holds (missing ALTER-ADD columns,
+        lightweight-delete masks, column-TTL/CLEAR marks, pending renames
+        and casts). Parts are grouped by layout (almost always 1–2 groups)
+        and each group is one ``_scan``, unioned. With no evolution this is
+        exactly one multi-path parquet scan — zero overhead.
 
-        Lightweight-delete masks are applied here, per part: an entry's
-        NOT(pred) filter attaches only to the parts live when the DELETE
-        committed (rows inserted later stay visible even if they match).
-        Grouping by applicable-entry set keeps it one scan per (schema,
-        mask) combination, and because merges/mutations/TTL rewrites all
-        read through this method, every rewrite MATERIALIZES the masks —
-        the rewritten part is physically clean and belongs to no entry.
-
-        Column-TTL expiry marks (PartMeta.expired_cols) are applied here
-        too: an expired column is served as its declared default (the ADD
-        COLUMN default, else NULL) instead of the physical bytes — and for
-        the same read-through reason, every rewrite materializes the
-        expiry, so the rewritten part carries no mark.
-
-        RENAME COLUMN is resolved here as well: a part written before a
-        rename physically stores the OLD name, so each logical column maps
-        to its per-part physical name via the rename chain (metadata-only
-        rename, lazy physical rename at the next rewrite — same contract
-        as ADD/DROP). With no renames the chain lookup is skipped
-        entirely.
+        Old parts are never rewritten by an ALTER (ClickHouse's lazy
+        contract); because merges, mutations and TTL rewrites all read
+        through this method, every rewrite materializes the layout — the
+        rewritten part holds the declared columns, carries no expiry mark
+        and belongs to no delete entry. ``lw_version`` picks the delete
+        entries of a snapshot read (_lw_entries).
 
         ``part_id_col`` adds a column of that name holding each row's
         part id, parsed from the hidden ``_metadata.file_path`` — the
         ``part_<id>`` directory that holds the file."""
         if not parts:
             return None
-        added = self.manifest.table_meta.get("added_columns", [])
         lw = self._lw_entries(lw_version)
-        full_cols = [f.name for f in self.schema.fields]
-        added_names = {a["name"] for a in added}
-        defaults = {a["name"]: a for a in added}
-        original = [c for c in full_cols if c not in added_names]
-        chains = (self._rename_chains()
-                  if self.manifest.table_meta.get("renamed_columns") else {})
-        groups: dict[tuple, list[PartMeta]] = {}
+        ctx = self._layout_ctx(lw)
+        groups: dict[PartLayout, list[PartMeta]] = {}
         for p in parts:
-            present = set(p.columns) if p.columns is not None else set(original)
-            missing = []
-            phys = []
-            casts = []
-            for c in full_cols:
-                pn = next((cand for cand in chains.get(c, (c,))
-                           if cand in present), None)
-                if pn is None:
-                    missing.append(c)
-                    continue
-                if pn != c:
-                    phys.append((c, pn))
-                if p.cast_cols and pn in p.cast_cols:
-                    # MODIFY COLUMN: this part physically stores the old
-                    # type; read at it, cast to the declared type below
-                    casts.append((c, p.cast_cols[pn]))
-            masks = tuple(e["id"] for e in lw if p.part_id in e["parts"])
-            expired = tuple(sorted(
-                set(p.expired_cols or ()) & set(full_cols)))
-            groups.setdefault(
-                (tuple(missing), masks, expired, tuple(phys),
-                 tuple(sorted(casts))), []).append(p)
+            groups.setdefault(self._layout(p, ctx), []).append(p)
         preds = {e["id"]: e["pred"] for e in lw}
-        dfs = []
-        for (missing, masks, expired, phys, casts), ps in groups.items():
-            phys_map = dict(phys)  # logical -> physical name in these parts
-            cast_types = {
-                logical: T.StructType.fromDDL(f"`x` {ddl}")[0].dataType
-                for logical, ddl in casts}
-            sub = T.StructType([
-                T.StructField(phys_map.get(f.name, f.name),
-                              cast_types.get(f.name, f.dataType), f.nullable)
-                for f in self.schema.fields if f.name not in missing])
-            df = self.spark.read.schema(sub).parquet(*[p.path for p in ps])
-            if part_id_col is not None:
-                df = df.withColumn(part_id_col, F.regexp_extract(
-                    F.col("_metadata.file_path"), r"part_(\d+)/[^/]*$", 1)
-                    .cast("long"))
-            for logical, physical in phys:
-                df = df.withColumnRenamed(physical, logical)
-            for logical, _ddl in casts:
-                df = df.withColumn(
-                    logical,
-                    F.col(logical).cast(self.schema[logical].dataType))
-            for a in added:
-                if a["name"] in missing:
-                    df = df.withColumn(a["name"], self._default_col(a))
-            for mid in masks:
-                # SQL DELETE WHERE semantics: NULL predicate ⇒ row kept.
-                # Masks filter BEFORE expired-column substitution: a live
-                # DELETE predicate referencing a later-expired column must
-                # evaluate against the physical bytes it matched at delete
-                # time, not the substituted default (which would resurrect
-                # the rows it deleted).
-                df = df.filter(
-                    ~F.coalesce(F.expr(preds[mid]), F.lit(False)))
-            for c in expired:
-                df = df.withColumn(
-                    c, self._default_col(defaults.get(c))
-                    .cast(self.schema[c].dataType))
-            dfs.append(df.select(
-                full_cols + ([part_id_col] if part_id_col else [])))
+        dfs = [self._scan([p.path for p in ps], lay, preds, part_id_col)
+               for lay, ps in groups.items()]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
+
+    def _layout_ctx(self, lw=()) -> _LayoutCtx:
+        """The inputs ``_layout`` shares across parts, built once per call;
+        ``lw`` are the lightweight-delete entries whose masks count."""
+        tm = self.manifest.table_meta
+        added = {a["name"] for a in tm.get("added_columns", [])}
+        cols = [f.name for f in self.schema.fields]
+        return _LayoutCtx(
+            cols, frozenset(c for c in cols if c not in added),
+            self._rename_chains() if tm.get("renamed_columns") else {},
+            tuple(lw))
+
+    @staticmethod
+    def _layout(p: PartMeta, ctx: _LayoutCtx) -> PartLayout:
+        """The one answer to "what does part ``p`` hold?" — every read,
+        rewrite trigger, ALTER and derived build asks it. A part's
+        physical name for a declared column is the first entry of the
+        column's rename chain in its column list; a part without a column
+        list (legacy, or adopted by manifest-less recovery) holds the
+        original columns. Unmatched ⇒ missing (lazy default); matched
+        under an older name ⇒ rename; a recorded MODIFY type ⇒ cast.
+        Expiry marks and the delete masks of ``ctx.lw`` complete it."""
+        present = ctx.original if p.columns is None else set(p.columns)
+        missing, renames, casts = [], [], []
+        for c in ctx.cols:
+            chain = ctx.chains.get(c)
+            pn = ((c if c in present else None) if chain is None
+                  else next((n for n in chain if n in present), None))
+            if pn is None:
+                missing.append(c)
+                continue
+            if pn != c:
+                renames.append((c, pn))
+            if p.cast_cols and pn in p.cast_cols:
+                casts.append((c, p.cast_cols[pn]))
+        return PartLayout(
+            tuple(missing),
+            tuple(e["id"] for e in ctx.lw if p.part_id in e["parts"]),
+            (tuple(sorted(set(p.expired_cols).intersection(ctx.cols)))
+             if p.expired_cols else ()),
+            tuple(renames), tuple(sorted(casts)))
+
+    def _scan(self, paths: list[str], lay: PartLayout, preds=None,
+              part_id_col: str | None = None) -> DataFrame:
+        """One scan of parts sharing layout ``lay``, at the current schema:
+        read each column under its physical name and type, then rename,
+        cast, fill missing columns with their declared defaults, apply the
+        delete masks (``preds``: entry id → predicate) and serve expired
+        columns as their defaults."""
+        added = self.manifest.table_meta.get("added_columns", [])
+        defaults = {a["name"]: a for a in added}
+        phys_map = dict(lay.renames)  # declared -> physical name
+        cast_types = {
+            logical: T.StructType.fromDDL(f"`x` {ddl}")[0].dataType
+            for logical, ddl in lay.casts}
+        sub = T.StructType([
+            T.StructField(phys_map.get(f.name, f.name),
+                          cast_types.get(f.name, f.dataType), f.nullable)
+            for f in self.schema.fields if f.name not in lay.missing])
+        df = self.spark.read.schema(sub).parquet(*paths)
+        if part_id_col is not None:
+            df = df.withColumn(part_id_col, F.regexp_extract(
+                F.col("_metadata.file_path"), r"part_(\d+)/[^/]*$", 1)
+                .cast("long"))
+        for logical, physical in lay.renames:
+            df = df.withColumnRenamed(physical, logical)
+        for logical, _ddl in lay.casts:
+            df = df.withColumn(
+                logical, F.col(logical).cast(self.schema[logical].dataType))
+        for a in added:
+            if a["name"] in lay.missing:
+                df = df.withColumn(a["name"], self._default_col(a))
+        for mid in lay.masks:
+            # SQL DELETE WHERE semantics: NULL predicate ⇒ row kept.
+            # Masks filter BEFORE expired-column substitution: a live
+            # DELETE predicate referencing a later-expired column must
+            # evaluate against the physical bytes it matched at delete
+            # time, not the substituted default (which would resurrect
+            # the rows it deleted).
+            df = df.filter(~F.coalesce(F.expr(preds[mid]), F.lit(False)))
+        for c in lay.expired:
+            df = df.withColumn(
+                c, self._default_col(defaults.get(c))
+                .cast(self.schema[c].dataType))
+        return df.select([f.name for f in self.schema.fields]
+                         + ([part_id_col] if part_id_col else []))
 
     @staticmethod
     def _prune(parts: list[PartMeta], *, key_range=None, point_key=None,
@@ -2902,38 +2928,14 @@ class SparkMergeTree:
 
     def _parts_with_pending_transforms(
             self, include_masks: bool) -> list[PartMeta]:
-        """Live parts whose read path applies a recorded transform the
-        physical bytes don't reflect yet: a rename-chain mismatch (the
-        part stores an old physical name), a column-TTL/CLEAR expiry mark,
-        a MODIFY-COLUMN cast (old physical type), a missing ALTER-ADD
-        column (lazy default), or — with ``include_masks`` — a live
-        lightweight-delete mask. These are exactly the parts a rewrite
-        would change even when it merges nothing. Caller holds ``_lock``.
-        """
-        added_names = {a["name"] for a in
-                       self.manifest.table_meta.get("added_columns", [])}
-        full_cols = [f.name for f in self.schema.fields]
-        original = [c for c in full_cols if c not in added_names]
-        chains = (self._rename_chains()
-                  if self.manifest.table_meta.get("renamed_columns") else {})
-        lw = self._lw_entries() if include_masks else []
-        out = []
-        for p in self.manifest.parts:
-            present = (set(p.columns) if p.columns is not None
-                       else set(original))
-            pending = bool(p.expired_cols) or bool(p.cast_cols)
-            if not pending:
-                for c in full_cols:
-                    pn = next((cand for cand in chains.get(c, (c,))
-                               if cand in present), None)
-                    if pn != c:  # missing (None) or old physical name
-                        pending = True
-                        break
-            if not pending and any(p.part_id in e["parts"] for e in lw):
-                pending = True
-            if pending:
-                out.append(p)
-        return out
+        """Live parts whose ``_layout`` is not empty: the read path
+        applies a transform the physical bytes don't reflect yet (a
+        column some part lags — see ``_lagging_parts`` — or, with
+        ``include_masks``, a live lightweight-delete mask). These are
+        exactly the parts a rewrite would change even when it merges
+        nothing. Caller holds ``_lock``."""
+        ctx = self._layout_ctx(self._lw_entries() if include_masks else ())
+        return [p for p in self.manifest.parts if any(self._layout(p, ctx))]
 
     def optimize(self, final: bool = False, partition=None) -> None:
         """R32 OPTIMIZE / ``OPTIMIZE TABLE ... FINAL``: flush, then merge
@@ -2968,20 +2970,18 @@ class SparkMergeTree:
         self.flush()
         if partition is not None:
             self._require_partitioning()
-            pstr = str(partition)
             while True:
                 with self._merge_lock:
                     with self._lock:
-                        group = [p for p in self.manifest.parts
-                                 if p.partition == pstr]
+                        group = self._prune(self.manifest.parts,
+                                            partition=partition)
                         if len(group) > 1:
                             target = group
                         else:
-                            pending = [
-                                p for p in
+                            pending = self._prune(
                                 self._parts_with_pending_transforms(
-                                    include_masks=final)
-                                if p.partition == pstr]
+                                    include_masks=final),
+                                partition=partition)
                             target = [pending[0]] if pending else None
                     if target is None:
                         return
@@ -3354,16 +3354,12 @@ class SparkMergeTree:
                 for c in sorted(chain):
                     if c not in dropped:
                         dropped.append(c)
-                detached = self._detached_metas()
-                all_parts = (list(self.manifest.parts)
-                             + [p for p, _ in
-                                self.manifest.tombstones.values()]
-                             + detached)
                 tm["modified_columns"] = [
                     m for m in tm.get("modified_columns", [])
                     if m["name"] != name]
                 tm.get("column_comments", {}).pop(name, None)
-                for p in all_parts:
+
+                def strip(p: PartMeta) -> None:
                     if p.columns is not None and chain & set(p.columns):
                         p.columns = [c for c in p.columns if c not in chain]
                     if p.expired_cols and chain & set(p.expired_cols):
@@ -3372,7 +3368,8 @@ class SparkMergeTree:
                     if p.cast_cols and chain & set(p.cast_cols):
                         p.cast_cols = {c: d for c, d in p.cast_cols.items()
                                        if c not in chain} or None
-                self._park_detached(detached)
+
+                self._edit_all_parts(strip)
                 self.manifest.save()
 
     def rename_column(self, old: str, new: str) -> None:
@@ -3420,24 +3417,23 @@ class SparkMergeTree:
                         "cannot rename while lightweight-delete masks are "
                         "live — their predicates reference columns by "
                         "name; materialize_deletes() first")
-                # freeze physical truth: legacy parts (columns=None) imply
-                # "exactly the current original columns", which stops being
-                # derivable once names shift — materialize before renaming
-                added_names = {a["name"]
-                               for a in tm.get("added_columns", [])}
-                original = [f.name for f in self.schema.fields
-                            if f.name not in added_names]
-                detached = self._detached_metas()
-                all_parts = (list(self.manifest.parts)
-                             + [p for p, _ in
-                                self.manifest.tombstones.values()]
-                             + detached)
-                for p in all_parts:
+                # freeze physical truth: a part without a column list
+                # holds "the current original columns", which stops being
+                # derivable once names shift — write down what its
+                # _layout says it holds before renaming
+                ctx = self._layout_ctx()
+
+                def freeze(p: PartMeta) -> None:
                     if p.columns is None:
-                        p.columns = list(original)
+                        lay = self._layout(p, ctx)
+                        phys = dict(lay.renames)
+                        p.columns = [phys.get(c, c) for c in ctx.cols
+                                     if c not in lay.missing]
                     if p.expired_cols and old in p.expired_cols:
                         p.expired_cols = sorted(
                             c if c != old else new for c in p.expired_cols)
+
+                self._edit_all_parts(freeze)
                 self.schema = T.StructType([
                     T.StructField(new, f.dataType, f.nullable)
                     if f.name == old else f
@@ -3455,7 +3451,6 @@ class SparkMergeTree:
                     cm[new] = cm.pop(old)  # comments follow renames
                 tm.setdefault("renamed_columns", []).append(
                     {"from": old, "to": new})
-                self._park_detached(detached)
                 self.manifest.save()
 
     def modify_column(self, name: str, ddl: str) -> None:
@@ -3507,25 +3502,18 @@ class SparkMergeTree:
                 # parts may predate renames). First modify wins: the
                 # bytes never changed, so the original recorded type
                 # stays authoritative under repeated modifies.
-                chain = self._rename_chains().get(name, (name,))
-                added_names = {a["name"]
-                               for a in tm.get("added_columns", [])}
-                original = [f.name for f in self.schema.fields
-                            if f.name not in added_names]
-                detached = self._detached_metas()
-                all_parts = (list(self.manifest.parts)
-                             + [p for p, _ in
-                                self.manifest.tombstones.values()]
-                             + detached)
-                for p in all_parts:
-                    present = (set(p.columns) if p.columns is not None
-                               else set(original))
-                    phys = next((c for c in chain if c in present), None)
-                    if phys is None:
-                        continue  # pre-ADD part: default fill casts
+                ctx = self._layout_ctx()
+
+                def record(p: PartMeta) -> None:
+                    lay = self._layout(p, ctx)
+                    if name in lay.missing:
+                        return  # pre-ADD part: default fill casts
                     casts = dict(p.cast_cols or {})
-                    casts.setdefault(phys, old_ddl)
+                    casts.setdefault(dict(lay.renames).get(name, name),
+                                     old_ddl)
                     p.cast_cols = casts
+
+                self._edit_all_parts(record)
                 self.schema = T.StructType([
                     T.StructField(name, new_type, f.nullable)
                     if f.name == name else f
@@ -3535,7 +3523,6 @@ class SparkMergeTree:
                         a["ddl"] = ddl  # missing parts fill at the new type
                 tm.setdefault("modified_columns", []).append(
                     {"name": name, "ddl": ddl})
-                self._park_detached(detached)
                 self.manifest.save()
 
     def materialize_column(self, name: str) -> dict:
@@ -3568,25 +3555,12 @@ class SparkMergeTree:
 
     def _lagging_parts(self, name: str) -> list[PartMeta]:
         """Live parts whose bytes lag the declared column ``name`` — the
-        parts materialize_column rewrites and system_columns counts: the
-        column's physical name via the rename chain is missing (lazy
-        default) or differs from ``name`` (pending rename), a MODIFY cast
-        is pending, or a column-TTL / CLEAR COLUMN expiry mark is set.
-        Caller holds _lock."""
-        added = {a["name"] for a in
-                 self.manifest.table_meta.get("added_columns", [])}
-        original = {f.name for f in self.schema.fields
-                    if f.name not in added}
-        chain = self._rename_chains().get(name, (name,))
-        out = []
-        for p in self.manifest.parts:
-            present = set(p.columns) if p.columns is not None else original
-            phys = next((c for c in chain if c in present), None)
-            if (phys is None or phys != name
-                    or (p.cast_cols or {}).get(phys)
-                    or name in (p.expired_cols or ())):
-                out.append(p)
-        return out
+        parts materialize_column rewrites: ``name`` is in their
+        ``_layout``'s missing (lazy default), renamed, cast or expired
+        entries. Caller holds _lock."""
+        ctx = self._layout_ctx()
+        return [p for p in self.manifest.parts
+                if name in self._layout(p, ctx).lagging()]
 
     def _apply_index_config(self, col: str, kind: str,
                             n: int | None = None) -> None:
@@ -3685,6 +3659,7 @@ class SparkMergeTree:
         self._drain_index_builds()
         with self._lock:
             parts = list(self.manifest.parts)
+            ctx = self._layout_ctx()
 
         def backfill(p: PartMeta) -> bool:
             """True = this part was indexed (False = already current).
@@ -3692,11 +3667,10 @@ class SparkMergeTree:
             are independent single-column scan jobs — run concurrently
             below (the 100 TB contract in the docstring, applied
             locally)."""
-            present = (set(p.columns) if p.columns is not None
-                       else {f.name for f in self.schema.fields})
+            held = self._held_cols(p, ctx)
 
             def want(c: str) -> bool:
-                return (col is None or c == col) and c in present
+                return (col is None or c == col) and c in held
 
             tok_missing = [c for c in self.config.token_bloom_cols
                            if want(c) and c not in (p.token_blooms or {})]
@@ -3709,9 +3683,9 @@ class SparkMergeTree:
             if not (tok_missing or ng_missing or mm_missing or set_missing):
                 return False
             if tok_missing:
-                self._attach_token_blooms(p)
+                self._attach_token_blooms(p, ctx)
             if ng_missing:
-                self._attach_ngram_blooms(p)
+                self._attach_ngram_blooms(p, ctx)
             if mm_missing or set_missing:
                 aggs = []
                 for c in mm_missing:
@@ -3800,22 +3774,27 @@ class SparkMergeTree:
             return {"parts_marked": marked, "cells_cleared": cells}
 
     def _detached_metas(self) -> list[PartMeta]:
-        """Detached (parked) parts as PartMeta handles. Every ALTER's
-        part-marking loop must cover them — they re-enter the live set
-        via ATTACH and must carry the same column-list strips, rename
-        freezes, cast records, and expiry marks as live parts, or ATTACH
-        after an ALTER would serve stale bytes (the same bug class DROP's
-        column-list strip exists to prevent). Pair with _park_detached to
-        persist edits. Caller holds _lock."""
+        """Detached (parked) parts as PartMeta handles. Caller holds
+        _lock."""
         return [PartMeta(**d) for d in
                 self.manifest.table_meta.get("detached", [])]
 
-    def _park_detached(self, metas: list[PartMeta]) -> None:
-        """Write edited detached-part handles back to the manifest."""
-        from dataclasses import asdict
-        if metas or self.manifest.table_meta.get("detached"):
+    def _edit_all_parts(self, edit) -> None:
+        """Apply ``edit`` to every part a schema ALTER must keep readable:
+        live parts, snapshot tombstones and detached parts. Detached parts
+        re-enter the live set via ATTACH and must carry the same
+        column-list strips, rename freezes and cast records as live
+        parts, or ATTACH after an ALTER would serve stale bytes; their
+        edits are written back to the manifest. Caller holds _lock and
+        saves."""
+        detached = self._detached_metas()
+        for p in (list(self.manifest.parts)
+                  + [p for p, _ in self.manifest.tombstones.values()]
+                  + detached):
+            edit(p)
+        if detached:
             self.manifest.table_meta["detached"] = [
-                asdict(p) for p in metas]
+                asdict(p) for p in detached]
 
     def _rename_chains(self) -> dict:
         """Per current logical column, its historical physical names,
@@ -4482,8 +4461,9 @@ class SparkMergeTree:
         position, name, declared type, ALTER provenance (original / added
         / renamed / type-modified), declared default, structural role,
         and how many live parts still lag the declaration physically
-        (_lagging_parts: missing bytes, pending rename, pending cast or
-        an expiry mark — the count ``materialize_column`` would rewrite).
+        (per-part ``_layout``: missing bytes, pending rename, pending cast
+        or an expiry mark — the count ``materialize_column`` would
+        rewrite).
         Metadata-sized: one row per column from the manifest, zero data
         files touched."""
         cols = [
@@ -4499,9 +4479,11 @@ class SparkMergeTree:
             renamed_to = {r["to"] for r in tm.get("renamed_columns", [])}
             modified = {m["name"] for m in tm.get("modified_columns", [])}
             structural = self._structural_cols()
+            ctx = self._layout_ctx()
+            lagging = Counter(c for p in self.manifest.parts
+                              for c in self._layout(p, ctx).lagging())
             rows = []
             for i, f in enumerate(self.schema.fields):
-                lagging = len(self._lagging_parts(f.name))
                 origin = ("added" if f.name in added else "original")
                 if f.name in renamed_to:
                     origin += "+renamed"
@@ -4513,7 +4495,7 @@ class SparkMergeTree:
                         else arec.get("default"))
                 rows.append((i, f.name, f.dataType.simpleString(), origin,
                              None if dflt is None else str(dflt),
-                             f.name in structural, lagging,
+                             f.name in structural, lagging[f.name],
                              comments.get(f.name)))
         from clickhouse_mergetree_spark.tables import values_df
         return values_df(self.spark, rows, cols)

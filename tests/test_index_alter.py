@@ -12,6 +12,7 @@ themselves at write time with no materialize step.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -76,6 +77,47 @@ def test_add_index_is_metadata_only_then_materialize_prunes(spark, base):
     # idempotent
     assert t.materialize_index("text") == {"parts_indexed": 0,
                                            "parts_skipped": 3}
+
+
+def test_recovered_part_indexes_only_the_columns_it_holds(spark, base):
+    """A part adopted by manifest-less recovery has no column list and
+    holds the original columns. After ADD COLUMN it lacks the added one:
+    MATERIALIZE INDEX on it makes no claim for that part (reads serve the
+    lazy default) instead of scanning bytes the part does not have."""
+    t = SparkMergeTree(spark, base, schema=SCHEMA, config=_cfg())
+    t.insert_rows([_row(k, "t", float(k), f"w{k}") for k in range(10)])
+    t.flush()
+    t.close()
+    os.remove(os.path.join(base, "manifest.json"))
+    r = SparkMergeTree(spark, base, schema=SCHEMA, config=_cfg())
+    assert [p.columns for p in r.manifest.parts] == [None]
+    r.add_column("note", "string", default="n/a")
+    r.add_index("note", "tokenbf")
+    assert r.materialize_index("note") == {"parts_indexed": 0,
+                                           "parts_skipped": 1}
+    assert not (r.manifest.parts[0].token_blooms or {})
+    assert len(r.parts_for_token("note", "n")) == 1
+    assert sorted(x["key"] for x in r.query_token("note", "n").collect()) \
+        == list(range(10))
+    r.close()
+
+
+def test_materialize_index_skips_a_cleared_column(spark, base):
+    """A CLEARed column serves its default until the part's next rewrite,
+    so an index built later must not describe the stale bytes: the part
+    makes no claim for it and token reads still find the default."""
+    t = _three_parts(spark, base)
+    t.add_column("note", "string", default="n/a")
+    t.insert_rows([(k, k * 10, "t", 1.0, "x", "xray") for k in (7, 8)])
+    t.flush()
+    t.clear_column("note")
+    t.add_index("note", "tokenbf")
+    t.materialize_index("note")
+    assert all("note" not in (p.token_blooms or {})
+               for p in t.manifest.parts)
+    assert sorted(x["key"] for x in t.query_token("note", "n").collect()) \
+        == [1, 2, 3, 4, 5, 6, 7, 8]
+    t.close()
 
 
 def test_minmax_and_set_backfill(spark, base):

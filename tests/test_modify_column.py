@@ -222,6 +222,39 @@ def test_parts_lagging_counts_what_materialize_rewrites(table):
     info = {r["name"]: r for r in table.system_columns().collect()}
     assert info["score"]["parts_lagging"] == 0
 
+    def agree():
+        """The pending-transform parts are exactly the parts that lag
+        some declared column, and system.columns counts those."""
+        with table._lock:
+            pending = {p.part_id for p in
+                       table._parts_with_pending_transforms(
+                           include_masks=False)}
+            lagging = {f.name: {p.part_id for p in
+                                table._lagging_parts(f.name)}
+                       for f in table.schema.fields}
+        assert pending == set().union(*lagging.values())
+        info = {r["name"]: r["parts_lagging"]
+                for r in table.system_columns().collect()}
+        assert info == {c: len(ids) for c, ids in lagging.items()}
+        return lagging
+
+    _flush(table, 10, 20)
+    table.add_column("note", "string", default="n/a")
+    assert agree()["note"] == {p.part_id for p in table.manifest.parts}
+    table.insert_rows([(f"k{ts:05d}", ts, ts, float(ts), "x")
+                       for ts in range(20, 30)])
+    table.flush()
+    table.rename_column("note", "memo")
+    assert len(agree()["memo"]) == 3
+    table.modify_column("code", "bigint")
+    assert len(agree()["code"]) == 3
+    table.clear_column("score")
+    assert len(agree()["score"]) == 3
+    table.drop_column("memo")
+    assert len(agree()["code"]) == 3
+    table.optimize()
+    assert not any(agree().values())
+
 
 def test_modify_refusals(table):
     _flush(table, 0, 10)

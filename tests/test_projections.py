@@ -268,6 +268,39 @@ def test_add_projection_serves_raw_until_materialized(bare_table):
                                                   "parts_skipped": 3}
 
 
+def test_recovered_part_projection_serves_the_added_default(spark,
+                                                          tmp_path):
+    """A part adopted by manifest-less recovery has no column list and
+    holds the original columns. A projection over a column added after
+    recovery is built from the part's rows as reads serve them (the lazy
+    default), so the projection read equals the raw-row grouping."""
+    import os
+
+    base = str(tmp_path / "recovered")
+    cfg = dict(memtable_flush_threshold=10**12, max_parts=10,
+               key_col="key", ts_col="ts_us")
+    t = SparkMergeTree(spark, base, schema=SCHEMA,
+                       config=MergeTreeConfig(**cfg))
+    t.insert_rows([(k, 1000 + k, "ab"[k % 2], Decimal(k)) for k in range(10)])
+    t.flush()
+    t.close()
+    os.remove(os.path.join(base, "manifest.json"))
+    r = SparkMergeTree(spark, base, schema=SCHEMA,
+                       config=MergeTreeConfig(**cfg))
+    assert [p.columns for p in r.manifest.parts] == [None]
+    r.add_column("note", "string", default="n/a")
+    r.add_projection(ProjectionSpec("by_note", ("note",),
+                                    {"n": ("count", "key")}))
+    assert r.materialize_projection("by_note") == {"parts_built": 1,
+                                                   "parts_skipped": 0}
+    raw = sorted(tuple(x) for x in
+                 r.query_all().groupBy("note").count().collect())
+    assert raw == [("n/a", 10)]
+    got = sorted(tuple(x) for x in r.query_projection("by_note").collect())
+    assert got == raw
+    r.close()
+
+
 def test_add_projection_persists_and_new_parts_build_it(bare_table, spark):
     t = bare_table
     t.add_projection(SPEC2)
