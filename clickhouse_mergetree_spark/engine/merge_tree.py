@@ -171,6 +171,20 @@ class PartLayout(NamedTuple):
                 *(c for c, _ in self.renames), *(c for c, _ in self.casts)}
 
 
+class IndexNeeds(NamedTuple):
+    """The derived metadata one part is to get (SparkMergeTree._index_needs):
+    what _build_index computes and _attach_index merges into the part.
+    ``any(needs)`` is False when there is nothing to build."""
+
+    stats: bool = False      # min/max key and ts, row count, disk size
+    key_bloom: bool = False
+    minmax: tuple = ()       # columns
+    sets: tuple = ()         # (column, N)
+    tokens: tuple = ()       # columns
+    ngrams: tuple = ()       # columns
+    projections: tuple = ()  # ProjectionSpecs
+
+
 class _LayoutCtx(NamedTuple):
     """The table-level inputs of SparkMergeTree._layout, built once per
     call by _layout_ctx."""
@@ -539,80 +553,23 @@ class SparkMergeTree:
         return self.spark.createDataFrame([], self.schema)
 
     def _rebuild_missing_metadata(self) -> None:
-        """Manifest-less recovery: parts found by directory scan carry
-        placeholder stats — rebuild them with one aggregate per part
-        (reference lazily loads metadata at open, src/merge_tree.cpp:185-190).
-        Blooms built under an older hash scheme make no claim, so they are
-        rebuilt here too — one scan per such part, once — rather than
-        waiting for a rewrite the merge selector may never schedule."""
+        """Open-time builds. A part adopted by manifest-less recovery
+        (``row_count < 0``) gets its stats and every configured skip index
+        (reference lazily loads metadata at open, src/merge_tree.cpp:
+        185-190). A healthy part gets only its blooms built under an older
+        hash scheme: they make no claim, so they are rebuilt here, once,
+        rather than waiting for a rewrite the merge selector may never
+        schedule. Indexes a healthy part merely lacks wait for MATERIALIZE
+        INDEX (the ADD INDEX contract)."""
+        ctx = self._layout_ctx()
         dirty = False
         for p in self.manifest.parts:
-            if p.row_count >= 0:
-                dirty |= self._rebuild_stale_blooms(p)
-                continue
-            stats = self._part_stats(self.spark.read.schema(self.schema)
-                                     .parquet(p.path))
-            p.min_key, p.max_key = stats["min_key"], stats["max_key"]
-            p.min_ts, p.max_ts = stats["min_ts"], stats["max_ts"]
-            p.row_count = stats["row_count"]
-            p.disk_size = _dir_size(p.path)
-            if self.config.minmax_cols:
-                p.col_stats = {
-                    c: [stats[f"mm_min_{c}"], stats[f"mm_max_{c}"]]
-                    for c in self.config.minmax_cols
-                }
-            if self.config.set_index_cols:
-                p.col_sets = {
-                    c: (sorted(stats[f"set_{c}"])
-                        if len(stats[f"set_{c}"]) <= n else None)
-                    for c, n in self.config.set_index_cols
-                }
-            if self.config.enable_bloom_index:
-                self._attach_bloom(p)
-            if self.config.token_bloom_cols:
-                self._attach_token_blooms(p)
-            if self.config.ngram_bloom_cols:
-                self._attach_ngram_blooms(p)
-            dirty = True
+            needs = self._index_needs(p, ctx, missing=p.row_count < 0)
+            if any(needs):
+                self._attach_index(p, self._build_index(p, needs, ctx))
+                dirty = True
         if dirty:
             self.manifest.save()
-
-    def _rebuild_stale_blooms(self, p: PartMeta) -> bool:
-        """Rebuild ``p``'s key, token and n-gram blooms whose scheme tag
-        is not BLOOM_ALGO; True when any was rebuilt."""
-        stale = False
-        if (self.config.enable_bloom_index and p.bloom_hex
-                and p.bloom_algo != BLOOM_ALGO):
-            self._attach_bloom(p)
-            stale = True
-        if any(b.get("algo") != BLOOM_ALGO
-               for b in (p.token_blooms or {}).values()):
-            self._attach_token_blooms(p)
-            stale = True
-        if any(b.get("algo") != BLOOM_ALGO
-               for b in (p.ngram_blooms or {}).values()):
-            self._attach_ngram_blooms(p)
-            stale = True
-        return stale
-
-    def _part_stats(self, df: DataFrame) -> dict:
-        """R24 metadata aggregate (reference src/part.cpp:219-246), plus
-        the minmax skip-index stats when configured (recovery path)."""
-        aggs = [
-            F.min(self._key).alias("min_key"),
-            F.max(self._key).alias("max_key"),
-            F.min(self._ts).alias("min_ts"),
-            F.max(self._ts).alias("max_ts"),
-            F.count("*").alias("row_count"),
-        ]
-        for c in self.config.minmax_cols:
-            aggs += [F.min(c).alias(f"mm_min_{c}"),
-                     F.max(c).alias(f"mm_max_{c}")]
-        for c, _n in self.config.set_index_cols:
-            aggs.append(F.collect_set(F.col(c).cast("string"))
-                        .alias(f"set_{c}"))
-        row = df.agg(*aggs).collect()[0]
-        return row.asDict()
 
     # ----------------------------------------------------------------- writes
 
@@ -951,8 +908,9 @@ class SparkMergeTree:
 
     def _rewrite_parts(self, plan, on_commit=None) -> list[PartMeta | None]:
         """The rewrite-and-commit primitive every lifecycle rewrite runs
-        through (merges, TTL, mutations, materialized deletes — the
-        reference's ``perform_merge``, src/merge_tree.cpp:245-288).
+        through (merges, TTL, mutations, materialized deletes, DROP
+        PARTITION, TRUNCATE — the reference's ``perform_merge``,
+        src/merge_tree.cpp:245-288).
 
         ``plan`` is a list of ``(old_parts, build)`` entries: ``build()``
         returns ``(df, n_rows)`` for the part that replaces ``old_parts``
@@ -1095,46 +1053,6 @@ class SparkMergeTree:
                     ignore_errors=True)
             raise
 
-    def _write_columns(self) -> dict:
-        """The part write's table-invariant Columns, built once per
-        instance: every Column call is a py4j round trip, and rebuilding
-        these on each write was most of an insert's round trips
-        (PERF_NOTES, "the py4j stall"). The metrics that ALTERs change
-        (minmax, set, CHECK) are built per write."""
-        cols = self._write_cols
-        if cols is None:
-            key, ts = F.col(self._key), F.col(self._ts)
-            cols = {
-                "sort": [key, ts],
-                "stats": [
-                    F.min(key).alias("min_key"),
-                    F.max(key).alias("max_key"),
-                    F.min(ts).alias("min_ts"),
-                    F.max(ts).alias("max_ts"),
-                    F.count(F.lit(1)).alias("row_count"),
-                ],
-            }
-            if self.config.enable_bloom_index:
-                # approx_count_distinct sizes the bitmap (observe forbids
-                # exact DISTINCT aggregates; sizing needs the magnitude)
-                cols["stats"].append(
-                    F.approx_count_distinct(key).alias("bloom_nd"))
-                cols["bloom_pos"] = bloom_position_cols(self._key,
-                                                        "__bloom_")
-                cols["bloom_aggs"] = bloom_bitmap_aggs("__bloom_")
-            self._write_cols = cols
-        return cols
-
-    @staticmethod
-    def _read_bloom_observation(obs) -> dict[str, str]:
-        """The base64 bitmaps of a bloom_bitmap_aggs Observation, read
-        one field at a time: a py4j answer over 8 KiB stalls ~44 ms
-        (PERF_NOTES, "the py4j stall"), and Observation.get would pickle
-        all six into one ~37k-character answer."""
-        jrow = obs._jo.getRow()
-        return {name: jrow.getString(i)
-                for i, name in enumerate(bloom_bitmap_names("__bloom_"))}
-
     def _write_part_files(self, part_id: int, df: DataFrame, n_rows: int,
                           partition: str | None = None,
                           enforce_constraints: bool = False) -> PartMeta:
@@ -1144,12 +1062,14 @@ class SparkMergeTree:
         Spark analog of the reference's global sort + sparse index
         (src/part.cpp:44-45, src/part.cpp:248-257).
 
-        The R24 manifest stats ride along on the write job itself via
-        ``observe`` — no second read-back scan of the part. (The reference
-        also computes metadata during the part write, src/part.cpp:23-28.)
-        Two Observations: the scalar stats come back as one small pickled
-        row, the key bloom's six 4 KiB bitmaps as base64 strings read one
-        field at a time — no py4j answer on this path exceeds 8 KiB.
+        The part's stats, key bloom, minmax and set indexes (_index_aggs)
+        ride along on the write job itself via ``observe`` — no second
+        read-back scan of the part. (The reference also computes metadata
+        during the part write, src/part.cpp:23-28.) Two Observations: the
+        scalar stats come back as one small pickled row, the key bloom's
+        six 4 KiB bitmaps as base64 strings read one field at a time — no
+        py4j answer on this path exceeds 8 KiB. The token and n-gram
+        blooms and the projections go to the deferred pool.
         """
         import uuid
 
@@ -1157,6 +1077,14 @@ class SparkMergeTree:
 
         wc = self._write_columns()
         path = os.path.join(self.base_path, f"part_{part_id}")
+        meta = PartMeta(
+            part_id=part_id, path=path, min_key=None, max_key=None,
+            min_ts=0, max_ts=0, row_count=-1, disk_size=-1,
+            partition=partition,
+            columns=[f.name for f in df.schema.fields],
+        )
+        needs = self._index_needs(meta, self._layout_ctx(),
+                                  specs=self.config.projections)
         n_files = max(1, ceil(n_rows / self.config.rows_per_file))
         shaped = (
             df.repartitionByRange(n_files, *wc["sort"])
@@ -1165,21 +1093,7 @@ class SparkMergeTree:
             else df.coalesce(1).sortWithinPartitions(*wc["sort"])
         )
         tag = uuid.uuid4().hex[:8]
-        metrics = list(wc["stats"])
-        for c in self.config.minmax_cols:
-            # minmax skip index rides the same write-job observation
-            metrics += [F.min(c).alias(f"mm_min_{c}"),
-                        F.max(c).alias(f"mm_max_{c}")]
-        for c, _n in self.config.set_index_cols:
-            # set(N) skip index rides the same write-job observation:
-            # distinct canonical-string values, partial+final hash agg
-            # collapses occurrences map-side. The overflow cap applies
-            # driver-side (> N ⇒ stored as "no claim"); the index
-            # targets low-cardinality columns, so the collected set is
-            # bounded by the column's vocabulary, not the part size.
-            if c in df.columns:
-                metrics.append(F.collect_set(F.col(c).cast("string"))
-                               .alias(f"set_{c}"))
+        metrics = self._index_aggs(needs)
         constraints = (self.constraints() if enforce_constraints else [])
         for i, c in enumerate(constraints):
             # CHECK constraints ride the same write-job observation: a
@@ -1189,7 +1103,7 @@ class SparkMergeTree:
                 .alias(f"viol_{i}"))
         obs = Observation(f"part_stats_{tag}")
         shaped = shaped.observe(obs, *metrics)
-        if self.config.enable_bloom_index:
+        if needs.key_bloom:
             # The key bloom rides the SAME write job as fixed-size bitmap
             # aggregates — no second scan of the part, and six 4 KiB
             # bitmaps back to the driver whatever the part's size.
@@ -1222,37 +1136,249 @@ class SparkMergeTree:
                 raise ValueError(
                     f"constraint {c['name']!r} violated by {n_bad} "
                     f"row(s): CHECK ({c['expr']})")
-        meta = PartMeta(
-            part_id=part_id, path=path,
-            min_key=stats["min_key"], max_key=stats["max_key"],
-            min_ts=stats["min_ts"], max_ts=stats["max_ts"],
-            row_count=stats["row_count"], disk_size=_dir_size(path),
-            partition=partition,
-            columns=[f.name for f in df.schema.fields],
-        )
-        if self.config.enable_bloom_index:
-            meta.bloom_bits = bloom_size_for(int(stats["bloom_nd"]))
-            meta.bloom_k = BLOOM_K
-            meta.bloom_algo = BLOOM_ALGO
-            meta.bloom_hex = bloom_hex_from_row(
-                self._read_bloom_observation(bloom_obs), "__bloom_",
-                meta.bloom_bits)
-        if self.config.minmax_cols:
-            meta.col_stats = {
-                c: [stats[f"mm_min_{c}"], stats[f"mm_max_{c}"]]
-                for c in self.config.minmax_cols
-            }
-        if self.config.set_index_cols:
-            meta.col_sets = {
-                c: (sorted(stats[f"set_{c}"])
-                    if len(stats[f"set_{c}"]) <= n else None)
-                for c, n in self.config.set_index_cols
-                if c in df.columns
-            }
-        if (self.config.projections or self.config.token_bloom_cols
-                or self.config.ngram_bloom_cols):
-            self._submit_index_builds(meta)
+        self._attach_index(meta, self._decode_index(
+            needs, stats,
+            self._read_bloom_observation(bloom_obs)
+            if needs.key_bloom else None))
+        deferred = needs._replace(stats=False, key_bloom=False,
+                                  minmax=(), sets=())
+        if any(deferred):
+            self._submit_index_builds(meta, deferred)
         return meta
+
+    # ------------------------------------------------- derived-index builder
+    #
+    # The only code that decides which derived metadata a part lacks
+    # (_index_needs), computes it (_index_aggs + _decode_index on the write
+    # job's observations, _build_index over the written files) and attaches
+    # it (_attach_index): the part write, the deferred pool, open-time
+    # recovery and stale-bloom rebuilds, MATERIALIZE INDEX and MATERIALIZE
+    # PROJECTION all run through it (ClickHouse builds a skip index with
+    # the same code at INSERT, merge and MATERIALIZE INDEX).
+
+    def _index_needs(self, p: PartMeta, ctx: _LayoutCtx, *,
+                     missing: bool = True, cols=None,
+                     specs=()) -> IndexNeeds:
+        """What part ``p`` is to get. Unknown stats (``row_count < 0``: a
+        part being written, or adopted by manifest-less recovery) bring
+        the stats and the key bloom; otherwise the key bloom only when it
+        was built under another BLOOM_ALGO. The configured minmax, set,
+        token and n-gram indexes count on the columns ``p`` holds under
+        their declared name and type, unexpired (_layout: a lagging column
+        makes no claim until the part's next rewrite), narrowed to
+        ``cols``: each one ``p`` lacks (when ``missing``), and each bloom
+        it holds under another BLOOM_ALGO. Projections: the ``specs`` ``p``
+        lacks."""
+        cfg = self.config
+        held = set(ctx.cols) - self._layout(p, ctx).lagging()
+        if cols is not None:
+            held &= set(cols)
+        new = p.row_count < 0
+
+        def lacks(c: str, have) -> bool:
+            return missing and c in held and c not in (have or {})
+
+        def blooms(want, have) -> tuple:
+            have = have or {}
+            return tuple(c for c in want if lacks(c, have) or (
+                c in held and c in have
+                and have[c].get("algo") != BLOOM_ALGO))
+
+        return IndexNeeds(
+            stats=new,
+            key_bloom=cfg.enable_bloom_index and (
+                new or bool(p.bloom_hex) and p.bloom_algo != BLOOM_ALGO),
+            minmax=tuple(c for c in cfg.minmax_cols
+                         if lacks(c, p.col_stats)),
+            sets=tuple((c, n) for c, n in cfg.set_index_cols
+                       if lacks(c, p.col_sets)),
+            tokens=blooms(cfg.token_bloom_cols, p.token_blooms),
+            ngrams=blooms(cfg.ngram_bloom_cols, p.ngram_blooms),
+            projections=tuple(s for s in specs
+                              if s.name not in (p.proj_paths or {})),
+        )
+
+    def _write_columns(self) -> dict:
+        """The part write's and the derived build's table-invariant
+        Columns, built once per instance: every Column call is a py4j
+        round trip, and rebuilding these on each write was most of an
+        insert's round trips (PERF_NOTES, "the py4j stall"). The metrics
+        that ALTERs change (minmax, set, CHECK) are built per use."""
+        cols = self._write_cols
+        if cols is None:
+            key, ts = F.col(self._key), F.col(self._ts)
+            cols = {
+                "sort": [key, ts],
+                "stats": [
+                    F.min(key).alias("min_key"),
+                    F.max(key).alias("max_key"),
+                    F.min(ts).alias("min_ts"),
+                    F.max(ts).alias("max_ts"),
+                    F.count(F.lit(1)).alias("row_count"),
+                ],
+            }
+            if self.config.enable_bloom_index:
+                # approx_count_distinct sizes the key bloom on every path:
+                # observe forbids exact DISTINCT aggregates, and sizing
+                # needs only the magnitude
+                cols["bloom_nd"] = (F.approx_count_distinct(key)
+                                    .alias("bloom_nd"))
+                cols["bloom_pos"] = bloom_position_cols(self._key,
+                                                        "__bloom_")
+                cols["bloom_aggs"] = bloom_bitmap_aggs("__bloom_")
+            self._write_cols = cols
+        return cols
+
+    @staticmethod
+    def _read_bloom_observation(obs) -> dict[str, str]:
+        """The base64 bitmaps of a bloom_bitmap_aggs Observation, read
+        one field at a time: a py4j answer over 8 KiB stalls ~44 ms
+        (PERF_NOTES, "the py4j stall"), and Observation.get would pickle
+        all six into one ~37k-character answer."""
+        jrow = obs._jo.getRow()
+        return {name: jrow.getString(i)
+                for i, name in enumerate(bloom_bitmap_names("__bloom_"))}
+
+    def _index_aggs(self, needs: IndexNeeds) -> list:
+        """The scalar aggregates of ``needs``: the stats, the key bloom's
+        distinct count, min and max per minmax column, the distinct values
+        per set(N) column. They ride the part write's ``observe`` or run as
+        one plain ``agg`` (_build_index), so both paths size and fill alike.
+        The key bloom's bitmaps are _write_columns' ``bloom_aggs``."""
+        wc = self._write_columns()
+        aggs = list(wc["stats"]) if needs.stats else []
+        if needs.key_bloom:
+            aggs.append(wc["bloom_nd"])
+        for c in needs.minmax:
+            aggs += [F.min(c).alias(f"mm_min_{c}"),
+                     F.max(c).alias(f"mm_max_{c}")]
+        for c, _n in needs.sets:
+            # distinct canonical-string values, partial+final hash agg
+            # collapses occurrences map-side. The overflow cap applies
+            # driver-side (> N ⇒ stored as "no claim"); the index
+            # targets low-cardinality columns, so the collected set is
+            # bounded by the column's vocabulary, not the part size.
+            aggs.append(F.collect_set(F.col(c).cast("string"))
+                        .alias(f"set_{c}"))
+        return aggs
+
+    @staticmethod
+    def _decode_index(needs: IndexNeeds, row, bloom) -> dict:
+        """The built metadata from _index_aggs' values in ``row`` and the
+        ``bloom_aggs`` bitmaps in ``bloom`` (each a Row or a name → value
+        mapping)."""
+        built: dict = {}
+        if needs.stats:
+            built["stats"] = {k: row[k] for k in (
+                "min_key", "max_key", "min_ts", "max_ts", "row_count")}
+        if needs.key_bloom:
+            bits = bloom_size_for(int(row["bloom_nd"]))
+            built["bloom"] = (bits,
+                              bloom_hex_from_row(bloom, "__bloom_", bits))
+        if needs.minmax:
+            built["col_stats"] = {
+                c: [row[f"mm_min_{c}"], row[f"mm_max_{c}"]]
+                for c in needs.minmax}
+        if needs.sets:
+            built["col_sets"] = {
+                c: (sorted(row[f"set_{c}"])
+                    if len(row[f"set_{c}"]) <= n else None)
+                for c, n in needs.sets}
+        return built
+
+    def _build_index(self, p: PartMeta, needs: IndexNeeds,
+                     ctx: _LayoutCtx | None = None) -> dict:
+        """Compute ``needs`` from part ``p``'s files: the stats, key bloom,
+        minmax and set indexes in ONE aggregate scan (_index_aggs), each
+        token and n-gram bloom with _value_bloom, the projection partials
+        with _build_projections. Pure compute plus deterministic-path
+        projection writes — no metadata mutation, safe from any thread, so
+        the deferred pool runs it unchanged; _attach_index applies the
+        result. A failed build deletes the projection dirs it may have
+        begun (nothing references them)."""
+        built: dict = {}
+        aggs = self._index_aggs(needs)
+        if aggs:
+            read = {self._key, self._ts, *needs.minmax,
+                    *(c for c, _n in needs.sets)}
+            df = self.spark.read.schema(T.StructType(
+                [f for f in self.schema.fields if f.name in read])
+            ).parquet(p.path)
+            if needs.key_bloom:
+                wc = self._write_columns()
+                df = df.select("*", *wc["bloom_pos"])
+                aggs += wc["bloom_aggs"]
+            row = df.agg(*aggs).collect()[0]
+            built = self._decode_index(needs, row, row)
+        try:
+            if needs.tokens:
+                built["token_blooms"] = {
+                    c: self._value_bloom(p.path, c, self._token_col(c))
+                    for c in needs.tokens}
+            if needs.ngrams:
+                built["ngram_blooms"] = {
+                    c: {**self._value_bloom(p.path, c, self._ngram_col(c)),
+                        "n": self.config.ngram_n}
+                    for c in needs.ngrams}
+            if needs.projections:
+                built["proj_paths"] = self._build_projections(
+                    p, needs.projections, ctx)
+        except BaseException:
+            for spec in needs.projections:
+                shutil.rmtree(
+                    os.path.join(self.base_path,
+                                 f"part_{p.part_id}_proj_{spec.name}"),
+                    ignore_errors=True)
+            raise
+        return built
+
+    @staticmethod
+    def _attach_index(p: PartMeta, built: dict) -> None:
+        """Merge _build_index's (or the write's) result into ``p``. Merge,
+        never replace: a one-column MATERIALIZE keeps the part's other
+        indexes."""
+        if "stats" in built:
+            for k, v in built["stats"].items():
+                setattr(p, k, v)
+            p.disk_size = _dir_size(p.path)
+        if "bloom" in built:
+            p.bloom_bits, p.bloom_hex = built["bloom"]
+            p.bloom_k, p.bloom_algo = BLOOM_K, BLOOM_ALGO
+        for name in ("col_stats", "col_sets", "token_blooms",
+                     "ngram_blooms", "proj_paths"):
+            if name in built:
+                setattr(p, name, {**(getattr(p, name) or {}), **built[name]})
+
+    def _backfill(self, cols, specs=()) -> tuple[int, int]:
+        """MATERIALIZE INDEX / PROJECTION: build and attach what each live
+        part lacks among the indexes on ``cols`` and the projections
+        ``specs`` (_index_needs). Pending write-path builds land first: a
+        part with one in flight lacks nothing. Each part's build touches
+        only its own metadata, so the builds run as concurrent jobs
+        (bounded by the ALTER frontier, not the table); one save at the
+        end. Returns (parts built, parts skipped)."""
+        self.flush()
+        self._drain_index_builds()
+        with self._lock:
+            parts = list(self.manifest.parts)
+            ctx = self._layout_ctx()
+
+        def backfill(p: PartMeta) -> bool:
+            needs = self._index_needs(p, ctx, cols=cols, specs=specs)
+            if not any(needs):
+                return False
+            built = self._build_index(p, needs, ctx)
+            with self._lock:
+                self._attach_index(p, built)
+            return True
+
+        from clickhouse_mergetree_spark.parallel import run_concurrently
+        done = run_concurrently([(lambda part=p: backfill(part))
+                                 for p in parts],
+                                max_workers=min(8, max(1, len(parts))))
+        with self._lock:
+            self.manifest.save()
+        return sum(done), len(done) - sum(done)
 
     def _build_projections(self, meta: PartMeta, specs,
                            ctx: _LayoutCtx | None = None) -> dict[str, str]:
@@ -1319,42 +1445,18 @@ class SparkMergeTree:
             F.split(F.lower(F.col(col)), self.TOKEN_SPLIT_RE),
             lambda t: t != F.lit("")))
 
-    def _held_cols(self, p: PartMeta, ctx: _LayoutCtx | None = None
-                   ) -> set:
-        """Declared columns ``p`` holds under their declared name and
-        type, unexpired (``_layout``): the only columns a skip index may
-        be built from. A lagging column makes no claim until the part's
-        next rewrite."""
-        ctx = ctx or self._layout_ctx()
-        return set(ctx.cols) - self._layout(p, ctx).lagging()
-
-    def _attach_token_blooms(self, meta: PartMeta,
-                             ctx: _LayoutCtx | None = None) -> None:
-        """Synchronous build+attach of the per-part token blooms
-        (recovery and MATERIALIZE INDEX backfill paths); the write path
-        defers the identical compute via _submit_index_builds."""
-        held = self._held_cols(meta, ctx)
-        meta.token_blooms = {
-            col: self._token_bloom_for(meta.path, col)
-            for col in self.config.token_bloom_cols if col in held}
-
-    def _token_bloom_for(self, path: str, col: str) -> dict:
-        """Build one column's token bloom (tokenbf_v1 analog): one
-        single-column scan — explode to lowercased word tokens and fold
-        their positions into bitmaps (bloom_bitmap_aggs). Runs for every
-        part write, so merges, mutations and TTL rewrites refresh the
-        index for free. Pure compute over the written files — no
-        metadata mutation, safe from any thread."""
-        return self._value_bloom(path, col, self._token_col(col))
-
     def _value_bloom(self, path: str, col: str, values) -> dict:
-        """One bloom over the exploded ``values`` array of ``col``. Two
-        cost levers: (1) a part is often ONE file = one scan task, so
-        rows spread before the explode; (2) the value SPACE is small
+        """One bloom over the exploded ``values`` array of ``col`` (the
+        token and n-gram blooms, tokenbf_v1 / ngrambf_v1 analogs): one
+        single-column scan of the part's files that folds the distinct
+        values' positions into bitmaps (bloom_bitmap_aggs). Two cost
+        levers: (1) a part is often ONE file = one scan task, so rows
+        spread before the explode; (2) the value SPACE is small
         (≤ charset^n ≈ 20k distinct 3-grams, a vocabulary of tokens)
         while OCCURRENCES are ~values-per-row × rows (millions) — dedupe
         FIRST (partial+final hash agg collapses occurrences map-side),
-        THEN hash only the distinct values."""
+        THEN hash only the distinct values. Pure compute — safe from any
+        thread."""
         row = (
             self.spark.read.parquet(path)
             .select(col)
@@ -1376,7 +1478,9 @@ class SparkMergeTree:
         """Distinct lowercased character n-grams of a string column —
         the contract shared by the index build and LIKE pruning (_prune).
         Strings shorter than n contribute nothing (and can't match any
-        indexable needle anyway)."""
+        indexable needle anyway). The gram alphabet is bounded
+        (≤ charset^n distinct grams), so the bitmap saturates gracefully
+        on huge parts instead of growing."""
         n = self.config.ngram_n
         return F.expr(
             f"CASE WHEN length(lower({col})) < {n} "
@@ -1386,78 +1490,29 @@ class SparkMergeTree:
             f"  i -> substring(lower({col}), i, {n}))) END"
         )
 
-    def _attach_ngram_blooms(self, meta: PartMeta,
-                             ctx: _LayoutCtx | None = None) -> None:
-        """Synchronous build+attach of the per-part n-gram blooms
-        (recovery and MATERIALIZE INDEX backfill paths); the write path
-        defers the identical compute via _submit_index_builds."""
-        held = self._held_cols(meta, ctx)
-        meta.ngram_blooms = {
-            col: self._ngram_bloom_for(meta.path, col)
-            for col in self.config.ngram_bloom_cols if col in held}
-
-    def _ngram_bloom_for(self, path: str, col: str) -> dict:
-        """Build one column's n-gram bloom (ngrambf_v1 analog): one
-        single-column scan — explode to lowercased n-grams and fold
-        their positions into bitmaps (bloom_bitmap_aggs). Runs for every
-        part write, so merges, mutations and TTL rewrites refresh the
-        index for free. The gram alphabet is bounded (≤ charset^n
-        distinct grams), so the bitmap saturates gracefully on huge
-        parts instead of growing. Pure compute over the written files —
-        safe from any thread."""
-        return {**self._value_bloom(path, col, self._ngram_col(col)),
-                "n": self.config.ngram_n}
-
-    def _submit_index_builds(self, meta: PartMeta) -> None:
+    def _submit_index_builds(self, meta: PartMeta,
+                             needs: IndexNeeds) -> None:
         """Deferred per-part derived builds (guide §2.6): the token/ngram
-        bloom build and the projection-partial writes are extra Spark
+        bloom builds and the projection-partial writes are extra Spark
         jobs over the part just written; running them synchronously
         serialized every flush on an indexed/projected table as write +
-        re-read(s). Submit them to a small background pool instead so
-        they overlap the CALLER's next action (the next
-        insert/flush/merge). Until a build lands the part simply makes
-        no claim — a missing bloom means scan, a missing projection
+        re-read(s). Submit ``_build_index(meta, needs)`` to a small
+        background pool instead so it overlaps the CALLER's next action
+        (the next insert/flush/merge). Until a build lands the part simply
+        makes no claim — a missing bloom means scan, a missing projection
         routes the reader to its raw rows (the documented
         projection-or-raw planner contract) — and every metadata
         consumer drains first (_drain_index_builds), so query results
         and persisted manifest metadata are identical to the synchronous
         build. Called LAST in the part-write path, so a part that rolls
         back can never have a pending job reading its deleted files."""
-        held = self._held_cols(meta)
-        cols_tok = [c for c in self.config.token_bloom_cols if c in held]
-        cols_ng = [c for c in self.config.ngram_bloom_cols if c in held]
-        specs = list(self.config.projections or [])
-        if not cols_tok and not cols_ng and not specs:
-            return
-
-        def build() -> tuple[dict, dict, dict | None]:
-            try:
-                proj = (self._build_projections(meta, specs)
-                        if specs else None)
-                return (
-                    {c: self._token_bloom_for(meta.path, c)
-                     for c in cols_tok},
-                    {c: self._ngram_bloom_for(meta.path, c)
-                     for c in cols_ng},
-                    proj,
-                )
-            except BaseException:
-                # a failed build must not leak half-written projection
-                # dirs: proj_paths is never assigned, so readers fall
-                # back to raw rows and nothing references these files
-                for spec in specs:
-                    shutil.rmtree(
-                        os.path.join(self.base_path,
-                                     f"part_{meta.part_id}_proj_{spec.name}"),
-                        ignore_errors=True)
-                raise
-
         from clickhouse_mergetree_spark.parallel import (
             with_caller_properties,
         )
 
         # the build's jobs belong to the operation that wrote the part
-        (build,) = with_caller_properties([build])
+        (build,) = with_caller_properties(
+            [lambda: self._build_index(meta, needs)])
         with self._index_lock:
             if self._index_pool is None:
                 from concurrent.futures import ThreadPoolExecutor
@@ -1469,14 +1524,15 @@ class SparkMergeTree:
 
     def _drain_index_builds(self, suppress: bool = False) -> None:
         """Wait for every pending deferred index build, attach the
-        results to the part metadata, and persist the manifest if any
-        landed part is already committed (a flush may have saved it
-        bloom-less; the re-save restores byte-identical metadata to the
-        synchronous build). Serialized under _index_drain_lock so a
-        concurrent drainer returns only after results are ATTACHED, and
-        that lock is never held while taking self._lock (the save step
-        runs after release — no AB-BA with callers that drain while
-        holding self._lock, e.g. flush's 0-row rollback).
+        results to the part metadata (_attach_index), and persist the
+        manifest if any landed part is already committed (a flush may
+        have saved it bloom-less; the re-save restores byte-identical
+        metadata to the synchronous build). Serialized under
+        _index_drain_lock so a concurrent drainer returns only after
+        results are ATTACHED, and that lock is never held while taking
+        self._lock (the save step runs after release — no AB-BA with
+        callers that drain while holding self._lock, e.g. flush's 0-row
+        rollback).
 
         ``suppress=True`` (deletion/rollback paths) swallows build
         errors: the part files may already be gone mid-build, and a
@@ -1488,17 +1544,12 @@ class SparkMergeTree:
                 pending, self._pending_index = self._pending_index, []
             for meta, fut in pending:
                 try:
-                    tok, ng, proj = fut.result()
+                    built = fut.result()
                 except BaseException as exc:  # noqa: BLE001 — re-raised
                     if first_err is None:
                         first_err = exc
                     continue
-                if tok:
-                    meta.token_blooms = tok
-                if ng:
-                    meta.ngram_blooms = ng
-                if proj is not None:
-                    meta.proj_paths = proj
+                self._attach_index(meta, built)
                 applied.append(meta)
         if applied:
             with self._lock:
@@ -1513,22 +1564,6 @@ class SparkMergeTree:
         landed in the part metadata (tests / callers who want the old
         synchronous-attach visibility)."""
         self._drain_index_builds()
-
-    def _attach_bloom(self, meta: PartMeta) -> None:
-        """Recovery-path bloom (re)build: one aggregate over the key column
-        of an existing part (the write-path build rides the write job's
-        observation instead — see _write_part)."""
-        row = (
-            self.spark.read.schema(self.schema).parquet(meta.path)
-            .select(self._key, *bloom_position_cols(self._key, "b"))
-            .agg(F.countDistinct(self._key).alias("nd"),
-                 *bloom_bitmap_aggs("b"))
-            .collect()[0]
-        )
-        meta.bloom_bits = bloom_size_for(row["nd"])
-        meta.bloom_k = BLOOM_K
-        meta.bloom_algo = BLOOM_ALGO
-        meta.bloom_hex = bloom_hex_from_row(row, "b", meta.bloom_bits)
 
     # ----------------------------------------------------------------- reads
 
@@ -1969,32 +2004,8 @@ class SparkMergeTree:
         the ALTER frontier — at 100 TB each part backfills independently.
         Returns {"parts_built", "parts_skipped"}."""
         spec = self._spec(name)
-        self.flush()
-        # a part with an in-flight write-path build is NOT lagging and
-        # must not be rebuilt (and must not race the assignment below)
-        self._drain_index_builds()
-        with self._lock:
-            parts = list(self.manifest.parts)
-            ctx = self._layout_ctx()
-
-        def build(p: PartMeta) -> bool:
-            """True = projection built for this part. Per-part aggregate
-            jobs over disjoint inputs/outputs — run concurrently below."""
-            if p.proj_paths and name in p.proj_paths:
-                return False
-            built = self._build_projections(p, (spec,), ctx)
-            with self._lock:
-                p.proj_paths = {**(p.proj_paths or {}), **built}
-            return True
-
-        from clickhouse_mergetree_spark.parallel import run_concurrently
-        done = run_concurrently([(lambda part=p: build(part))
-                                 for p in parts],
-                                max_workers=min(8, max(1, len(parts))))
-        with self._lock:
-            self.manifest.save()
-        return {"parts_built": sum(1 for d in done if d),
-                "parts_skipped": sum(1 for d in done if not d)}
+        built, skipped = self._backfill((), (spec,))
+        return {"parts_built": built, "parts_skipped": skipped}
 
     def drop_projection(self, name: str) -> int:
         """``ALTER TABLE ... DROP PROJECTION`` analog: unregister the
@@ -2084,14 +2095,10 @@ class SparkMergeTree:
                     removed += self._filter_buffer(
                         lambda r: str(r[ix]) != str(value),
                         ~F.col(pc).eqNullSafe(value))
-                retain = self.config.snapshot_retention > 0
                 if victims:
-                    self.manifest.remove([p.part_id for p in victims],
-                                         retain=retain)
-                    self.manifest.save()
-            if victims and not retain:
-                for p in victims:
-                    self._delete_part_dirs(p)
+                    # inside the buffer's lock section: no reader sees
+                    # the buffered rows gone while the parts are live
+                    self._rewrite_parts([(victims, None)])
             return removed
 
     def truncate(self) -> int:
@@ -2116,15 +2123,8 @@ class SparkMergeTree:
                 self._buffer_rows = []
                 self._buffer_dfs = []
                 self._buffer_count = 0
-                retain = self.config.snapshot_retention > 0
                 if victims:
-                    self.manifest.remove([p.part_id for p in victims],
-                                         retain=retain)
-                self._gc_lw_deletes()
-                self.manifest.save()
-            if victims and not retain:
-                for p in victims:
-                    self._delete_part_dirs(p)
+                    self._rewrite_parts([(victims, None)])
             return removed
 
     def detach_partition(self, value) -> int:
@@ -2775,9 +2775,6 @@ class SparkMergeTree:
             cutoff = self.manifest.version - self.config.snapshot_retention
             victims = self.manifest.vacuum_tombstones(cutoff)
             if victims:
-                self.manifest.save()
-        if victims:
-            with self._lock:
                 self._gc_lw_deletes()
                 self.manifest.save()
         for p in victims:
@@ -3653,69 +3650,8 @@ class SparkMergeTree:
         Snapshot tombstones are exempt (no claim ⇒ time-travel reads scan
         them; pruning is pure optimization). Returns
         {"parts_indexed", "parts_skipped"}."""
-        self.flush()
-        # land pending write-path builds first: a part with an in-flight
-        # bloom is NOT missing its index and must not be rebuilt here
-        self._drain_index_builds()
-        with self._lock:
-            parts = list(self.manifest.parts)
-            ctx = self._layout_ctx()
-
-        def backfill(p: PartMeta) -> bool:
-            """True = this part was indexed (False = already current).
-            Touches only ``p``'s own metadata, so the per-part backfills
-            are independent single-column scan jobs — run concurrently
-            below (the 100 TB contract in the docstring, applied
-            locally)."""
-            held = self._held_cols(p, ctx)
-
-            def want(c: str) -> bool:
-                return (col is None or c == col) and c in held
-
-            tok_missing = [c for c in self.config.token_bloom_cols
-                           if want(c) and c not in (p.token_blooms or {})]
-            ng_missing = [c for c in self.config.ngram_bloom_cols
-                          if want(c) and c not in (p.ngram_blooms or {})]
-            mm_missing = [c for c in self.config.minmax_cols
-                          if want(c) and c not in (p.col_stats or {})]
-            set_missing = [(c, nn) for c, nn in self.config.set_index_cols
-                           if want(c) and c not in (p.col_sets or {})]
-            if not (tok_missing or ng_missing or mm_missing or set_missing):
-                return False
-            if tok_missing:
-                self._attach_token_blooms(p, ctx)
-            if ng_missing:
-                self._attach_ngram_blooms(p, ctx)
-            if mm_missing or set_missing:
-                aggs = []
-                for c in mm_missing:
-                    aggs += [F.min(c).alias(f"mm_min_{c}"),
-                             F.max(c).alias(f"mm_max_{c}")]
-                for c, _nn in set_missing:
-                    aggs.append(F.collect_set(F.col(c).cast("string"))
-                                .alias(f"set_{c}"))
-                row = self.spark.read.parquet(p.path).agg(*aggs).collect()[0]
-                if mm_missing:
-                    p.col_stats = dict(p.col_stats or {})
-                    for c in mm_missing:
-                        p.col_stats[c] = [row[f"mm_min_{c}"],
-                                          row[f"mm_max_{c}"]]
-                if set_missing:
-                    p.col_sets = dict(p.col_sets or {})
-                    for c, nn in set_missing:
-                        vals = row[f"set_{c}"]
-                        p.col_sets[c] = (sorted(vals) if len(vals) <= nn
-                                         else None)
-            return True
-
-        from clickhouse_mergetree_spark.parallel import run_concurrently
-        done = run_concurrently([(lambda part=p: backfill(part))
-                                 for p in parts],
-                                max_workers=min(8, max(1, len(parts))))
-        with self._lock:
-            self.manifest.save()
-        return {"parts_indexed": sum(1 for d in done if d),
-                "parts_skipped": sum(1 for d in done if not d)}
+        built, skipped = self._backfill(None if col is None else (col,))
+        return {"parts_indexed": built, "parts_skipped": skipped}
 
     def clear_column(self, name: str, partition=None) -> dict:
         """``ALTER TABLE CLEAR COLUMN [IN PARTITION]`` analog: reset the

@@ -31,7 +31,10 @@ from clickhouse_mergetree_spark.engine.manifest import (
     bloom_size_for,
     bloom_to_hex,
 )
-from clickhouse_mergetree_spark.engine.merge_tree import bloom_position_cols
+from clickhouse_mergetree_spark.engine.merge_tree import (
+    IndexNeeds,
+    bloom_position_cols,
+)
 
 SCHEMA = T.StructType([
     T.StructField("key", T.StringType(), False),
@@ -153,8 +156,44 @@ def test_written_bloom_equals_driver_bitmap(table):
         p.bloom_bits)
     assert p.bloom_hex == want
     hex_before, bits_before = p.bloom_hex, p.bloom_bits
-    table._attach_bloom(p)  # recovery path, exact distinct count
+    # the recovery and stale-bloom rebuild: one scan, same sizing
+    table._attach_index(
+        p, table._build_index(p, IndexNeeds(key_bloom=True)))
     assert (p.bloom_hex, p.bloom_bits) == (hex_before, bits_before)
+
+
+def test_recovery_reproduces_the_written_index(spark):
+    """One sizing rule for the key bloom: a manifest-less reopen rebuilds
+    a part's key bloom, minmax and set(N) stats exactly as its write
+    built them. At 1,020 keys an exact distinct count (16,320 bits) and
+    the write's approx_count_distinct pick different power-of-two sizes;
+    the rebuild sizes from the same estimate, because the write's
+    Observation cannot count distinct values exactly."""
+    import os
+
+    def cfg():
+        return MergeTreeConfig(memtable_flush_threshold=10**9,
+                               max_parts=100, minmax_cols=("value",),
+                               set_index_cols=(("value", 8),))
+
+    base = tempfile.mkdtemp(prefix="bloom_recover_")
+    try:
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg()) as t:
+            t.insert_rows([(f"k{k:06d}", f"v{k % 7}", k)
+                           for k in range(1020)])
+            t.flush()
+            (w,) = t.manifest.parts
+            written = (w.bloom_bits, w.bloom_hex, w.col_stats, w.col_sets)
+        assert written[0] == 32768
+        os.remove(os.path.join(base, "manifest.json"))
+        with SparkMergeTree(spark, base, schema=SCHEMA, config=cfg()) as r:
+            (p,) = r.manifest.parts
+            assert p.row_count == 1020
+            assert (p.bloom_bits, p.bloom_hex, p.col_stats,
+                    p.col_sets) == written
+            assert p.col_sets == {"value": [f"v{i}" for i in range(7)]}
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_write_path_py4j_answers_stay_under_8k(spark, py4j_answers):

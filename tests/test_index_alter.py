@@ -120,6 +120,34 @@ def test_materialize_index_skips_a_cleared_column(spark, base):
     t.close()
 
 
+def test_materialize_index_builds_only_the_named_column(spark, base):
+    """MATERIALIZE INDEX on one column builds that column's blooms and
+    nothing else: the token bloom the parts already hold on another
+    column is kept as it is, not rebuilt."""
+    t = _three_parts(spark, base)
+    t.add_index("tag", "tokenbf")
+    t.materialize_index("tag")
+    tag_hex = [p.token_blooms["tag"]["hex"] for p in t.manifest.parts]
+    t.add_index("text", "tokenbf")
+    built = []
+    value_bloom = t._value_bloom
+
+    def recording(path, col, values):
+        built.append(col)
+        return value_bloom(path, col, values)
+
+    t._value_bloom = recording
+    assert t.materialize_index("text") == {"parts_indexed": 3,
+                                           "parts_skipped": 0}
+    assert built == ["text"] * 3
+    assert [p.token_blooms["tag"]["hex"] for p in t.manifest.parts] \
+        == tag_hex
+    assert all("text" in p.token_blooms for p in t.manifest.parts)
+    assert [r["key"] for r in t.query_token("text", "zebra").collect()] \
+        == [1]
+    t.close()
+
+
 def test_minmax_and_set_backfill(spark, base):
     t = _three_parts(spark, base)
     t.add_index("score", "minmax")

@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 
 from clickhouse_mergetree_spark.engine import MergeTreeConfig, SparkMergeTree
 from clickhouse_mergetree_spark.engine.manifest import BLOOM_ALGO
+from clickhouse_mergetree_spark.engine.merge_tree import IndexNeeds
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -137,7 +138,7 @@ def test_deferred_builds_land_persist_and_match_sync(spark, tmp_path):
     t.wait_for_index_builds()
     deferred = {p.part_id: dict(p.token_blooms) for p in t.manifest.parts}
     for p in t.manifest.parts:
-        t._attach_token_blooms(p)
+        t._attach_index(p, t._build_index(p, IndexNeeds(tokens=("text",))))
     assert {p.part_id: dict(p.token_blooms)
             for p in t.manifest.parts} == deferred
     # and it persisted: a reopen (fresh manifest load) carries the claims
@@ -159,10 +160,10 @@ def test_close_records_a_failed_deferred_build(spark, tmp_path, caplog):
                           key_col="doc_id", ts_col="ts_us")
     t = SparkMergeTree(spark, str(tmp_path / "t"), schema=SCHEMA, config=cfg)
 
-    def broken(path, col):
+    def broken(path, col, values):
         raise RuntimeError("token build failed")
 
-    t._token_bloom_for = broken
+    t._value_bloom = broken
     t.insert_rows([(i, i, f"alpha doc {i}") for i in range(10)])
     t.flush()
     before = time.time()
