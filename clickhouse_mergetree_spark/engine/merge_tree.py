@@ -47,7 +47,7 @@ import threading
 import time
 import warnings
 from collections import Counter
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 from math import ceil
 from typing import NamedTuple
 
@@ -228,7 +228,13 @@ class ProjectionSpec:
 
 @dataclass
 class MergeTreeConfig:
-    """Reference MergeTreeConfig defaults (src/merge_tree.h:17-20)."""
+    """Reference MergeTreeConfig defaults (src/merge_tree.h:17-20).
+
+    ``SparkMergeTree`` copies the config it is given, so one config may
+    build several tables (or shards) and an ALTER on one never reaches
+    another. The skip-index and ``projections`` fields of the table's copy
+    are its declaration plus the ALTER records in its manifest; the other
+    fields are the caller's, with MODIFY SETTING overrides on top."""
 
     memtable_flush_threshold: int = 1000
     max_parts: int = 10
@@ -391,6 +397,21 @@ class MergeTreeConfig:
     partition_expr: str | None = None
 
 
+# Skip-index kind -> the MergeTreeConfig field that lists its columns.
+_INDEX_FIELDS = {"tokenbf": "token_bloom_cols", "ngrambf": "ngram_bloom_cols",
+                 "minmax": "minmax_cols", "set": "set_index_cols"}
+
+# MergeTreeConfig fields that ALTERs own: SparkMergeTree._apply_table_meta
+# sets them to the constructor's values plus the manifest's records.
+_ALTER_OWNED = tuple(_INDEX_FIELDS.values()) + ("projections",)
+
+
+def _index_cols(cfg: MergeTreeConfig, kind: str) -> list[str]:
+    """The columns ``cfg`` declares a ``kind`` skip index on."""
+    held = getattr(cfg, _INDEX_FIELDS[kind])
+    return [c for c, _n in held] if kind == "set" else list(held)
+
+
 class SparkMergeTree:
     """One MergeTree table rooted at ``base_path``."""
 
@@ -399,31 +420,18 @@ class SparkMergeTree:
                  config: MergeTreeConfig | None = None):
         self.spark = spark
         self.base_path = base_path
-        self.schema = schema or DEFAULT_SCHEMA
-        self.config = config or MergeTreeConfig()
+        # The declaration: the constructor's schema and a private copy of
+        # its config. ALTERs never edit either; _apply_table_meta derives
+        # the live self.schema and the ALTER-owned config fields from them.
+        self._declared_schema = schema or DEFAULT_SCHEMA
+        self._declared = replace(config or MergeTreeConfig())
+        self.config = replace(self._declared)
         if (self.config.partition_col is not None
                 and self.config.partition_expr is not None):
             raise ValueError(
                 "give partition_col OR partition_expr, not both")
-        if (any(s.aggs for s in self.config.projections)
-                and self.config.mode != "dedup"):
-            # summing/collapsing/aggregating reads collapse the row
-            # multiset, so physical-row projection partials could never
-            # agree with table reads — refuse up front, the same reason
-            # ClickHouse refuses projections under FINAL (ADVICE r4).
-            # SORT projections are exempt: they store raw rows, which the
-            # read path collapses exactly like primary rows.
-            raise ValueError(
-                f"aggregate projections require mode='dedup', not "
-                f"{self.config.mode!r}: this mode collapses rows at read "
-                "time, so pre-aggregated physical partials would diverge "
-                "from table reads")
         for s in self.config.projections:
-            if s.order_by and (s.group_by or s.aggs):
-                raise ValueError(
-                    f"projection {s.name!r}: order_by (sort projection) "
-                    "and group_by/aggs (aggregate projection) are "
-                    "mutually exclusive")
+            self._check_projection(s)
         self._buffer_rows: list[tuple] = []
         self._buffer_dfs: list[tuple[DataFrame, int]] = []  # (df, row_count)
         self._buffer_count = 0
@@ -461,57 +469,7 @@ class SparkMergeTree:
         self._views: list = []  # attached MaterializedViews (see matview.py)
         os.makedirs(base_path, exist_ok=True)
         self.manifest = Manifest.load(base_path)
-        # Re-apply any persisted ALTER ADD/DROP/RENAME COLUMN evolution:
-        # callers reopen with the table's ORIGINAL schema; the manifest
-        # carries the logs. Drops, then adds, then renames — sound because
-        # the ALTER methods keep the lists consistent: added records carry
-        # their POST-rename name (so a renamed added column materializes
-        # directly under its final name and its rename entry no-ops, the
-        # rename source never having existed at replay), dropped_columns
-        # lists every currently-dropped OR dropped-then-re-added name
-        # including retired rename chains (drops-first lets a re-ADD of an
-        # original column replay with its NEW ddl/position instead of the
-        # original field), and renamed-away names are never reused by
-        # ADD/RENAME.
-        for d in self.manifest.table_meta.get("dropped_columns", []):
-            self.schema = T.StructType(
-                [f for f in self.schema.fields if f.name != d])
-        for a in self.manifest.table_meta.get("added_columns", []):
-            if not any(f.name == a["name"] for f in self.schema.fields):
-                self.schema = T.StructType(
-                    list(self.schema.fields)
-                    + list(T.StructType.fromDDL(f'`{a["name"]}` {a["ddl"]}')))
-        for r in self.manifest.table_meta.get("renamed_columns", []):
-            self.schema = T.StructType([
-                T.StructField(r["to"], f.dataType, f.nullable)
-                if f.name == r["from"] else f
-                for f in self.schema.fields])
-        # MODIFY COLUMN log last (entries carry post-rename names; later
-        # entries win naturally by replay order)
-        for mrec in self.manifest.table_meta.get("modified_columns", []):
-            mtype = T.StructType.fromDDL(f'`x` {mrec["ddl"]}')[0].dataType
-            self.schema = T.StructType([
-                T.StructField(mrec["name"], mtype, f.nullable)
-                if f.name == mrec["name"] else f
-                for f in self.schema.fields])
-        # ALTER ADD INDEX log: re-apply persisted skipping indexes before
-        # metadata rebuild so recovered parts index the full set too.
-        for rec in self.manifest.table_meta.get("indexes", []):
-            self._apply_index_config(rec["col"], rec["kind"], rec.get("n"))
-        # ALTER ADD PROJECTION log (JSON round-trip: lists → tuples)
-        for rec in self.manifest.table_meta.get("projections", []):
-            if not any(s.name == rec["name"]
-                       for s in self.config.projections):
-                self.config.projections = tuple(self.config.projections) + (
-                    ProjectionSpec(rec["name"], tuple(rec["group_by"]),
-                                   {k: tuple(v)
-                                    for k, v in rec["aggs"].items()},
-                                   tuple(rec.get("order_by", ()))),)
-        # ALTER MODIFY SETTING log: runtime overrides beat the
-        # constructor config, like ClickHouse's table-settings persistence
-        for k, v in self.manifest.table_meta.get(
-                "settings_overrides", {}).items():
-            setattr(self.config, k, v)
+        self._apply_table_meta()
         self._rebuild_missing_metadata()
         # A surviving mutation intent record means a previous process died
         # mid-mutation: per-part swaps are atomic, so the table is
@@ -531,7 +489,8 @@ class SparkMergeTree:
         self._bg_stop = threading.Event()
         self._bg_thread: threading.Thread | None = None
         # the latest failure of the background loop, or of a deferred
-        # index build drained at close(): {"error", "time"} or None
+        # index build of a live part that a drain did not raise (close(),
+        # deletion paths): {"error", "time"} or None
         self.last_error: dict | None = None
         # SYSTEM STOP MERGES state — deliberately in-memory only, like
         # ClickHouse's (the flag does not survive a server restart)
@@ -551,6 +510,62 @@ class SparkMergeTree:
 
     def _empty_df(self) -> DataFrame:
         return self.spark.createDataFrame([], self.schema)
+
+    def _apply_table_meta(self) -> None:
+        """Derive the live ``self.schema`` and the ALTER-owned config fields
+        (``_ALTER_OWNED``) from the declaration plus the manifest's ALTER
+        records — the only code that sets them, run at open and by every
+        ALTER after it edits its records, so the live table and a reopen
+        cannot disagree. Other config fields are left alone, except that
+        MODIFY SETTING overrides are re-applied on top.
+
+        Column records replay drops, then adds, then renames, then
+        modifies — sound because the ALTER methods keep the lists
+        consistent: added records carry their POST-rename name (so a
+        renamed added column materializes directly under its final name
+        and its rename entry no-ops), dropped_columns lists every
+        currently-dropped OR dropped-then-re-added name including retired
+        rename chains (drops-first lets a re-ADD of an original column
+        replay with its NEW ddl/position), renamed-away names are never
+        reused by ADD/RENAME, and modify entries carry post-rename names
+        (later entries win by replay order)."""
+        tm = self.manifest.table_meta
+        fields = list(self._declared_schema.fields)
+        for d in tm.get("dropped_columns", []):
+            fields = [f for f in fields if f.name != d]
+        for a in tm.get("added_columns", []):
+            if not any(f.name == a["name"] for f in fields):
+                fields += T.StructType.fromDDL(
+                    f'`{a["name"]}` {a["ddl"]}').fields
+        for r in tm.get("renamed_columns", []):
+            fields = [T.StructField(r["to"], f.dataType, f.nullable)
+                      if f.name == r["from"] else f for f in fields]
+        for mrec in tm.get("modified_columns", []):
+            mtype = T.StructType.fromDDL(f'`x` {mrec["ddl"]}')[0].dataType
+            fields = [T.StructField(mrec["name"], mtype, f.nullable)
+                      if f.name == mrec["name"] else f for f in fields]
+        self.schema = T.StructType(fields)
+        c = self.config
+        for name in _ALTER_OWNED:
+            setattr(c, name, getattr(self._declared, name))
+        for rec in tm.get("indexes", []):
+            col, kind = rec["col"], rec["kind"]
+            if col not in _index_cols(c, kind):
+                name = _INDEX_FIELDS[kind]
+                setattr(c, name, tuple(getattr(c, name)) + (
+                    (col, int(rec.get("n") or 100)) if kind == "set"
+                    else col,))
+        for rec in tm.get("projections", []):  # JSON lists -> tuples
+            if not any(s.name == rec["name"] for s in c.projections):
+                c.projections = tuple(c.projections) + (
+                    ProjectionSpec(rec["name"], tuple(rec["group_by"]),
+                                   {k: tuple(v)
+                                    for k, v in rec["aggs"].items()},
+                                   tuple(rec.get("order_by", ()))),)
+        # MODIFY SETTING overrides beat the constructor config, like
+        # ClickHouse's table-settings persistence
+        for k, v in tm.get("settings_overrides", {}).items():
+            setattr(c, k, v)
 
     def _rebuild_missing_metadata(self) -> None:
         """Open-time builds. A part adopted by manifest-less recovery
@@ -1534,10 +1549,12 @@ class SparkMergeTree:
         callers that drain while holding self._lock, e.g. flush's 0-row
         rollback).
 
-        ``suppress=True`` (deletion/rollback paths) swallows build
+        ``suppress=True`` (deletion/rollback paths) does not raise build
         errors: the part files may already be gone mid-build, and a
-        missing bloom is merely 'no claim'."""
-        first_err: BaseException | None = None
+        missing bloom is merely 'no claim'. A failed build of a part that
+        is still live is recorded in ``last_error`` and logged, as
+        close() does; one of a part no longer live stays silent."""
+        failed: list[tuple[PartMeta, BaseException]] = []
         applied: list[PartMeta] = []
         with self._index_drain_lock:
             with self._index_lock:
@@ -1546,18 +1563,23 @@ class SparkMergeTree:
                 try:
                     built = fut.result()
                 except BaseException as exc:  # noqa: BLE001 — re-raised
-                    if first_err is None:
-                        first_err = exc
+                    failed.append((meta, exc))
                     continue
                 self._attach_index(meta, built)
                 applied.append(meta)
-        if applied:
+        if applied or failed:
             with self._lock:
                 live = {id(p) for p in self.manifest.parts}
                 if any(id(m) in live for m in applied):
                     self.manifest.save()
-        if first_err is not None and not suppress:
-            raise first_err
+            if failed and not suppress:
+                raise failed[0][1]
+            lost = [(m, e) for m, e in failed if id(m) in live]
+            if lost:
+                self.last_error = {"error": lost[0][1], "time": time.time()}
+                _log.warning("deferred index build of part %s of %s "
+                             "failed: %r", lost[0][0].part_id,
+                             self.base_path, lost[0][1])
 
     def wait_for_index_builds(self) -> None:
         """Public drain: block until every deferred skip-index build has
@@ -1959,6 +1981,25 @@ class SparkMergeTree:
             return None
         return min(covering, key=lambda s: len(s.group_by)).name
 
+    def _check_projection(self, spec: ProjectionSpec) -> None:
+        """Refuse a projection this table cannot keep exact. Summing,
+        collapsing and aggregating reads collapse the row multiset, so
+        physical-row partials of an aggregate projection could never agree
+        with table reads — the same reason ClickHouse refuses projections
+        under FINAL. SORT projections store raw rows, which the read path
+        collapses exactly like primary rows, so they are exempt."""
+        if spec.aggs and self.config.mode != "dedup":
+            raise ValueError(
+                f"aggregate projections require mode='dedup', not "
+                f"{self.config.mode!r}: this mode collapses rows at read "
+                "time, so pre-aggregated physical partials would diverge "
+                "from table reads")
+        if spec.order_by and (spec.group_by or spec.aggs):
+            raise ValueError(
+                f"projection {spec.name!r}: order_by (sort projection) "
+                "and group_by/aggs (aggregate projection) are mutually "
+                "exclusive")
+
     def add_projection(self, spec: ProjectionSpec) -> None:
         """``ALTER TABLE ... ADD PROJECTION`` analog: register a
         pre-aggregation on a standing table as a metadata-only manifest
@@ -1969,15 +2010,7 @@ class SparkMergeTree:
         ``materialize_projection`` backfills them — ClickHouse's ADD /
         MATERIALIZE PROJECTION split. Persisted in the manifest and
         replayed on reopen."""
-        if spec.aggs and self.config.mode != "dedup":
-            raise ValueError(
-                "aggregate projections require mode='dedup' (read-time "
-                "collapse would diverge from physical-row partials)")
-        if spec.order_by and (spec.group_by or spec.aggs):
-            raise ValueError(
-                f"projection {spec.name!r}: order_by (sort projection) "
-                "and group_by/aggs (aggregate projection) are mutually "
-                "exclusive")
+        self._check_projection(spec)
         if any(s.name == spec.name for s in self.config.projections):
             raise ValueError(f"projection {spec.name!r} already exists")
         names = {f.name for f in self.schema.fields}
@@ -1986,13 +2019,12 @@ class SparkMergeTree:
         if missing:
             raise ValueError(f"unknown columns {sorted(missing)}")
         with self._lock:
-            self.config.projections = (tuple(self.config.projections)
-                                       + (spec,))
             recs = self.manifest.table_meta.setdefault("projections", [])
             recs.append({"name": spec.name,
                          "group_by": list(spec.group_by),
                          "aggs": {k: list(v) for k, v in spec.aggs.items()},
                          "order_by": list(spec.order_by)})
+            self._apply_table_meta()
             self.manifest.save()
 
     def materialize_projection(self, name: str) -> dict:
@@ -2010,19 +2042,24 @@ class SparkMergeTree:
     def drop_projection(self, name: str) -> int:
         """``ALTER TABLE ... DROP PROJECTION`` analog: unregister the
         projection and reclaim its per-part files. Reads route back to
-        raw rows from the same commit. Returns files removed."""
+        raw rows from the same commit. Returns files removed. Scope:
+        projections added via ``add_projection``; a projection the
+        constructor's config declares raises ``KeyError`` (a reopen with
+        that config would declare it again)."""
         self._spec(name)  # raises on unknown name
+        if any(s.name == name for s in self._declared.projections):
+            raise KeyError(f"projection {name!r} is declared by the table's "
+                           "config, not added by ALTER")
         # land in-flight write-path builds first: an undrained build
         # would re-create the files after the reclaim below and
         # resurrect the dropped projection in the part metadata
         self._drain_index_builds()
         removed = 0
         with self._lock:
-            self.config.projections = tuple(
-                s for s in self.config.projections if s.name != name)
             recs = self.manifest.table_meta.get("projections", [])
             self.manifest.table_meta["projections"] = [
                 r for r in recs if r["name"] != name]
+            self._apply_table_meta()
             victims = []
             for p in list(self.manifest.parts) + [
                     p for p, _v in self.manifest.tombstones.values()]:
@@ -2789,8 +2826,7 @@ class SparkMergeTree:
         metadata, persisted in the manifest, surfaced by
         ``system_columns()``. Comments follow renames and die with
         DROP COLUMN, like ClickHouse's."""
-        if not any(f.name == name for f in self.schema.fields):
-            raise ValueError(f"unknown column {name!r}")
+        self._check_column(name)
         with self._lock:
             cm = self.manifest.table_meta.setdefault("column_comments", {})
             if comment is None:
@@ -2826,9 +2862,9 @@ class SparkMergeTree:
                 f"(allowed: {sorted(self.MODIFIABLE_SETTINGS)})")
         value = caster(value)
         with self._lock:
-            setattr(self.config, name, value)
             self.manifest.table_meta.setdefault(
                 "settings_overrides", {})[name] = value
+            self._apply_table_meta()
             self.manifest.save()
 
     def stop_merges(self) -> None:
@@ -3270,16 +3306,9 @@ class SparkMergeTree:
                     # reusing a renamed-away name would be captured by the
                     # old rename on reopen. ClickHouse permits this; we
                     # trade the corner for a sound three-list replay.
-                    # Validated BEFORE any state mutates: a refused ALTER
-                    # must leave the schema untouched (a previous version
-                    # widened self.schema first, so the refusal left a
-                    # half-applied column behind — caught by the fuzzer).
                     raise ValueError(
                         f"column name {name!r} was renamed away and cannot "
                         f"be reused; pick a different name")
-                self.schema = T.StructType(
-                    list(self.schema.fields)
-                    + list(T.StructType.fromDDL(f"`{name}` {ddl}")))
                 added = self.manifest.table_meta.setdefault(
                     "added_columns", [])
                 # re-ADD after a DROP: retire the old add record (its
@@ -3297,6 +3326,7 @@ class SparkMergeTree:
                 if default_expr is not None:
                     rec["default_expr"] = default_expr
                 added.append(rec)
+                self._apply_table_meta()
                 self.manifest.save()
 
     def drop_column(self, name: str) -> None:
@@ -3317,14 +3347,7 @@ class SparkMergeTree:
         with self._merge_lock:
             self.flush()
             with self._lock:
-                if not any(f.name == name for f in self.schema.fields):
-                    raise ValueError(f"unknown column {name!r}")
-                structural = self._structural_cols()
-                if name in structural:
-                    raise ValueError(
-                        f"cannot drop structural column {name!r} "
-                        f"(sorting key / partition / mode / index / "
-                        f"projection columns: {sorted(structural)})")
+                self._check_column(name, "drop")
                 broken = self._expr_dependents(name)
                 if broken:
                     raise ValueError(
@@ -3338,8 +3361,6 @@ class SparkMergeTree:
                 # post-narrowing lookup would fall back to the trivial
                 # (name,) and lose the historical physical names.
                 chain = set(self._rename_chains().get(name, (name,)))
-                self.schema = T.StructType(
-                    [f for f in self.schema.fields if f.name != name])
                 tm = self.manifest.table_meta
                 tm["added_columns"] = [
                     a for a in tm.get("added_columns", [])
@@ -3367,6 +3388,7 @@ class SparkMergeTree:
                                        if c not in chain} or None
 
                 self._edit_all_parts(strip)
+                self._apply_table_meta()
                 self.manifest.save()
 
     def rename_column(self, old: str, new: str) -> None:
@@ -3387,16 +3409,9 @@ class SparkMergeTree:
         with self._merge_lock:
             self.flush()
             with self._lock:
-                if not any(f.name == old for f in self.schema.fields):
-                    raise ValueError(f"unknown column {old!r}")
+                self._check_column(old, "rename")
                 if any(f.name == new for f in self.schema.fields):
                     raise ValueError(f"column {new!r} already exists")
-                structural = self._structural_cols()
-                if old in structural:
-                    raise ValueError(
-                        f"cannot rename structural column {old!r} "
-                        f"(sorting key / partition / mode / index / "
-                        f"projection columns: {sorted(structural)})")
                 broken = self._expr_dependents(old)
                 if broken:
                     raise ValueError(
@@ -3431,10 +3446,6 @@ class SparkMergeTree:
                             c if c != old else new for c in p.expired_cols)
 
                 self._edit_all_parts(freeze)
-                self.schema = T.StructType([
-                    T.StructField(new, f.dataType, f.nullable)
-                    if f.name == old else f
-                    for f in self.schema.fields])
                 for a in tm.get("added_columns", []):
                     if a["name"] == old:
                         a["name"] = new
@@ -3448,6 +3459,7 @@ class SparkMergeTree:
                     cm[new] = cm.pop(old)  # comments follow renames
                 tm.setdefault("renamed_columns", []).append(
                     {"from": old, "to": new})
+                self._apply_table_meta()
                 self.manifest.save()
 
     def modify_column(self, name: str, ddl: str) -> None:
@@ -3474,25 +3486,17 @@ class SparkMergeTree:
         with self._merge_lock:
             self.flush()
             with self._lock:
-                fld = next((f for f in self.schema.fields
-                            if f.name == name), None)
-                if fld is None:
-                    raise ValueError(f"unknown column {name!r}")
-                structural = self._structural_cols()
-                if name in structural:
-                    raise ValueError(
-                        f"cannot modify structural column {name!r} "
-                        f"(sorting key / partition / mode / index / "
-                        f"projection columns: {sorted(structural)})")
+                self._check_column(name, "modify")
                 if self._lw_entries():
                     raise ValueError(
                         "cannot modify while lightweight-delete masks are "
                         "live — their predicates were typed against the "
                         "old column; materialize_deletes() first")
                 new_type = T.StructType.fromDDL(f"`x` {ddl}")[0].dataType
-                if new_type == fld.dataType:
+                old_type = self.schema[name].dataType
+                if new_type == old_type:
                     return
-                old_ddl = fld.dataType.simpleString()
+                old_ddl = old_type.simpleString()
                 tm = self.manifest.table_meta
                 # per-part record of the PHYSICAL type still on disk —
                 # keyed by the part's physical name for the column (old
@@ -3511,15 +3515,12 @@ class SparkMergeTree:
                     p.cast_cols = casts
 
                 self._edit_all_parts(record)
-                self.schema = T.StructType([
-                    T.StructField(name, new_type, f.nullable)
-                    if f.name == name else f
-                    for f in self.schema.fields])
                 for a in tm.get("added_columns", []):
                     if a["name"] == name:
                         a["ddl"] = ddl  # missing parts fill at the new type
                 tm.setdefault("modified_columns", []).append(
                     {"name": name, "ddl": ddl})
+                self._apply_table_meta()
                 self.manifest.save()
 
     def materialize_column(self, name: str) -> dict:
@@ -3536,8 +3537,7 @@ class SparkMergeTree:
         jobs), so at 100 TB the work parallelizes per part and is bounded
         by the evolution frontier, not the table. Returns
         {"parts_rewritten", "rows_rewritten"}."""
-        if not any(f.name == name for f in self.schema.fields):
-            raise ValueError(f"unknown column {name!r}")
+        self._check_column(name)
         self.flush()
         with self._merge_lock:
             with self._lock:
@@ -3559,20 +3559,6 @@ class SparkMergeTree:
         return [p for p in self.manifest.parts
                 if name in self._layout(p, ctx).lagging()]
 
-    def _apply_index_config(self, col: str, kind: str,
-                            n: int | None = None) -> None:
-        """Fold one ADD INDEX record into the live config (idempotent)."""
-        c = self.config
-        if kind == "tokenbf" and col not in c.token_bloom_cols:
-            c.token_bloom_cols = tuple(c.token_bloom_cols) + (col,)
-        elif kind == "ngrambf" and col not in c.ngram_bloom_cols:
-            c.ngram_bloom_cols = tuple(c.ngram_bloom_cols) + (col,)
-        elif kind == "minmax" and col not in c.minmax_cols:
-            c.minmax_cols = tuple(c.minmax_cols) + (col,)
-        elif kind == "set" and col not in [x for x, _ in c.set_index_cols]:
-            c.set_index_cols = (tuple(c.set_index_cols)
-                                + ((col, int(n or 100)),))
-
     def add_index(self, col: str, kind: str, n: int | None = None,
                   name: str | None = None) -> None:
         """``ALTER TABLE ... ADD INDEX`` analog (ClickHouse data-skipping
@@ -3584,21 +3570,25 @@ class SparkMergeTree:
         ClickHouse's ADD INDEX / MATERIALIZE INDEX split. Kinds:
         ``tokenbf`` | ``ngrambf`` | ``minmax`` | ``set`` (``n`` = max
         stored distinct values, default 100). Persisted in the manifest
-        and replayed on reopen."""
-        if not any(f.name == col for f in self.schema.fields):
-            raise ValueError(f"unknown column {col!r}")
-        kinds = ("tokenbf", "ngrambf", "minmax", "set")
+        and replayed on reopen. An index the table already has — added by
+        ALTER or declared by the constructor's config — raises
+        ``ValueError``."""
+        self._check_column(col)
+        kinds = tuple(_INDEX_FIELDS)
         if kind not in kinds:
             raise ValueError(f"unknown index kind {kind!r}; one of {kinds}")
         name = name or f"{kind}_{col}"
         with self._lock:
-            recs = self.manifest.table_meta.setdefault("indexes", [])
-            if any(r["col"] == col and r["kind"] == kind for r in recs):
+            recs = self.manifest.table_meta.get("indexes", [])
+            if (col in _index_cols(self._declared, kind)
+                    or any(r["col"] == col and r["kind"] == kind
+                           for r in recs)):
                 raise ValueError(f"index {kind}({col!r}) already exists")
             if any(r.get("name") == name for r in recs):
                 raise ValueError(f"index named {name!r} already exists")
-            self._apply_index_config(col, kind, n)
-            recs.append({"name": name, "col": col, "kind": kind, "n": n})
+            self.manifest.table_meta["indexes"] = recs + [
+                {"name": name, "col": col, "kind": kind, "n": n}]
+            self._apply_table_meta()
             self.manifest.save()
 
     def index_by_name(self, name: str) -> dict:
@@ -3615,8 +3605,10 @@ class SparkMergeTree:
         stays (its claims remain TRUE, so old parts keep pruning —
         harmless) and ages out as rewrites touch each part. The column
         stops being structural, so it becomes droppable again. Scope:
-        indexes added via ``add_index`` (manifest-tracked DDL) —
-        creation-time config indexes are the caller's config to change."""
+        indexes added via ``add_index`` (manifest-tracked DDL); an index
+        only the constructor's config declares raises ``KeyError`` — it
+        is the caller's config to change, and a reopen with that config
+        would declare it again."""
         with self._lock:
             recs = self.manifest.table_meta.get("indexes", [])
             if not any(r["col"] == col and r["kind"] == kind
@@ -3625,19 +3617,7 @@ class SparkMergeTree:
             self.manifest.table_meta["indexes"] = [
                 r for r in recs
                 if not (r["col"] == col and r["kind"] == kind)]
-            c = self.config
-            if kind == "tokenbf":
-                c.token_bloom_cols = tuple(
-                    x for x in c.token_bloom_cols if x != col)
-            elif kind == "ngrambf":
-                c.ngram_bloom_cols = tuple(
-                    x for x in c.ngram_bloom_cols if x != col)
-            elif kind == "minmax":
-                c.minmax_cols = tuple(
-                    x for x in c.minmax_cols if x != col)
-            elif kind == "set":
-                c.set_index_cols = tuple(
-                    (x, n) for x, n in c.set_index_cols if x != col)
+            self._apply_table_meta()
             self.manifest.save()
 
     def materialize_index(self, col: str | None = None) -> dict:
@@ -3666,13 +3646,7 @@ class SparkMergeTree:
         first so they land in a markable part.
 
         Returns {"parts_marked", "cells_cleared"}."""
-        known = {f.name for f in self.schema.fields}
-        if name not in known:
-            raise ValueError(f"unknown column {name!r}")
-        structural = self._structural_cols()
-        if name in structural:
-            raise ValueError(
-                f"cannot clear structural column {name!r}")
+        self._check_column(name, "clear")
         with self._merge_lock:
             self.flush()
             with self._lock:
@@ -3776,6 +3750,18 @@ class SparkMergeTree:
                 broken.append(label)
         return broken
 
+    def _check_column(self, name: str, verb: str | None = None) -> None:
+        """Refuse an ALTER of ``name`` unless it is a declared column and,
+        when ``verb`` is given, not a structural one (_structural_cols)."""
+        if name not in self.schema.fieldNames():
+            raise ValueError(f"unknown column {name!r}")
+        structural = self._structural_cols() if verb else set()
+        if name in structural:
+            raise ValueError(
+                f"cannot {verb} structural column {name!r} (sorting key / "
+                f"partition / mode / index / projection columns: "
+                f"{sorted(structural)})")
+
     def _structural_cols(self) -> set:
         """Columns the engine's machinery depends on — sorting key,
         partition, mode (sign/version/deleted/summed/aggregated), skipping
@@ -3795,10 +3781,8 @@ class SparkMergeTree:
             cols.update(cfg.sum_cols)
         if cfg.agg_cols:
             cols.update(cfg.agg_cols)
-        cols.update(cfg.minmax_cols)
-        cols.update(cfg.token_bloom_cols)
-        cols.update(cfg.ngram_bloom_cols)
-        cols.update(c for c, _n in cfg.set_index_cols)
+        for kind in _INDEX_FIELDS:
+            cols.update(_index_cols(cfg, kind))
         for spec in cfg.projections:
             cols.update(spec.group_by)
             cols.update(src for _, src in spec.aggs.values())

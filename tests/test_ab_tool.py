@@ -1,0 +1,69 @@
+"""tools/ab.py's verdict on synthetic pairs of benchmark results (no
+Spark, no benchmark run)."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+import ab  # noqa: E402
+
+METRICS = [
+    {"name": "main_p50_s", "better": "lower", "bound": 0.25},
+    {"name": "throughput_per_s", "better": "higher", "bound": 0.25},
+    {"name": "retained_mb", "better": "lower", "bound": 0.1},
+]
+
+
+def _result(main, tput, mb, correct=True, failed=0):
+    return {"correct": correct, "attempted": 10, "failed": failed,
+            "metrics": {"main_p50_s": {"value": main},
+                        "throughput_per_s": {"value": tput},
+                        "retained_mb": {"value": mb}}}
+
+
+def _pairs(parent, change):
+    return [{"workload": "w", "seed": i, "parent": p, "change": c}
+            for i, (p, c) in enumerate(zip(parent, change))]
+
+
+def test_within_bound_is_not_flagged_and_wins_are_counted():
+    parent = [_result(1.0 + i / 100, 100.0, 500.0) for i in range(10)]
+    change = [_result(1.1 + i / 100, 101.0, 505.0) for i in range(10)]
+    v = ab.verdict(METRICS, _pairs(parent, change))
+    assert v["main_p50_s"]["wins"] == 0
+    assert v["main_p50_s"]["parent"]["median"] == 1.045
+    assert abs(v["main_p50_s"]["worse_share"] - 0.1 / 1.045) < 1e-12
+    assert not v["main_p50_s"]["beyond_bound"]
+    # higher is better: every change run wins, and it is not "worse"
+    assert v["throughput_per_s"]["wins"] == 10
+    assert v["throughput_per_s"]["worse_share"] < 0
+    assert not v["retained_mb"]["beyond_bound"]  # +1 % < 10 %
+    assert ab.failures(_pairs(parent, change)) == []
+
+
+def test_worse_beyond_bound_in_either_direction_is_flagged():
+    parent = [_result(1.0, 100.0, 500.0) for _ in range(10)]
+    change = [_result(1.3, 70.0, 560.0) for _ in range(10)]
+    v = ab.verdict(METRICS, _pairs(parent, change))
+    assert v["main_p50_s"]["beyond_bound"]        # 30 % slower
+    assert v["throughput_per_s"]["beyond_bound"]  # 30 % fewer per s
+    assert v["retained_mb"]["beyond_bound"]       # 12 % more memory
+    assert all(x["pairs"] == 10 and x["wins"] == 0 for x in v.values())
+
+
+def test_failed_runs_are_reported_and_skipped():
+    parent = [_result(1.0, 100.0, 500.0), _result(1.0, 100.0, 500.0),
+              _result(1.0, 100.0, 500.0)]
+    change = [None, _result(1.0, 100.0, 500.0, correct=False),
+              _result(1.0, 100.0, 500.0, failed=2)]
+    pairs = _pairs(parent, change)
+    assert ab.failures(pairs) == [
+        "w seed 0 change: no result",
+        "w seed 1 change: correct=False failed=0",
+        "w seed 2 change: correct=True failed=2"]
+    assert ab.verdict(METRICS, pairs)["main_p50_s"]["pairs"] == 2
+    assert ab.verdict(METRICS, pairs[:1]) == {}

@@ -273,3 +273,50 @@ def test_drop_index_unregisters_and_frees_the_column(spark, base):
     # DDL removal survives reopen
     r = SparkMergeTree(spark, base, schema=SCHEMA, config=_cfg())
     assert r.config.token_bloom_cols == ()
+
+
+def test_alters_on_one_table_leave_a_config_sharing_table_alone(spark, base):
+    """Each table keeps its own copy of the config it was built from, so
+    an ADD INDEX or MODIFY SETTING on one table never reaches another
+    table built from the same config object."""
+    cfg = _cfg()
+    a = SparkMergeTree(spark, os.path.join(base, "a"), schema=SCHEMA,
+                       config=cfg)
+    b = SparkMergeTree(spark, os.path.join(base, "b"), schema=SCHEMA,
+                       config=cfg)
+    structural = b._structural_cols()
+    a.add_index("text", "tokenbf")
+    a.modify_setting("max_parts", 3)
+    assert a.config.token_bloom_cols == ("text",)
+    assert a.config.max_parts == 3
+    assert cfg == _cfg()
+    assert b.config == _cfg()
+    assert b._structural_cols() == structural
+    b.insert_rows([_row(1, "hot", 1.0, "alpha beta")])
+    b.flush()
+    b.wait_for_index_builds()
+    assert not b.manifest.parts[0].token_blooms
+    b.drop_column("text")  # not structural on b
+    a.close()
+    b.close()
+
+
+def test_add_index_refuses_an_index_the_config_declares(spark, base):
+    """A declared index is the table's already: ADD INDEX of the same
+    (column, kind) raises and writes no record, so a later DROP INDEX
+    cannot unregister an index that a reopen would declare again."""
+    cfg = _cfg()
+    cfg.minmax_cols = ("score",)
+    cfg.set_index_cols = (("tag", 8),)
+    t = SparkMergeTree(spark, base, schema=SCHEMA, config=cfg)
+    with pytest.raises(ValueError, match="already exists"):
+        t.add_index("score", "minmax")
+    with pytest.raises(ValueError, match="already exists"):
+        t.add_index("tag", "set", n=4)
+    assert "indexes" not in t.manifest.table_meta
+    with pytest.raises(KeyError):
+        t.drop_index("score", "minmax")
+    assert t.config.minmax_cols == ("score",)
+    t.add_index("score", "set")  # same column, another kind is fine
+    assert t.config.set_index_cols == (("tag", 8), ("score", 100))
+    t.close()

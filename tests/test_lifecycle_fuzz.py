@@ -4,7 +4,8 @@ Round 6 shipped two real bugs in ALTER interaction corners (rename→drop
 replay, single-part FINAL materialization); example-based tests only
 cover the corners someone thought of. This walk drives random sequences
 of insert / flush / ADD / DROP / RENAME / MODIFY / CLEAR / re-ADD /
-optimize / reopen against a dict-based model of the expected table and
+ADD and DROP INDEX / MODIFY SETTING / optimize / reopen against a
+dict-based model of the expected table and
 compares the full contents after every sequence and after a reopen with
 the ORIGINAL schema (the replay path, where both r6 bugs lived).
 
@@ -23,6 +24,7 @@ import pytest
 from pyspark.sql import types as T
 
 from clickhouse_mergetree_spark.engine import MergeTreeConfig, SparkMergeTree
+from clickhouse_mergetree_spark.engine.merge_tree import _ALTER_OWNED
 
 BASE_FIELDS = [("key", "bigint"), ("ts", "bigint")]
 ORIG_PAYLOAD = [("p0", "int"), ("p1", "double")]  # original droppable cols
@@ -311,6 +313,26 @@ def _apply_random_op(rng, t, m, counter):
         t.optimize(final=True)
 
 
+def _apply_meta_op(rng, t):
+    """DROP INDEX or MODIFY SETTING: table metadata only, so the model is
+    unchanged. Drawn from their own stream so that the main walk of each
+    seed (and the pinned regression seeds) keeps its op sequence."""
+    recs = t.manifest.table_meta.get("indexes", [])
+    if recs and rng.random() < 0.5:
+        rec = rng.choice(recs)
+        t.drop_index(rec["col"], rec["kind"])
+    elif rng.random() < 0.5:
+        t.modify_setting("max_parts", rng.randrange(2, 6))
+    else:
+        t.modify_setting("part_compression", rng.choice(["zstd", "snappy"]))
+
+
+def _declared_state(t):
+    """The schema and config fields that ALTERs derive."""
+    return (t.schema, {f: getattr(t.config, f) for f in (
+        *_ALTER_OWNED, *SparkMergeTree.MODIFIABLE_SETTINGS)})
+
+
 def _check(t, m):
     got = sorted(tuple(r) for r in t.query_all().collect())
     assert got == m.expected(), (
@@ -323,26 +345,35 @@ def _check(t, m):
 @pytest.mark.parametrize("seed", [*range(6), 9, 16, 35])
 def test_lifecycle_fuzz(spark, seed):
     rng = random.Random(1000 + seed)
+    meta_rng = random.Random(2000 + seed)
     base = tempfile.mkdtemp(prefix="fuzz_tbl_")
     counter = [0]
     m = Model()
     schema0 = _schema(BASE_FIELDS + ORIG_PAYLOAD)
     t = SparkMergeTree(spark, base, schema=schema0,
                        config=MergeTreeConfig(**CFG))
-    try:
-        for _ in range(12):
+
+    def walk(steps):
+        for _ in range(steps):
             _apply_random_op(rng, t, m, counter)
+            if meta_rng.random() < 0.25:
+                _apply_meta_op(meta_rng, t)
+
+    try:
+        walk(12)
         t.flush()
         _check(t, m)
-        # reopen with the ORIGINAL schema: full replay of the ALTER logs
+        # reopen with the ORIGINAL schema: full replay of the ALTER logs,
+        # which must derive the same schema and config as the live table
+        before = _declared_state(t)
         t.close()
         t = SparkMergeTree(spark, base, schema=schema0,
                            config=MergeTreeConfig(**CFG))
+        assert _declared_state(t) == before
         _check(t, m)
         # keep walking after the reopen, then re-verify (replayed state
         # must be a working table, not just a readable one)
-        for _ in range(5):
-            _apply_random_op(rng, t, m, counter)
+        walk(5)
         t.flush()
         _check(t, m)
     finally:

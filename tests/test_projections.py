@@ -551,3 +551,22 @@ def test_failed_projection_build_no_orphans_error_at_drain(table,
     # reads stay consistent: the new row serves from raw rows
     monkeypatch.undo()
     assert table.query_all().filter("key = 99").count() == 1
+
+
+def test_drop_projection_refuses_a_declared_projection(table, spark):
+    """DROP PROJECTION covers projections added by ALTER. A projection the
+    constructor declares raises KeyError, keeps its files, and is still
+    declared after a reopen with the same config."""
+    with pytest.raises(KeyError, match="declared"):
+        table.drop_projection(SPEC.name)
+    assert [s.name for s in table.config.projections] == [SPEC.name]
+    assert all(SPEC.name in (p.proj_paths or {})
+               for p in table.manifest.parts)
+    table.close()
+    r = SparkMergeTree(spark, table.base_path, schema=SCHEMA,
+                       config=MergeTreeConfig(
+                           memtable_flush_threshold=10**12, max_parts=10,
+                           projections=(SPEC,),
+                           key_col="key", ts_col="ts_us"))
+    assert [s.name for s in r.config.projections] == [SPEC.name]
+    r.close()

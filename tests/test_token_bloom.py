@@ -176,6 +176,43 @@ def test_close_records_a_failed_deferred_build(spark, tmp_path, caplog):
     assert "token build failed" in caplog.text
 
 
+def test_a_failed_build_of_a_live_part_is_recorded_at_a_deletion(
+        spark, tmp_path, caplog):
+    """Deletion paths drain the deferred builds without raising; a failed
+    build of a part that is still live is kept as last_error and logged
+    there, not only at close()."""
+    import logging
+
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**12, max_parts=1,
+                          token_bloom_cols=("text",),
+                          key_col="doc_id", ts_col="ts_us")
+    t = SparkMergeTree(spark, str(tmp_path / "t"), schema=SCHEMA, config=cfg)
+
+    def rows(lo):
+        return [(i, i, f"alpha doc {i}") for i in range(lo, lo + 10)]
+
+    for lo in (0, 10):
+        t.insert_rows(rows(lo))
+        t.flush()
+    t.wait_for_index_builds()
+
+    def broken(path, col, values):
+        raise RuntimeError("token build failed")
+
+    t._value_bloom = broken
+    t.insert_rows(rows(20))
+    t.flush()
+    last = t.manifest.parts[-1]
+    with caplog.at_level(logging.WARNING):
+        t.merge_parts_sync()  # merges the first two parts, deletes them
+    assert any(p is last for p in t.manifest.parts)
+    assert "text" not in (last.token_blooms or {})
+    assert t.last_error is not None
+    assert str(t.last_error["error"]) == "token build failed"
+    assert "token build failed" in caplog.text
+    t.close()
+
+
 def test_fanout_jobs_inherit_the_callers_job_group(table):
     """Part rewrites run on worker threads and token blooms build on the
     deferred pool; every job they start carries the caller's job group."""
