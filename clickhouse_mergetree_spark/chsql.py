@@ -1107,14 +1107,6 @@ def _order_pairs(order_text: str) -> list[tuple[str, bool]]:
     return pairs
 
 
-def _order_items(order_text: str) -> list:
-    """``a DESC, b`` -> [Column sort items]; dialect-translated exprs."""
-    from pyspark.sql import functions as F
-
-    return [F.expr(e).desc() if d else F.expr(e).asc()
-            for e, d in _order_pairs(order_text)]
-
-
 def _extend_select(sql: str, exprs: list[str]) -> tuple[str, list[str]]:
     """Append ``exprs`` to the OUTER select list under generated aliases
     (for ORDER BY / LIMIT BY expressions that reference source columns

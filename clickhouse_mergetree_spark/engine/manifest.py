@@ -268,8 +268,8 @@ class Manifest:
     """Atomic JSON manifest of live parts for one SparkMergeTree table.
 
     Also the snapshot layer (Delta/Iceberg-style, extension — no reference
-    analog): every commit (append/swap/remove) bumps ``version`` and logs
-    the live part-id set; parts removed under ``retain=True`` become
+    analog): every commit is one ``swap`` — parts removed, parts added —
+    that bumps ``version`` and logs the live part-id set; parts removed under ``retain=True`` become
     tombstones instead of being deleted, so ``parts_at_version`` can
     materialize any retained snapshot. Physical deletion is deferred to
     ``vacuum_tombstones`` (engine policy decides the retention window).
@@ -379,34 +379,19 @@ class Manifest:
         self.parts = [p for p in self.parts if p.part_id not in removed]
         return out
 
-    def append(self, part: PartMeta) -> None:
-        self.parts.append(part)
-        self._commit()
-
-    def swap(self, removed_ids: list[int], added: PartMeta,
+    def swap(self, removed_ids: list[int], added: list[PartMeta],
              retain: bool = False) -> None:
-        """Compaction commit: drop merged-away parts, add the merged part
-        (reference perform_merge, src/merge_tree.cpp:245-288). With
+        """The one part-set commit: take ``removed_ids`` out, add
+        ``added``, bump the version once and log the live set once. A
+        flush is a swap that removes nothing, a merge or mutation one that
+        replaces parts (reference perform_merge,
+        src/merge_tree.cpp:245-288), a drop one that adds nothing, and a
+        swap of nothing for nothing orders a metadata-only change (a
+        lightweight delete or its KILL) on the version axis. With
         ``retain`` the removed parts become tombstones readable by
         ``parts_at_version`` until vacuumed."""
         out = self._take_out(removed_ids)
-        self.parts.append(added)
-        self._commit()
-        if retain:
-            for p in out:
-                self.tombstones[p.part_id] = (p, self.version)
-
-    def commit_meta(self) -> None:
-        """A versioned commit that changes no parts — used by operations
-        whose effect lives in ``table_meta`` but must still be ordered
-        against part commits (lightweight deletes: ``query_at_version(v)``
-        applies exactly the delete entries with version ≤ v, so each
-        delete needs its own point on the version axis)."""
-        self._commit()
-
-    def remove(self, removed_ids: list[int], retain: bool = False) -> None:
-        """Drop parts without a replacement (TTL whole-part expiry)."""
-        out = self._take_out(removed_ids)
+        self.parts.extend(added)
         self._commit()
         if retain:
             for p in out:
@@ -443,9 +428,6 @@ class Manifest:
         return victims
 
     # -- queries over metadata ----------------------------------------------
-
-    def live_paths(self) -> list[str]:
-        return [p.path for p in self.parts]
 
     def prune(self, start_key, end_key) -> list[PartMeta]:
         """Parts whose [min_key, max_key] intersects the query range (R8)."""

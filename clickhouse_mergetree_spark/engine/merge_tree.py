@@ -789,14 +789,20 @@ class SparkMergeTree:
         return removed
 
     def flush(self) -> int | None:
-        """R16: drain buffer → one sorted parquet part + manifest append
-        (reference src/merge_tree.cpp:69-91, src/part.cpp:39-65); with
-        ``partition_col`` set, one part PER partition value in the buffer
-        (parts never span partitions — the ClickHouse MergeTree insert
-        contract). Returns the last part id actually appended to the
-        manifest, or None if the buffer was empty or every split
-        evaluated to 0 rows (possible with uncounted defer_count blocks —
-        a never-appended id must not leak to callers)."""
+        """R16: drain the buffer into new sorted parquet parts committed as
+        ONE manifest swap (reference src/merge_tree.cpp:69-91,
+        src/part.cpp:39-65): one part, or with ``partition_col`` set one
+        part PER partition value in the buffer (parts never span
+        partitions — the ClickHouse MergeTree insert contract). The
+        insert is one _rewrite_parts entry that removes nothing, so it is
+        all-or-nothing and one version: a CHECK violation in any split
+        deletes every written split and commits nothing (ClickHouse
+        validates the whole insert block before any part becomes
+        visible), and no snapshot holds some of its partitions without
+        the others. Part ids follow sorted-partition order. Returns the
+        last committed part id, or None if the buffer was empty or every
+        split evaluated to 0 rows (possible with uncounted defer_count
+        blocks — a never-committed id must not leak to callers)."""
         with self._lock:
             df = self._buffer_df()
             if df is None:
@@ -819,7 +825,8 @@ class SparkMergeTree:
             # (bounded by partition cardinality, not data size), then one
             # part write per value. At scale a single partitionBy write
             # job plus per-directory footer stats would replace the loop;
-            # the manifest shape is identical either way.
+            # the manifest shape is identical either way. A buffer that
+            # evaluates to 0 rows yields no split and commits nothing.
             pcol = self._partition_col_expr()
             values = [r[0] for r in
                       df.select(pcol.alias("__p")).distinct().collect()]
@@ -828,54 +835,10 @@ class SparkMergeTree:
                  max(1, n_rows // max(1, len(values))))
                 for v in sorted(values, key=str)
             ]
-        # Two-stage commit so the INSERT is all-or-nothing even when the
-        # buffer splits into several partition parts: stage 1 writes every
-        # split's files (each split's CHECK/Enum validation rides its own
-        # write job inside _write_part and rolls back its files on
-        # violation); stage 2 appends ALL metas to the manifest in one
-        # locked save. A violation in ANY split therefore leaves the
-        # manifest untouched and every already-written sibling part dir
-        # deleted — the ClickHouse contract of validating the whole insert
-        # block before any part becomes visible, without a separate
-        # pre-scan over the buffer.
-        # A partitioned buffer whose frame evaluates to 0 rows (caller
-        # passed row_count as a non-empty marker) yields zero splits —
-        # nothing to write, same graceful no-op as the sequential loop.
-        if not splits:
-            return None
-        # Pre-allocate every split's part id in sorted-partition order
-        # (deterministic id↔partition mapping), then run the independent
-        # per-split write jobs CONCURRENTLY — each split writes its own
-        # part dir with its own uuid-named Observation, so a 5-partition
-        # insert costs ~max(split job) wall-clock instead of 5 sequential
-        # jobs (r13: the partitioned fixture family — q_attach_from,
-        # q_alter_ddl, partition ops — topped the bench on exactly this
-        # loop). run_concurrently returns results in INPUT order (manifest
-        # append order stays the sequential order) and drains on failure;
-        # ``written`` accumulates completion-side so the rollback sees
-        # every split that finished even when the ordered result list was
-        # never returned.
-        with self._lock:
-            ids = [self.manifest.allocate_part_id() for _ in splits]
-        metas = self._run_part_writes(
-            [(lambda pid=pid, sp=sp: self._write_part(
-                pid, sp[1], sp[2], partition=sp[0],
-                enforce_constraints=True))
-             for pid, sp in zip(ids, splits)])
-        part_id = None  # last APPENDED id — every meta can be 0-row
-        with self._lock:
-            for meta in metas:
-                if meta.row_count == 0:
-                    # possible only via an uncounted (defer_count) block
-                    # that evaluated empty: a 0-row part has None stats
-                    # and would poison pruning/TTL classification (the
-                    # zero-row rule of _rewrite_parts, applied to inserts)
-                    self._delete_part_dirs(meta)
-                    continue
-                self.manifest.append(meta)
-                part_id = meta.part_id
-            self.manifest.save()
-        return part_id
+        new = self._rewrite_parts([([], [
+            (partition, lambda d=d, n=n: (d, n))
+            for partition, d, n in splits])])
+        return new[-1].part_id if new else None
 
     def _delete_part_dirs(self, p: PartMeta) -> None:
         """Physically remove a part's data dir AND its projection dirs —
@@ -889,108 +852,111 @@ class SparkMergeTree:
         for ppath in (p.proj_paths or {}).values():
             shutil.rmtree(ppath, ignore_errors=True)
 
-    def _run_part_writes(self, thunks) -> list[PartMeta]:
-        """Run independent part-write thunks (each returns a PartMeta) as
-        CONCURRENT Spark jobs — the same job-level parallelism as flush's
-        split writes: per-part rewrites (mutations, TTL, FINAL merges,
-        backfills) are independent tasks in ClickHouse's background pool,
-        and Spark's scheduler happily overlaps jobs submitted from driver
-        threads. Results come back in input order. On any failure every
-        COMPLETED part dir is deleted before the first error re-raises —
-        the manifest never saw any of the new parts, so the table state
-        is untouched (flush's all-or-nothing write-stage contract)."""
+    def _rewrite_parts(self, plan, on_commit=None) -> list[PartMeta]:
+        """The write-and-commit primitive every newly written part runs
+        through: inserts (flush), merges, TTL, mutations and materialized
+        deletes (the reference's flush and ``perform_merge``,
+        src/merge_tree.cpp:69-91, :245-288).
+
+        ``plan`` is a list of ``(old_parts, outputs)`` entries. Each
+        output is a ``(partition, build)`` pair: ``build()`` returns the
+        ``(df, n_rows)`` written as one new part of that partition. An
+        entry removes ``old_parts`` and adds its outputs in ONE
+        ``Manifest.swap``: no output is a drop, one output a rewrite
+        (into the old parts' partition), several a partitioned INSERT.
+        An entry that removes no parts is an INSERT, so its writes
+        enforce the CHECK constraints — ClickHouse checks inserted rows
+        only, never rows a merge or mutation rewrites.
+
+        Part ids are allocated upfront in plan order, then every output
+        is written as a CONCURRENT Spark job (a single write runs inline,
+        no thread hop): independent part writes are ClickHouse's
+        background-pool tasks, and a 5-partition insert costs ~max(split
+        job) wall-clock instead of 5 sequential jobs. A failed write
+        deletes every completed new dir and commits nothing. Zero-row
+        outputs are deleted, never committed: a 0-row part has None stats
+        and would poison range pruning, TTL classification and merge
+        scoring. The entries then commit one at a time in plan order
+        (_swap_parts), so part ids and the manifest's version history are
+        bit-identical to running the entries one by one, and a crash
+        mid-batch leaves a committed prefix. Returns the committed new
+        parts in plan order."""
+        from clickhouse_mergetree_spark.parallel import run_concurrently
+
+        with self._lock:
+            ids = [[self.manifest.allocate_part_id() for _ in outputs]
+                   for _old, outputs in plan]
         written: list[PartMeta] = []
 
-        def wrap(fn):
-            def run() -> PartMeta:
-                m = fn()
-                written.append(m)  # list.append is atomic under the GIL
-                return m
-            return run
+        def write(pid, partition, build, insert) -> PartMeta:
+            m = self._write_part(pid, *build(), partition=partition,
+                                 enforce_constraints=insert)
+            written.append(m)  # list.append is atomic under the GIL
+            return m
 
-        from clickhouse_mergetree_spark.parallel import run_concurrently
+        jobs = [(lambda pid=pid, partition=partition, build=build,
+                 insert=not old: write(pid, partition, build, insert))
+                for (old, outputs), pids in zip(plan, ids)
+                for pid, (partition, build) in zip(pids, outputs)]
         try:
-            return run_concurrently([wrap(fn) for fn in thunks],
-                                    max_workers=min(8, len(thunks)))
+            metas = iter(run_concurrently(jobs,
+                                          max_workers=min(8, len(jobs))))
         except BaseException:
             # BaseException, not Exception: run_concurrently re-raises
             # KeyboardInterrupt etc. from worker thunks, and skipping the
             # cleanup would leak every completed part dir invisibly (the
-            # manifest never saw them) — same clause as _rewrite_parts
+            # manifest never saw them)
             for m in written:
                 self._delete_part_dirs(m)
             raise
+        entries = []
+        for old, outputs in plan:
+            new = [next(metas) for _ in outputs]
+            for m in new:
+                if m.row_count == 0:
+                    self._delete_part_dirs(m)
+            entries.append((old, [m for m in new if m.row_count > 0]))
+        self._swap_parts(entries, on_commit)
+        return [m for _old, new in entries for m in new]
 
-    def _rewrite_parts(self, plan, on_commit=None) -> list[PartMeta | None]:
-        """The rewrite-and-commit primitive every lifecycle rewrite runs
-        through (merges, TTL, mutations, materialized deletes, DROP
-        PARTITION, TRUNCATE — the reference's ``perform_merge``,
-        src/merge_tree.cpp:245-288).
+    def _swap_parts(self, entries, on_commit=None) -> None:
+        """Commit each ``(old_parts, new_parts)`` entry, in order, as ONE
+        locked ``Manifest.swap`` → ``on_commit(old_parts)`` →
+        lightweight-delete GC (a rewrite read through the masked path, so
+        it materialized the masks) → save. New parts are already on
+        disk; an entry that neither removes nor adds a part commits
+        nothing. After each commit the old dirs are deleted, unless
+        snapshots retain them; then, if the batch removed parts, one
+        ``vacuum()`` reclaims what fell out of the retention window (its
+        cutoff is at least every intermediate one).
 
-        ``plan`` is a list of ``(old_parts, build)`` entries: ``build()``
-        returns ``(df, n_rows)`` for the part that replaces ``old_parts``
-        (written into ``old_parts[0].partition``); ``build=None`` drops
-        ``old_parts`` with no replacement.
-
-        Part ids are allocated upfront in plan order and the writes run as
-        concurrent jobs (_run_part_writes — a failed write deletes every
-        completed new dir and commits nothing). The commits then run
-        sequentially in plan order, one locked swap (or, for a drop or a
-        ZERO-row output, a remove: a 0-row part has None stats and would
-        poison range pruning, TTL classification and merge scoring) →
-        ``on_commit(old_parts)`` → lightweight-delete GC (the rewrite read
-        through the masked path, so it materialized the masks) → save per
-        entry. So part ids and the manifest's version history are
-        bit-identical to running the entries one at a time, and a crash
-        mid-batch leaves a committed prefix. After each commit the old
-        dirs are deleted, unless snapshots retain them; then one
-        ``vacuum()`` at the end reclaims what fell out of the retention
-        window (its cutoff is at least every intermediate one).
-
-        A failed commit deletes the new dirs whose commit was never
-        ATTEMPTED — no reclaim path can see them — before re-raising. The
-        attempted-but-failed one is left alone: its in-memory manifest
-        state is ambiguous, exactly the sequential loop's worst case.
-        Returns one PartMeta per entry (None for drops)."""
+        A failed commit deletes the new dirs of the entries whose commit
+        was never ATTEMPTED — no reclaim path can see them — before
+        re-raising. The attempted-but-failed one is left alone: its
+        in-memory manifest state is ambiguous, exactly the one-by-one
+        loop's worst case."""
         retain = self.config.snapshot_retention > 0
-        with self._lock:
-            ids = [None if build is None else self.manifest.allocate_part_id()
-                   for _old, build in plan]
-        metas = self._run_part_writes([
-            (lambda pid=pid, old=old, build=build: self._write_part(
-                pid, *build(), partition=old[0].partition))
-            for pid, (old, build) in zip(ids, plan) if build is not None])
-        out: list[PartMeta | None] = []
-        attempted = 0
-        try:
-            for old, build in plan:
-                new = None
-                if build is not None:
-                    new = metas[attempted]
-                    attempted += 1
-                out.append(new)
-                old_ids = [p.part_id for p in old]
+        for i, (old, new) in enumerate(entries):
+            if not old and not new:
+                continue
+            try:
                 with self._lock:
-                    if new is not None and new.row_count > 0:
-                        self.manifest.swap(old_ids, new, retain=retain)
-                    else:
-                        self.manifest.remove(old_ids, retain=retain)
-                        if new is not None:
-                            self._delete_part_dirs(new)
+                    self.manifest.swap([p.part_id for p in old], new,
+                                       retain=retain)
                     if on_commit is not None:
                         on_commit(old)
                     self._gc_lw_deletes()
                     self.manifest.save()
-                if not retain:
-                    for p in old:
-                        self._delete_part_dirs(p)
-        except BaseException:
-            for m in metas[attempted:]:
-                self._delete_part_dirs(m)
-            raise
-        if retain:
+            except BaseException:
+                for _old, later in entries[i + 1:]:
+                    for m in later:
+                        self._delete_part_dirs(m)
+                raise
+            if not retain:
+                for p in old:
+                    self._delete_part_dirs(p)
+        if retain and any(old for old, _new in entries):
             self.vacuum()
-        return out
 
     def _single_task(self, df: DataFrame, n_rows: int | None,
                      probe: bool = False) -> DataFrame:
@@ -1602,7 +1568,7 @@ class SparkMergeTree:
 
         The rejected buffered batch is discarded — the caller fixes and
         re-inserts. On a partitioned table the whole flush is one
-        all-or-nothing commit (flush's two-stage commit): a violation in
+        all-or-nothing commit (one _rewrite_parts entry): a violation in
         any partition split leaves the manifest untouched and deletes
         every sibling split's files."""
         self._empty_df().filter(F.expr(expr_sql)).schema
@@ -1940,19 +1906,11 @@ class SparkMergeTree:
         (ADVICE r4 medium). Callers therefore never know which path ran;
         on insert-unique data (the documented ProjectionSpec assumption)
         physical and logical aggregation coincide."""
-        req = set(group_by)
-        best = None
-        if not self.row_policies():  # policies force the raw path below
-            for s in self.config.projections:
-                if s.order_by:
-                    continue  # sort projections have no grouped form
-                if req <= set(s.group_by) and all(
-                        out in s.aggs and s.aggs[out] == d
-                        for out, d in aggs.items()):
-                    if best is None or len(s.group_by) < len(best.group_by):
-                        best = s
+        # row policies force the raw path below
+        best = (None if self.row_policies()
+                else self.routed_projection(group_by, aggs))
         if best is not None:
-            return (self.query_projection(best.name, group_by)
+            return (self.query_projection(best, group_by)
                     .select(*group_by, *aggs))
         spec = ProjectionSpec("adhoc", tuple(group_by), dict(aggs))
         with self._lock:
@@ -1970,7 +1928,10 @@ class SparkMergeTree:
 
     def routed_projection(self, group_by: tuple[str, ...],
                           aggs: dict[str, tuple[str, str]]) -> str | None:
-        """Which projection query_grouped would use (introspection/tests)."""
+        """The projection query_grouped serves ``group_by``/``aggs`` from
+        when no row policy is active: the smallest covering aggregate
+        projection (first declared on a tie), or None. Sort projections
+        have no grouped form."""
         req = set(group_by)
         covering = [s for s in self.config.projections
                     if not s.order_by
@@ -2115,6 +2076,13 @@ class SparkMergeTree:
         (buffered rows of the partition are dropped too). Returns rows
         removed. Serialized against merges like expire()."""
         self._require_partitioning()
+        return self._replace_partition(value, [])
+
+    def _replace_partition(self, value, take: list[PartMeta]) -> int:
+        """Drop partition ``value`` — its buffered rows, then its live
+        parts — and add hardlinked copies of ``take`` (parts of another
+        table) in ONE manifest swap, so no version shows the partition
+        both gone and not yet replaced. Returns rows removed."""
         self._resolve_deferred()  # buffered filtering needs exact counts
         pc = self.config.partition_col
         if pc is None:
@@ -2132,10 +2100,10 @@ class SparkMergeTree:
                     removed += self._filter_buffer(
                         lambda r: str(r[ix]) != str(value),
                         ~F.col(pc).eqNullSafe(value))
-                if victims:
-                    # inside the buffer's lock section: no reader sees
-                    # the buffered rows gone while the parts are live
-                    self._rewrite_parts([(victims, None)])
+                # inside the buffer's lock section: no reader sees the
+                # buffered rows gone while the parts are live
+                self._swap_parts([(victims, [self._copy_in(p.path, asdict(p))
+                                             for p in take])])
             return removed
 
     def truncate(self) -> int:
@@ -2160,8 +2128,7 @@ class SparkMergeTree:
                 self._buffer_rows = []
                 self._buffer_dfs = []
                 self._buffer_count = 0
-                if victims:
-                    self._rewrite_parts([(victims, None)])
+                self._swap_parts([(victims, [])])
             return removed
 
     def detach_partition(self, value) -> int:
@@ -2194,7 +2161,7 @@ class SparkMergeTree:
                     os.rename(p.path, new_path)
                     p.path = new_path
                     parked.append(asdict(p))
-                self.manifest.remove([p.part_id for p in victims])
+                self.manifest.swap([p.part_id for p in victims], [])
                 self.manifest.save()
                 return sum(p.row_count for p in victims)
 
@@ -2218,11 +2185,10 @@ class SparkMergeTree:
                                                 base[len("detached_"):])
                         os.rename(p.path, new_path)
                         p.path = new_path
-                    self.manifest.append(p)
                 taken = {p.part_id for p in take}
                 self.manifest.table_meta["detached"] = [
                     asdict(p) for p in parked if p.part_id not in taken]
-                self.manifest.save()
+                self._swap_parts([([], take)])
                 return sum(p.row_count for p in take)
 
     def attach_partition_from(self, src: "SparkMergeTree", value,
@@ -2248,15 +2214,16 @@ class SparkMergeTree:
         with the part verbatim; projection partials are table-scoped and
         are rebuilt lazily at the next rewrite.
 
-        With ``replace=True`` the destination partition is dropped first
-        (two manifest commits; a concurrent reader between them sees the
-        partition briefly absent, never doubled). Returns
-        rows attached. O(files) metadata + link work at any table size —
-        the 100 TB backfill path (stage into a scratch table, validate,
-        swap) never rewrites data."""
+        The copies arrive in ONE manifest commit. With ``replace=True``
+        the destination partition's buffered rows are dropped first, and
+        its live parts leave in that same commit — no version shows the
+        partition absent or doubled. Returns rows attached. O(files)
+        metadata + link work at any table size — the 100 TB backfill path
+        (stage into a scratch table, validate, swap) never rewrites
+        data."""
         if src is self:
-            # self-attach would double rows; self-REPLACE would drop the
-            # partition and then link from the just-deleted part dirs
+            # self-attach would double rows; self-REPLACE would copy the
+            # partition onto itself for nothing
             raise ValueError("source and destination are the same table")
         self._require_partitioning()
         if (src.config.partition_col != self.config.partition_col
@@ -2281,29 +2248,25 @@ class SparkMergeTree:
                 "source partition has pending ALTER/TTL/delete transforms; "
                 "run src.optimize() first")
         if replace:
-            # REPLACE = drop-then-attach; drop_partition serializes on the
-            # merge lock itself, so it runs before we take it here
-            self.drop_partition(value)
-        with self._merge_lock:
-            with self._lock:
-                rows = sum(self._copy_in(p.path, asdict(p)).row_count
-                           for p in take)
-                self.manifest.save()
-        return rows
+            self._replace_partition(value, take)
+        else:
+            with self._merge_lock:
+                with self._lock:
+                    self._swap_parts([([], [self._copy_in(p.path, asdict(p))
+                                            for p in take])])
+        return sum(p.row_count for p in take)
 
     def _copy_in(self, src_dir: str, doc: dict) -> PartMeta:
         """Hardlink ``src_dir``'s files into a fresh part of this table and
-        append ``doc`` (a part's metadata) under the new id and path. The
-        projection partials are table-scoped and not copied: they are
-        rebuilt at the part's next rewrite. Caller holds _merge_lock and
-        _lock, and saves."""
+        return ``doc`` (a part's metadata) under the new id and path, for
+        the caller to commit. The projection partials are table-scoped
+        and not copied: they are rebuilt at the part's next rewrite.
+        Caller holds _merge_lock and _lock."""
         new_id = self.manifest.allocate_part_id()
         new_path = os.path.join(self.base_path, f"part_{new_id}")
         _link_files(src_dir, new_path)
-        meta = PartMeta(**{**doc, "part_id": new_id, "path": new_path,
+        return PartMeta(**{**doc, "part_id": new_id, "path": new_path,
                            "proj_paths": None})
-        self.manifest.append(meta)
-        return meta
 
     def move_partition_to(self, dst: "SparkMergeTree", value) -> int:
         """``ALTER TABLE src MOVE PARTITION ... TO TABLE dst`` analog —
@@ -2398,12 +2361,12 @@ class SparkMergeTree:
             doc = json.load(f)
         with self._merge_lock:
             with self._lock:
-                rows = sum(
-                    self._copy_in(os.path.join(
-                        shadow, os.path.basename(pd["path"])), pd).row_count
-                    for pd in doc["parts"])
-                self.manifest.save()
-        return {"parts_restored": len(doc["parts"]), "rows": rows}
+                new = [self._copy_in(os.path.join(
+                    shadow, os.path.basename(pd["path"])), pd)
+                    for pd in doc["parts"]]
+                self._swap_parts([([], new)])
+        return {"parts_restored": len(new),
+                "rows": sum(p.row_count for p in new)}
 
     def _lw_entries(self, lw_version: int | None = None) -> list[dict]:
         """Live lightweight-delete entries, optionally restricted to those
@@ -2928,22 +2891,17 @@ class SparkMergeTree:
                 best = candidates[0]
                 selected = [p for p in self.manifest.parts
                             if p.part_id in best.part_ids]
-            self._merge_group(selected)
+            self._merge_groups([selected])
             return True
-
-    def _merge_group(self, selected: list[PartMeta]) -> None:
-        """One merge job over an explicit part group: read (through the
-        masked/evolved read path, so lightweight-delete masks and ALTER
-        defaults materialize) → mode collapse → sorted part write →
-        atomic manifest swap → reclaim. Caller holds _merge_lock."""
-        self._merge_groups([selected])
 
     def _merge_groups(self, groups: list[list[PartMeta]],
                       transform=None) -> list[PartMeta]:
-        """N independent merge jobs over DISJOINT part groups (FINAL's
-        per-partition merges, pending-transform rewrites, dedup passes),
-        written concurrently and committed in group order
-        (_rewrite_parts). ``transform`` (optional) maps the collapsed
+        """N independent merge jobs over DISJOINT part groups (a scheduled
+        merge, FINAL's per-partition merges, pending-transform rewrites,
+        dedup passes): each group is read through the masked/evolved read
+        path, so lightweight-delete masks and ALTER defaults materialize,
+        then mode-collapsed, written concurrently and committed in group
+        order (_rewrite_parts). ``transform`` (optional) maps the collapsed
         frame before the write — OPTIMIZE ... DEDUPLICATE's extra dedup
         step. Caller holds _merge_lock."""
         def merged(group: list[PartMeta]) -> tuple[DataFrame, int]:
@@ -2957,7 +2915,8 @@ class SparkMergeTree:
             return df, sum(p.row_count for p in group)
 
         return self._rewrite_parts(
-            [(g, lambda g=g: merged(g)) for g in groups])
+            [(g, [(g[0].partition, lambda g=g: merged(g))])
+             for g in groups])
 
     def _parts_with_pending_transforms(
             self, include_masks: bool) -> list[PartMeta]:
@@ -3018,7 +2977,7 @@ class SparkMergeTree:
                             target = [pending[0]] if pending else None
                     if target is None:
                         return
-                    self._merge_group(target)
+                    self._merge_groups([target])
         if final:
             # Partitions merge independently (merges never cross them),
             # and single-part pending-transform rewrites touch disjoint
@@ -3162,13 +3121,12 @@ class SparkMergeTree:
 
             # whole-part drops are one metadata-only commit; straddling
             # parts get one filtered rewrite each
-            plan = [(drop, None)] if drop else []
-            plan += [([p], lambda p=p: (
+            plan = [(drop, [])] if drop else []
+            plan += [([p], [(p.partition, lambda p=p: (
                 self._read_parts([p]).filter(
-                    F.col(self._ts) >= F.lit(before_ts)), p.row_count))
+                    F.col(self._ts) >= F.lit(before_ts)), p.row_count))])
                 for p in rewrite]
-            kept = sum(m.row_count for m in self._rewrite_parts(plan)
-                       if m is not None)
+            kept = sum(m.row_count for m in self._rewrite_parts(plan))
             rows_removed = (removed_buf - kept
                             + sum(p.row_count for p in drop + rewrite))
 
@@ -3249,8 +3207,8 @@ class SparkMergeTree:
             # partition groups roll up independently
             olds = list(groups.values())
             metas = self._rewrite_parts([
-                (parts, lambda parts=parts: (
-                    rollup_df(parts), sum(p.row_count for p in parts)))
+                (parts, [(parts[0].partition, lambda parts=parts: (
+                    rollup_df(parts), sum(p.row_count for p in parts)))])
                 for parts in olds])
             return {"parts_replaced": sum(len(g) for g in olds),
                     "rows_before": sum(p.row_count for g in olds for p in g),
@@ -3879,8 +3837,9 @@ class SparkMergeTree:
                 return new_df
 
             self._rewrite_parts([
-                ([p], lambda src=src, p=p, full=full, straddle=straddle: (
-                    rewrite_df(src, full, straddle), p.row_count))
+                ([p], [(p.partition,
+                        lambda src=src, p=p, full=full, straddle=straddle: (
+                            rewrite_df(src, full, straddle), p.row_count))])
                 for src, (p, full, straddle) in zip(srcs, todo)])
             # tombstoned snapshot parts: mark fully-expired columns so
             # time-travel reads observe post-TTL values instead of leaking
@@ -4009,7 +3968,7 @@ class SparkMergeTree:
                 rows_affected += n_match
                 if assignments is None and n_match == p.row_count:
                     # whole part deleted: metadata-only, no write job
-                    plan.append(([p], None))
+                    plan.append(([p], []))
                     continue
                 src = self._read_parts([p])
                 if assignments is None:
@@ -4019,7 +3978,7 @@ class SparkMergeTree:
                         c: F.when(hit, e).otherwise(F.col(c)).cast(
                             self.schema[c].dataType)
                         for c, e in assignments.items()}), p.row_count)
-                plan.append(([p], lambda new=new: new))
+                plan.append(([p], [(p.partition, lambda new=new: new)]))
             self._rewrite_parts(plan, on_commit=_done)
             with self._lock:
                 self.manifest.table_meta.pop("active_mutation", None)
@@ -4080,7 +4039,7 @@ class SparkMergeTree:
             with self._lock:
                 lw = self.manifest.table_meta.setdefault("lw_deletes", [])
                 eid = max((e["id"] for e in lw), default=0) + 1
-                self.manifest.commit_meta()
+                self.manifest.swap([], [])
                 entry = {
                     "id": eid,
                     "pred": pred_sql,
@@ -4132,8 +4091,8 @@ class SparkMergeTree:
                                       if i not in clean_ids]
                     self._gc_lw_deletes()
                     self.manifest.save()
-            plan = [([p], None if n == 0 else
-                     (lambda p=p, n=n: (self._read_parts([p]), n)))
+            plan = [([p], [] if n == 0 else [(
+                p.partition, lambda p=p, n=n: (self._read_parts([p]), n))])
                     for p, n in zip(cands, kepts) if n != p.row_count]
             rows_removed = sum(p.row_count - n for p, n in zip(cands, kepts))
             self._rewrite_parts(plan)
@@ -4362,7 +4321,7 @@ class SparkMergeTree:
                     raise ValueError(
                         f"mutation {mutation_id} is already done or "
                         "killed")
-                self.manifest.commit_meta()
+                self.manifest.swap([], [])
                 live = {p.part_id for p in self.manifest.parts}
                 unmasked = len(live.intersection(entry["parts"]))
                 if self.config.snapshot_retention > 0:

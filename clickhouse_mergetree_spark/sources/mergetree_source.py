@@ -420,7 +420,9 @@ def _publish_part(path: str, staging: str, messages,
     """Commit side of a part write (driver/runner process, single-writer):
     move the staged task files into ``part_<id>/`` and publish ONE manifest
     entry with write-temp-then-replace — readers see the whole insert or
-    none of it (the engine's R16/R33 commit discipline).
+    none of it (the engine's R16/R33 commit discipline). The publish is
+    one manifest version, logged like the engine's commits, so time
+    travel reads it back.
 
     ``batch_id`` makes streaming commits idempotent: a replayed micro-batch
     (restart between sink commit and checkpoint advance) finds its id in
@@ -473,6 +475,11 @@ def _publish_part(path: str, staging: str, messages,
             "disk_size": sum(m.n_bytes for m in msgs),
             "created_at": time.time(),
         })
+    # one versioned commit, as Manifest._commit logs it: the live part
+    # ids under a bumped version, the log capped at 256 entries
+    doc["version"] = doc.get("version", 0) + 1
+    doc["log"] = (doc.get("log", []) + [
+        [doc["version"], [p["part_id"] for p in doc["parts"]]]])[-256:]
     # atomic write-temp-then-replace, same rule as engine/manifest.py
     tmp = mf + ".tmp"
     with open(tmp, "w") as f:

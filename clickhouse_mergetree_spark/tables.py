@@ -101,10 +101,6 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLE_NAMES}
-
-
 _VIEWS_KEY = "spark_graft.registered_views_sf"
 
 

@@ -55,6 +55,35 @@ def test_worse_beyond_bound_in_either_direction_is_flagged():
     assert all(x["pairs"] == 10 and x["wins"] == 0 for x in v.values())
 
 
+def test_gain_needs_nine_in_ten_wins_and_a_gap_past_the_spread():
+    parent = [_result(1.0 + i / 100, 100.0 + i, 500.0) for i in range(10)]
+    # main: pairs 0-8 are 0.2 s faster, past the parent's q3 - q1
+    # (0.055 s); pair 9 is a tie, which counts for neither side
+    change = [_result((0.8 if i < 9 else 1.0) + i / 100, 100.0 + i,
+                      500.0 - i) for i in range(10)]
+    v = ab.verdict(METRICS, _pairs(parent, change))
+    assert v["main_p50_s"]["wins"] == 9 and v["main_p50_s"]["gain"]
+    # throughput: every pair a tie, so no wins and no gain
+    assert v["throughput_per_s"]["wins"] == 0
+    assert not v["throughput_per_s"]["gain"]
+    # memory: pair 0 ties and the other 9 win; the parent's spread is 0,
+    # so the 4.5 MB median gap is a gain
+    assert v["retained_mb"]["wins"] == 9 and v["retained_mb"]["gain"]
+    # one lost pair more (8 of 10 wins) is no gain, however large the gap
+    change[0] = _result(1.5, 100.0, 500.0)
+    v = ab.verdict(METRICS, _pairs(parent, change))
+    assert v["main_p50_s"]["wins"] == 8 and not v["main_p50_s"]["gain"]
+
+
+def test_gain_needs_a_gap_past_the_parents_spread():
+    # 10 of 10 wins by 0.01 s, inside the parent's q3 - q1 of 0.55 s
+    parent = [_result(1.0 + i / 10, 100.0, 500.0) for i in range(10)]
+    change = [_result(0.99 + i / 10, 100.0, 500.0) for i in range(10)]
+    v = ab.verdict(METRICS, _pairs(parent, change))
+    assert v["main_p50_s"]["wins"] == 10
+    assert not v["main_p50_s"]["gain"]
+
+
 def test_failed_runs_are_reported_and_skipped():
     parent = [_result(1.0, 100.0, 500.0), _result(1.0, 100.0, 500.0),
               _result(1.0, 100.0, 500.0)]

@@ -102,6 +102,50 @@ def test_replace_from_swaps_partition(spark, bases):
     src.close(); dst.close()
 
 
+def _three_parts(t, bucket):
+    for lo in (0, 5, 10):
+        t.insert_rows(_rows(lo, lo + 5, bucket))
+        t.flush()
+
+
+def test_attach_from_of_three_parts_is_one_version(spark, bases):
+    src, dst = _mk(spark, bases[0]), _mk(spark, bases[1])
+    _three_parts(src, "a")
+    v = dst.current_version()
+    assert dst.attach_partition_from(src, "a") == 15
+    assert dst.current_version() == v + 1
+    assert dst.query_at_version(v + 1).count() == 15
+    src.close(); dst.close()
+
+
+def test_attach_partition_is_one_version(spark, bases):
+    t = _mk(spark, bases[0])
+    _three_parts(t, "a")
+    assert t.detach_partition("a") == 15
+    v = t.current_version()
+    assert t.attach_partition("a") == 15
+    assert t.current_version() == v + 1
+    assert t.query_at_version(v + 1).count() == 15
+    t.close()
+
+
+def test_replace_from_is_one_version_never_empty(spark, bases):
+    """REPLACE PARTITION drops the old parts and adds the copies in one
+    commit: no logged version shows the partition empty."""
+    src = _mk(spark, bases[0])
+    dst = _mk(spark, bases[1], snapshot_retention=10)
+    _three_parts(src, "a")
+    dst.insert_rows(_rows(50, 60, "a"))
+    dst.flush()
+    v = dst.current_version()
+    dst.attach_partition_from(src, "a", replace=True)
+    assert dst.current_version() == v + 1
+    assert _keys(dst.query_all()) == list(range(15))
+    for version, _ids in dst.manifest.log:
+        assert dst.query_at_version(version).count() > 0
+    src.close(); dst.close()
+
+
 def test_attach_from_refuses_structure_mismatch(spark, bases):
     src = _mk(spark, bases[0])
     other_schema = T.StructType([

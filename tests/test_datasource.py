@@ -199,6 +199,27 @@ def test_write_overwrite_truncates(spark):
     assert len([d for d in os.listdir(base) if d.startswith("part_")]) == 1
 
 
+@pytest.mark.parametrize("mode,expected", [("append", 15),
+                                           ("overwrite", 5)])
+def test_write_commits_a_version(spark, mode, expected):
+    """A connector write is a manifest version: time travel to the
+    current version reads what a plain read of the table reads."""
+    base = tempfile.mkdtemp(prefix="ds_wv_")
+    register_mergetree(spark)
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**12)
+    with SparkMergeTree(spark, base, config=cfg) as t:
+        t.insert_rows([(f"a{i}", "v", i) for i in range(10)])
+        t.flush()
+        before = t.current_version()
+    (spark.createDataFrame([(f"b{i}", "v", i) for i in range(5)],
+                           "key string, value string, timestamp long")
+     .write.format("mergetree").option("path", base).mode(mode).save())
+    with SparkMergeTree(spark, base, config=cfg) as t:
+        assert t.current_version() == before + 1
+        assert t.query_all().count() == expected
+        assert t.query_at_version(t.current_version()).count() == expected
+
+
 def test_write_manifest_stats_drive_pruning(spark):
     base = tempfile.mkdtemp(prefix="ds_w3_")
     register_mergetree(spark)

@@ -84,6 +84,18 @@ def test_restore_is_additive_under_fresh_ids(table):
     assert sum(p.row_count for p in table.manifest.parts) == 40
 
 
+def test_restore_of_three_parts_is_one_version(table):
+    for lo in (0, 10, 20):
+        _flush(table, lo, lo + 10)
+    table.freeze_partition(backup_name="three")
+    table.truncate()
+    v = table.current_version()
+    assert table.restore_frozen("three") == {"parts_restored": 3,
+                                             "rows": 30}
+    assert table.current_version() == v + 1
+    assert table.query_at_version(v + 1).count() == 30
+
+
 def test_freeze_partition_scope(spark, base):
     schema = T.StructType([
         T.StructField("key", T.LongType(), False),

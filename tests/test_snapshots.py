@@ -138,3 +138,18 @@ def test_snapshots_persist_across_reopen(spark):
             t2.close()
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_partitioned_insert_is_one_version(spark):
+    """An INSERT over 3 partitions writes 3 parts in ONE commit: no
+    version holds some of its partitions without the others."""
+    t, base = _table(spark, retention=10, partition_col="value")
+    try:
+        t.insert_rows([(f"k{k:04d}", f"p{k % 3}", 1) for k in range(30)])
+        t.flush()
+        assert t.part_count() == 3
+        assert t.current_version() == 1
+        assert t.query_at_version(1).count() == 30
+    finally:
+        t.close()
+        shutil.rmtree(base, ignore_errors=True)

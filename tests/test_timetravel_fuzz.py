@@ -1,9 +1,15 @@
 """Randomized time-travel fuzz: every committed version replays exactly.
 
 Seeded walks of insert / lightweight delete / row TTL / UPDATE mutation /
-optimize / FINAL on a snapshot-retaining table; after each op the model
-state is recorded against ``current_version()``, and at the end EVERY
-recorded version is read back via ``query_at_version`` and compared.
+optimize / FINAL on a snapshot-retaining table, unpartitioned and
+partitioned; after each op the model state is recorded against
+``current_version()``, and at the end EVERY recorded version is read
+back via ``query_at_version`` and compared. Every other version in the
+manifest log must read back as the state before or after the op that
+committed it — an INSERT over several partitions is one commit, never a
+half-applied snapshot — except inside an UPDATE or row-TTL pass, which
+commits part by part: there a version is a prefix of the op (every row
+is the row before or after it, and no row the op keeps is missing).
 Pins the version-consistency contract across the whole data-op surface:
 lw masks are version-gated, expired/mutated/merged-away parts stay
 readable as tombstones, and vacuumless retention keeps all of it exact.
@@ -31,12 +37,15 @@ CFG = dict(memtable_flush_threshold=10**9, max_parts=4,
            key_col="key", ts_col="ts", snapshot_retention=50)
 
 
-@pytest.mark.parametrize("seed", range(5))
-def test_timetravel_fuzz(spark, seed):
+@pytest.mark.parametrize("seed,partition_expr", [
+    *[pytest.param(s, None, id=str(s)) for s in range(5)],
+    *[pytest.param(s, "key % 3", id=f"{s}-partitioned") for s in range(5)]])
+def test_timetravel_fuzz(spark, seed, partition_expr):
     rng = random.Random(3000 + seed)
     base = tempfile.mkdtemp(prefix="ttfuzz_tbl_")
     t = SparkMergeTree(spark, base, schema=SCHEMA,
-                       config=MergeTreeConfig(**CFG))
+                       config=MergeTreeConfig(
+                           **CFG, partition_expr=partition_expr))
     rows: dict = {}
     nk = 0
     snaps = []
@@ -75,11 +84,24 @@ def test_timetravel_fuzz(spark, seed):
             t.flush()
             snaps.append((t.current_version(),
                           sorted((k, ts, v)
-                                 for (k, ts), v in rows.items())))
-        for ver, want in snaps:
-            got = sorted(tuple(r)
-                         for r in t.query_at_version(ver).collect())
-            assert got == want, f"version {ver} diverged"
+                                 for (k, ts), v in rows.items()), op))
+        def read(ver):
+            return sorted(tuple(r)
+                          for r in t.query_at_version(ver).collect())
+
+        for ver, want, _op in snaps:
+            assert read(ver) == want, f"version {ver} diverged"
+        for ver, _ids in t.manifest.log:
+            i = next(i for i, (v, _, _) in enumerate(snaps) if v >= ver)
+            got, (_, after, op) = read(ver), snaps[i]
+            before = snaps[i - 1][1] if i else []
+            if op in ("update", "expire"):
+                keys = {r[:2] for r in got}
+                assert ({r[:2] for r in after} <= keys
+                        <= {r[:2] for r in before}), f"version {ver}"
+                assert set(got) <= set(before) | set(after), f"version {ver}"
+            else:
+                assert got in (before, after), f"version {ver} is no state"
     finally:
         t.close()
         shutil.rmtree(base, ignore_errors=True)

@@ -10,9 +10,12 @@ seed: the parent on the first seed, the change on the second, and so on.
 Each run's last stdout line is its result.
 
 Prints every pair, then per workload and end-to-end metric both medians
-with their quartiles, how many pairs the change won, and whether the
+with their quartiles, how many pairs the change won, whether the
 change's median is worse than the parent's by more than the metric's
-``bound`` (a share of the parent's median). Every run's ``correct`` and
+``bound`` (a share of the parent's median), and whether the change shows
+a gain: it won at least nine in ten pairs (a tie counts for neither
+side) and its median is better than the parent's by more than the
+parent's quartile spread (q3 - q1). Every run's ``correct`` and
 ``failed`` are printed too. Exits 1 when a metric is worse beyond its
 bound, a run failed, or a run counted a failed operation.
 
@@ -60,8 +63,9 @@ def run_once(spec: dict, checkout: str, wl: str, seed: int) -> dict:
 def verdict(metrics: list[dict], pairs: list[dict]) -> dict:
     """Per end-to-end metric: both sides' median and quartiles, the
     change's wins over the pairs, its median change as a share of the
-    parent's median (positive = worse), and whether that exceeds the
-    metric's bound. ``pairs`` are ``{"parent": result, "change": result}``
+    parent's median (positive = worse), whether that exceeds the
+    metric's bound, and whether the change shows a ``gain`` (at least
+    9 wins in 10 pairs and a median gap past the parent's q3 - q1). ``pairs`` are ``{"parent": result, "change": result}``
     with ``result["metrics"][name]["value"]``; a pair with a missing
     result is skipped."""
     done = [p for p in pairs if p["parent"] and p["change"]]
@@ -73,12 +77,15 @@ def verdict(metrics: list[dict], pairs: list[dict]) -> dict:
         par, chg = summarise(vals["parent"]), summarise(vals["change"])
         worse = (sign * (chg["median"] - par["median"]) / par["median"]
                  if par["median"] else 0.0)
+        wins = sum(sign * (c - p) < 0 for p, c in
+                   zip(vals["parent"], vals["change"]))
+        gap = sign * (par["median"] - chg["median"])
         out[name] = {
-            "parent": par, "change": chg,
-            "wins": sum(sign * (c - p) < 0 for p, c in
-                        zip(vals["parent"], vals["change"])),
+            "parent": par, "change": chg, "wins": wins,
             "pairs": len(done), "worse_share": worse,
-            "beyond_bound": "bound" in m and worse > m["bound"]}
+            "beyond_bound": "bound" in m and worse > m["bound"],
+            "gain": (10 * wins >= 9 * len(done)
+                     and gap > par["q3"] - par["q1"])}
     return out
 
 
@@ -147,7 +154,8 @@ def main(argv: list[str] | None = None) -> int:
                   f"{'worse' if v['worse_share'] > 0 else 'better'}, "
                   f"change better in "
                   f"{v['wins']}/{v['pairs']}"
-                  + ("; WORSE BEYOND BOUND" if v["beyond_bound"] else ""))
+                  + ("; WORSE BEYOND BOUND" if v["beyond_bound"] else "")
+                  + ("; GAIN" if v["gain"] else "; no gain"))
         pairs += wl_pairs
     bad = failures(pairs)
     for b in bad:
