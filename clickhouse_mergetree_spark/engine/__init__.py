@@ -4,8 +4,8 @@ Reference identity (SURVEY §1): memtable + immutable sorted columnar parts +
 manifest metadata + background compaction. Spark mapping: a driver-side row
 buffer (memtable analog), Parquet part directories written key-sorted
 (repartitionByRange + sortWithinPartitions), a JSON manifest carrying the
-reference's part metadata (R24), and a compaction job scored with the
-reference's formula (R29).
+reference's part metadata (R24), and a compaction job over adjacent
+runs of parts in insert order (R29; merger.py records the deviation).
 """
 
 from clickhouse_mergetree_spark.engine.ddl import (
@@ -23,10 +23,7 @@ from clickhouse_mergetree_spark.engine.merge_tree import (
     ProjectionSpec,
     SparkMergeTree,
 )
-from clickhouse_mergetree_spark.engine.merger import (
-    calculate_merge_score,
-    select_merge_candidates,
-)
+from clickhouse_mergetree_spark.engine.merger import select_merge_candidates
 from clickhouse_mergetree_spark.engine.sharded import ShardedMergeTree
 
 __all__ = [
@@ -39,7 +36,6 @@ __all__ = [
     "ProjectionSpec",
     "ShardedMergeTree",
     "SparkMergeTree",
-    "calculate_merge_score",
     "create_materialized_view_from_ddl",
     "create_table_from_ddl",
     "execute_ddl",

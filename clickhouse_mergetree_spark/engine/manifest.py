@@ -5,7 +5,7 @@ and directory-scan recovery (src/merge_tree.cpp:164-197) with one JSON
 manifest per table, Delta-style. Carries exactly the reference's metadata
 fields (src/part.h:12-26): part id, min/max key, min/max timestamp, row
 count, disk size, creation time — these drive part-level query pruning (R8)
-and compaction scoring (R29) without touching data files.
+and merge selection (R29) without touching data files.
 
 Swap atomicity (R33): write-temp-then-``os.replace`` — readers of the old
 manifest keep a consistent view because parts are immutable; single-writer
@@ -170,6 +170,22 @@ class PartMeta:
     # (JSON-safe); the membership check canonicalizes the probe the same
     # way. None/missing col ⇒ no claim.
     col_sets: dict | None = None
+    # Insert span (ClickHouse block numbers — extension): the inserts this
+    # part holds, as the first and last part id an INSERT wrote them
+    # under. A merge or rewrite of parts takes the union of their spans;
+    # the merge selector orders a partition's parts by it. None = not
+    # recorded (legacy manifest, manifest-less recovery, connector
+    # write) ⇒ the part spans its own id — see ``blocks``.
+    min_block: int | None = None
+    max_block: int | None = None
+
+    @property
+    def blocks(self) -> tuple[int, int]:
+        """``(min_block, max_block)``, or ``(part_id, part_id)`` when
+        the span was never recorded."""
+        if self.min_block is None or self.max_block is None:
+            return self.part_id, self.part_id
+        return self.min_block, self.max_block
 
     def may_match_range(self, col: str, lo, hi) -> bool:
         """minmax skip check: False ⇒ no row of this part has col in

@@ -876,7 +876,7 @@ class SparkMergeTree:
         deletes every completed new dir and commits nothing. Zero-row
         outputs are deleted, never committed: a 0-row part has None stats
         and would poison range pruning, TTL classification and merge
-        scoring. The entries then commit one at a time in plan order
+        selection. The entries then commit one at a time in plan order
         (_swap_parts), so part ids and the manifest's version history are
         bit-identical to running the entries one by one, and a crash
         mid-batch leaves a committed prefix. Returns the committed new
@@ -934,11 +934,24 @@ class SparkMergeTree:
         was never ATTEMPTED — no reclaim path can see them — before
         re-raising. The attempted-but-failed one is left alone: its
         in-memory manifest state is ambiguous, exactly the one-by-one
-        loop's worst case."""
+        loop's worst case.
+
+        This is also where a new part gets its insert span
+        (``PartMeta.blocks``): an entry that removes parts and adds one
+        (a merge, mutation, TTL rewrite or a one-part REPLACE) gives it
+        the union of the removed spans; every other new part (an INSERT
+        split, ATTACH, ATTACH FROM or RESTORE) spans its own id."""
         retain = self.config.snapshot_retention > 0
         for i, (old, new) in enumerate(entries):
             if not old and not new:
                 continue
+            if old and len(new) == 1:
+                spans = [p.blocks for p in old]
+                new[0].min_block = min(lo for lo, _hi in spans)
+                new[0].max_block = max(hi for _lo, hi in spans)
+            else:
+                for m in new:
+                    m.min_block = m.max_block = m.part_id
             try:
                 with self._lock:
                     self.manifest.swap([p.part_id for p in old], new,
@@ -2863,9 +2876,10 @@ class SparkMergeTree:
         return False
 
     def perform_merge(self) -> bool:
-        """R27+R33: best-scored candidate → read-dedup-sort-write → atomic
-        manifest swap → delete old part dirs (reference
-        src/merge_tree.cpp:245-288 — minus its disk leak).
+        """R27+R33: the cheapest adjacent run of parts (merger.py) →
+        read-dedup-sort-write → atomic manifest swap → delete old part
+        dirs (reference src/merge_tree.cpp:245-288 — minus its disk
+        leak).
 
         A small merge runs as one shuffle-free task (_single_task);
         larger ones use Spark's sort-shuffle-with-spill in place of the
@@ -2876,21 +2890,13 @@ class SparkMergeTree:
             return False
         with self._merge_lock:
             with self._lock:
-                # merges never cross partitions (ClickHouse MergeTree
-                # contract): enumerate candidates within each partition
-                # group and pick the best score overall
-                groups: dict[str | None, list] = {}
-                for p in self.manifest.parts:
-                    groups.setdefault(p.partition, []).append(p)
-                candidates = sorted(
-                    (c for g in groups.values()
-                     for c in select_merge_candidates(g)),
-                    key=lambda c: -c.score)
+                # runs never cross partitions (ClickHouse MergeTree
+                # contract)
+                candidates = select_merge_candidates(self.manifest.parts)
                 if not candidates:
                     return False
-                best = candidates[0]
                 selected = [p for p in self.manifest.parts
-                            if p.part_id in best.part_ids]
+                            if p.part_id in candidates[0].part_ids]
             self._merge_groups([selected])
             return True
 
@@ -2933,11 +2939,11 @@ class SparkMergeTree:
         """R32 OPTIMIZE / ``OPTIMIZE TABLE ... FINAL``: flush, then merge
         until ≤ max_parts (reference src/merge_tree.cpp:199-205). With
         ``final=True``, keep merging until every partition is ONE part —
-        ClickHouse's FINAL keyword — bypassing the score-based scheduler:
-        the point of FINAL is to force physical materialization of every
+        ClickHouse's FINAL keyword — bypassing the merge selector: the
+        point of FINAL is to force physical materialization of every
         read-time transform (mode collapse/dedup, lightweight-delete
-        masks, lazy ALTER defaults) regardless of whether the merge is
-        'worth it' by I/O scoring — including single-part partitions,
+        masks, lazy ALTER defaults) regardless of what the selector
+        would pick — including single-part partitions,
         which ClickHouse's FINAL also rewrites. Merges still never cross
         partitions.
 
@@ -3087,8 +3093,8 @@ class SparkMergeTree:
         - max_ts < before_ts  → DROP the whole part: a manifest swap-out
           plus directory delete — metadata-only, zero rows read. At 100 TB
           with time-correlated parts (inserts arrive roughly in ts order,
-          and compaction scoring favors neighbors) this is almost every
-          expired byte.
+          and merges take adjacent runs in insert order) this is almost
+          every expired byte.
         - min_ts ≥ before_ts  → untouched.
         - straddling          → rewritten once: read, filter ts ≥ cutoff,
           write as a new part (same sorted-part shape as any flush), atomic

@@ -1,24 +1,26 @@
-"""Compaction policy — candidate selection and scoring over manifest rows.
+"""Compaction policy — which parts a scheduled merge takes.
 
-Pure metadata arithmetic on the driver (no Spark job): the reference
-computes these over in-memory part objects (src/merger.cpp:84-174); we
-compute them over manifest entries. The merge *job* itself lives in
-merge_tree.SparkMergeTree.
+Pure metadata arithmetic on the driver (no Spark job) over manifest rows;
+the merge *job* itself lives in merge_tree.SparkMergeTree.
 
-Scoring formula reimplemented semantically from the reference
-(src/merger.cpp:140-174):
+Deviation from the reference, documented. The reference enumerates all
+pairs plus consecutive triples (src/merger.cpp:84-130) and scores them
+(src/merger.cpp:140-174) as
 
     score = (min_size / max_size)            # prefer similar-sized parts
           * (1 / num_parts)                  # prefer fewer parts per merge
           * min(1, total_size / 10 MiB)      # prefer merges worth the I/O
           * 100
 
-Candidate enumeration (src/merger.cpp:84-130): all pairs + consecutive
-triples. Deviation from the reference, documented: the reference calls
-select_merge_candidates(max_candidates=1), which stops enumeration at the
-FIRST positive-scoring pair — effectively always merging parts (0, 1). We
-enumerate all candidates and pick the best score; same data semantics,
-strictly better scheduling.
+Below 10 MiB the size factor lets the largest similar group win, so the
+biggest part is rewritten on every other merge and write amplification
+grows with the number of inserts. Here a merge takes an ADJACENT run of 2
+or 3 parts of one partition in insert order (``PartMeta.blocks``), as
+ClickHouse's SimpleMergeSelector merges contiguous ranges, and the run
+that rewrites the fewest bytes per part it removes goes first:
+``cost = total_size / (width - 1)``. Widths stay at {2, 3}: with no cap
+that cost would always favour a wider run. N parts give at most 2N - 3
+candidates, not O(N^2).
 """
 
 from __future__ import annotations
@@ -27,55 +29,34 @@ from dataclasses import dataclass
 
 from clickhouse_mergetree_spark.engine.manifest import PartMeta
 
-_TEN_MIB = 10 * 1024 * 1024
-
 
 @dataclass
 class MergeCandidate:
     part_ids: list[int]
     total_rows: int
     total_size: int
-    score: float
-
-
-def calculate_merge_score(parts: list[PartMeta]) -> float:
-    """Reference scoring formula (src/merger.cpp:140-174) over manifest rows."""
-    if not parts:
-        return 0.0
-    sizes = [p.disk_size for p in parts]
-    total_rows = sum(p.row_count for p in parts)
-    total_size = sum(sizes)
-    if total_rows <= 0 or total_size <= 0:
-        return 0.0
-    size_ratio = min(sizes) / max(sizes)
-    parts_factor = 1.0 / len(parts)
-    size_factor = min(1.0, total_size / _TEN_MIB)
-    return size_ratio * parts_factor * size_factor * 100.0
+    cost: float  # bytes rewritten per part removed: lower is better
 
 
 def select_merge_candidates(parts: list[PartMeta]) -> list[MergeCandidate]:
-    """All pairs + consecutive triples, best score first
-    (reference src/merger.cpp:84-130; see module docstring for the
-    max_candidates deviation)."""
-    if len(parts) < 2:
-        return []
-    candidates: list[MergeCandidate] = []
+    """Every adjacent run of 2 or 3 ``parts`` within a partition, in
+    insert order, cheapest first; a tie goes to the older run. Runs
+    holding a part with unknown stats (a recovered part before its stats
+    rebuild) are skipped."""
+    groups: dict[str | None, list[PartMeta]] = {}
+    for p in sorted(parts, key=lambda p: (p.blocks[0], p.part_id)):
+        groups.setdefault(p.partition, []).append(p)
+    runs = [g[i:i + width] for g in groups.values() for width in (2, 3)
+            for i in range(len(g) - width + 1)]
+    runs = [run for run in runs
+            if all(p.row_count >= 0 and p.disk_size > 0 for p in run)]
 
-    def add(group: list[PartMeta]) -> None:
-        score = calculate_merge_score(group)
-        if score > 0:
-            candidates.append(MergeCandidate(
-                part_ids=[p.part_id for p in group],
-                total_rows=sum(p.row_count for p in group),
-                total_size=sum(p.disk_size for p in group),
-                score=score,
-            ))
+    def cost(run: list[PartMeta]) -> float:
+        return sum(p.disk_size for p in run) / (len(run) - 1)
 
-    for i in range(len(parts)):
-        for j in range(i + 1, len(parts)):
-            add([parts[i], parts[j]])
-    for i in range(len(parts) - 2):
-        add([parts[i], parts[i + 1], parts[i + 2]])
-
-    candidates.sort(key=lambda c: -c.score)
-    return candidates
+    runs.sort(key=lambda run: (cost(run), run[0].blocks[0]))
+    return [MergeCandidate(part_ids=[p.part_id for p in run],
+                           total_rows=sum(p.row_count for p in run),
+                           total_size=sum(p.disk_size for p in run),
+                           cost=cost(run))
+            for run in runs]

@@ -96,3 +96,27 @@ def test_failed_runs_are_reported_and_skipped():
         "w seed 2 change: correct=True failed=2"]
     assert ab.verdict(METRICS, pairs)["main_p50_s"]["pairs"] == 2
     assert ab.verdict(METRICS, pairs[:1]) == {}
+
+
+def test_layer_diff_lists_counts_that_differ():
+    per_layer = [{"name": "merge.count", "unit": "count"},
+                 {"name": "merge.jobs", "unit": "jobs/op"},
+                 {"name": "flush.count", "unit": "count"},
+                 {"name": "merge.busy_s", "unit": "s"}]
+
+    def traced(merges, jobs, flushes, busy):
+        return {"correct": True, "attempted": 10, "failed": 0, "metrics": {
+            "merge.count": {"value": merges}, "merge.jobs": {"value": jobs},
+            "flush.count": {"value": flushes},
+            "merge.busy_s": {"value": busy}}}
+
+    d = ab.layer_diff(per_layer, {"parent": traced(10, 1.0, 22, 2.9),
+                                  "change": traced(5, 1.0, 22, 1.6)})
+    assert d["metrics"]["merge.count"] == {"parent": 10, "change": 5}
+    assert d["metrics"]["merge.busy_s"] == {"parent": 2.9, "change": 1.6}
+    # a time that moved is not listed: only counts and jobs per op
+    assert d["differ"] == ["merge.count"]
+    d = ab.layer_diff(per_layer, {"parent": traced(10, 1.0, 22, 2.9),
+                                  "change": None})
+    assert d["metrics"]["flush.count"] == {"parent": 22, "change": None}
+    assert d["differ"] == ["merge.count", "merge.jobs", "flush.count"]

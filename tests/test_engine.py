@@ -17,7 +17,6 @@ from clickhouse_mergetree_spark.engine import (
     Manifest,
     MergeTreeConfig,
     SparkMergeTree,
-    calculate_merge_score,
     select_merge_candidates,
 )
 
@@ -425,31 +424,86 @@ def test_merge_collapses_cross_part_duplicates(spark, base_path):
     t.close()
 
 
+def _pm(pid, size, rows=10, partition=None, blocks=None):
+    from clickhouse_mergetree_spark.engine import PartMeta
+    lo, hi = blocks or (pid, pid)
+    return PartMeta(part_id=pid, path=f"/p/{pid}", min_key="a", max_key="z",
+                    min_ts=0, max_ts=1, row_count=rows, disk_size=size,
+                    partition=partition, min_block=lo, max_block=hi)
+
+
 def test_merge_scoring_and_selection():
-    """Driver-side policy arithmetic (reference src/merger.cpp:84-174)."""
-    def pm(pid, rows, size):
-        from clickhouse_mergetree_spark.engine import PartMeta
-        return PartMeta(part_id=pid, path=f"/p/{pid}", min_key="a",
-                        max_key="z", min_ts=0, max_ts=1,
-                        row_count=rows, disk_size=size)
+    """Driver-side merge policy (merger.py): adjacent runs of 2 or 3 parts
+    in insert order, cheapest bytes per part removed first."""
+    # parts 1 and 3 are the cheapest pair, but part 2 sits between them
+    # in insert order, even though it comes last in the list
+    parts = [_pm(1, 10), _pm(3, 10), _pm(4, 500), _pm(2, 400)]
+    cands = select_merge_candidates(parts)
+    assert [c.part_ids for c in cands] == [
+        [1, 2, 3], [1, 2], [2, 3], [2, 3, 4], [3, 4]]
+    assert [c.cost for c in cands] == [210, 410, 410, 455, 510]
+    # sorted by cost; the tie at 410 goes to the older run
+    assert all(len(c.part_ids) in (2, 3) for c in cands)
+    assert cands[0].total_rows == 30 and cands[0].total_size == 420
+    # insert order is the span, not the part id: a merged part spans the
+    # inserts it holds
+    cands = select_merge_candidates(
+        [_pm(9, 100, blocks=(1, 4)), _pm(5, 1), _pm(6, 1)])
+    assert [c.part_ids for c in cands][:2] == [[5, 6], [9, 5, 6]]
+    # unknown stats: no run through a recovered part (row_count -1) or
+    # one without a size
+    cands = select_merge_candidates(
+        [_pm(1, 10), _pm(2, 10, rows=-1), _pm(3, 10), _pm(4, 10),
+         _pm(5, -1), _pm(6, 0)])
+    assert [c.part_ids for c in cands] == [[3, 4]]
+    # runs never cross partitions
+    cands = select_merge_candidates(
+        [_pm(1, 10, partition="a"), _pm(2, 10, partition="b"),
+         _pm(3, 10, partition="a"), _pm(4, 10, partition="b")])
+    assert sorted(c.part_ids for c in cands) == [[1, 3], [2, 4]]
+    assert select_merge_candidates([_pm(1, 1024)]) == []
+    # O(parts), not O(parts^2): at most 2N - 3 candidates
+    assert len(select_merge_candidates(
+        [_pm(i, 100 + i % 7) for i in range(1, 1001)])) == 1997
 
-    # similar sizes score higher than skewed ones
-    even = calculate_merge_score([pm(1, 10, 5 << 20), pm(2, 10, 5 << 20)])
-    skew = calculate_merge_score([pm(1, 10, 9 << 20), pm(2, 10, 1 << 20)])
-    assert even > skew
-    # pairs preferred over triples at equal sizes (1/num_parts factor)
-    pair = calculate_merge_score([pm(1, 10, 6 << 20), pm(2, 10, 6 << 20)])
-    triple = calculate_merge_score(
-        [pm(1, 10, 6 << 20), pm(2, 10, 6 << 20), pm(3, 10, 6 << 20)])
-    assert pair > triple
-    # tiny merges are de-prioritized by the 10 MiB I/O factor
-    tiny = calculate_merge_score([pm(1, 10, 1024), pm(2, 10, 1024)])
-    assert tiny < even
 
-    cands = select_merge_candidates([pm(1, 10, 5 << 20), pm(2, 10, 5 << 20),
-                                     pm(3, 10, 1 << 20)])
-    assert cands[0].score == max(c.score for c in cands)
-    assert select_merge_candidates([pm(1, 10, 1024)]) == []
+def test_merge_selection_write_amplification():
+    """engine_ingest's merge schedule with sizes proportional to rows: 11
+    seed parts and one merge, then per batch a flush and, over
+    max_parts=10, one merge. Bytes written by flushes plus merges, over
+    bytes flushed, stays near the log of the batch count."""
+    def write_amp(batches: int) -> float:
+        parts, flushed, merged = [], 0, 0
+        next_id = iter(range(1, 10**6))
+
+        def flush():
+            nonlocal flushed
+            parts.append(_pm(next(next_id), 5000))
+            flushed += 5000
+
+        def merge():
+            nonlocal merged
+            if len(parts) <= 10:
+                return
+            best = select_merge_candidates(parts)[0]
+            runs = [p for p in parts if p.part_id in best.part_ids]
+            for p in runs:
+                parts.remove(p)
+            parts.append(_pm(next(next_id), best.total_size, blocks=(
+                min(p.blocks[0] for p in runs),
+                max(p.blocks[1] for p in runs))))
+            merged += best.total_size
+
+        for _ in range(11):
+            flush()
+        merge()
+        for _ in range(batches):
+            flush()
+            merge()
+        return (flushed + merged) / flushed
+
+    assert write_amp(11) <= 2
+    assert write_amp(200) <= 10
 
 
 # --------------------------------------------------- demo test_persistence

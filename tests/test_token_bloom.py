@@ -200,9 +200,12 @@ def test_a_failed_build_of_a_live_part_is_recorded_at_a_deletion(
         raise RuntimeError("token build failed")
 
     t._value_bloom = broken
-    t.insert_rows(rows(20))
+    # the third part outweighs the first two together, so the cheapest
+    # run the merge selector offers is those two
+    t.insert_rows([(i, i, f"alpha doc {i}") for i in range(20, 3020)])
     t.flush()
     last = t.manifest.parts[-1]
+    assert last.disk_size > sum(p.disk_size for p in t.manifest.parts[:2])
     with caplog.at_level(logging.WARNING):
         t.merge_parts_sync()  # merges the first two parts, deletes them
     assert any(p is last for p in t.manifest.parts)

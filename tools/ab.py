@@ -1,7 +1,7 @@
 """Alternating-pair A/B of the benchmark between two checkouts.
 
     python tools/ab.py PARENT_DIR CHANGE_DIR --seeds 111-120
-        [--workloads engine_ingest ...] [--out FILE]
+        [--workloads engine_ingest ...] [--trace-seed N] [--out FILE]
 
 For every workload and seed, runs ``BENCHMARK.json``'s command with
 ``--workload W --seed N --seconds S --trace 0`` once in each checkout (S is
@@ -18,6 +18,13 @@ side) and its median is better than the parent's by more than the
 parent's quartile spread (q3 - q1). Every run's ``correct`` and
 ``failed`` are printed too. Exits 1 when a metric is worse beyond its
 bound, a run failed, or a run counted a failed operation.
+
+With ``--trace-seed N``, each workload's pairs are followed by one
+``--trace 1`` run per side at seed N. Every ``per_layer`` metric of the
+spec is printed as parent -> change, then the ``count`` and ``jobs/op``
+metrics whose values differ: on the same code those repeat exactly. The
+result is stored under ``layers`` in ``--out``; a traced run that fails
+counts as a failed run.
 
 The benchmark spec is read from PARENT_DIR's ``BENCHMARK.json``; the
 summary statistics are ``perfbench/sweep.py``'s.
@@ -38,13 +45,15 @@ sys.path.insert(0, ROOT)
 from perfbench.sweep import seeds, summarise  # noqa: E402
 
 SIDES = ("parent", "change")
+EXACT_UNITS = ("count", "jobs/op")
 
 
-def run_once(spec: dict, checkout: str, wl: str, seed: int) -> dict:
+def run_once(spec: dict, checkout: str, wl: str, seed: int,
+             trace: int = 0) -> dict:
     """One benchmark run in ``checkout``: its result line, or None."""
     cmd = spec["command"] + [
         "--workload", wl, "--seed", str(seed),
-        "--seconds", str(spec["run_seconds"]), "--trace", "0"]
+        "--seconds", str(spec["run_seconds"]), "--trace", str(trace)]
     t0 = time.perf_counter()
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
@@ -89,6 +98,19 @@ def verdict(metrics: list[dict], pairs: list[dict]) -> dict:
     return out
 
 
+def layer_diff(per_layer: list[dict], traced: dict) -> dict:
+    """Each per-layer metric of one traced pair (``traced`` maps a side
+    to its result, None when the run failed) as ``{side: value}``, and
+    the names of the ``count`` and ``jobs/op`` metrics whose values
+    differ."""
+    values = {m["name"]: {s: None if traced[s] is None else
+                          traced[s]["metrics"][m["name"]]["value"]
+                          for s in SIDES} for m in per_layer}
+    differ = [m["name"] for m in per_layer if m["unit"] in EXACT_UNITS
+              and values[m["name"]]["parent"] != values[m["name"]]["change"]]
+    return {"metrics": values, "differ": differ}
+
+
 def failures(pairs: list[dict]) -> list[str]:
     """Every run that crashed, was not correct, or failed an operation."""
     bad = []
@@ -122,6 +144,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("change_dir")
     ap.add_argument("--seeds", type=seeds, required=True)
     ap.add_argument("--workloads", nargs="*")
+    ap.add_argument("--trace-seed", type=int)
     ap.add_argument("--out")
     args = ap.parse_args(argv)
     with open(os.path.join(args.parent_dir, "BENCHMARK.json")) as f:
@@ -129,7 +152,7 @@ def main(argv: list[str] | None = None) -> int:
     dirs = {"parent": args.parent_dir, "change": args.change_dir}
     workloads = args.workloads or [w["name"] for w in spec["workloads"]]
     names = [m["name"] for m in spec["end_to_end"]]
-    pairs, summary = [], {}
+    pairs, summary, layers, traced_pairs = [], {}, {}, []
     for wl in workloads:
         print(f"\n{wl}: seed first " + " ".join(
             f"{n}(parent/change)" for n in names) + " correct failed",
@@ -157,7 +180,22 @@ def main(argv: list[str] | None = None) -> int:
                   + ("; WORSE BEYOND BOUND" if v["beyond_bound"] else "")
                   + ("; GAIN" if v["gain"] else "; no gain"))
         pairs += wl_pairs
-    bad = failures(pairs)
+        if args.trace_seed is None:
+            continue
+        seed = args.trace_seed
+        traced = {s: run_once(spec, dirs[s], wl, seed, trace=1)["result"]
+                  for s in SIDES}
+        traced_pairs.append({"workload": wl, "seed": f"{seed} (traced)",
+                             **traced})
+        layers[wl] = {"seed": seed,
+                      **layer_diff(spec["per_layer"], traced)}
+        print(f"{wl}, traced seed {seed}: metric parent -> change")
+        for name, v in layers[wl]["metrics"].items():
+            print(f"- {name}: " + " -> ".join(
+                "-" if v[s] is None else f"{v[s]:.6g}" for s in SIDES))
+        print("counts that differ: "
+              + (", ".join(layers[wl]["differ"]) or "none"))
+    bad = failures(pairs + traced_pairs)
     for b in bad:
         print(f"FAILED RUN: {b}")
     beyond = [f"{wl} {n}" for wl, per in summary.items()
@@ -165,7 +203,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"seeds": args.seeds, "dirs": dirs, "pairs": pairs,
-                       "summary": summary, "failed_runs": bad,
+                       "summary": summary, "layers": layers,
+                       "failed_runs": bad,
                        "beyond_bound": beyond}, f, indent=1)
     print("verdict: " + ("no end-to-end metric worse beyond its bound"
                          if not beyond else "worse beyond bound: "
