@@ -10,6 +10,12 @@ and merge selection (R29) without touching data files.
 Swap atomicity (R33): write-temp-then-``os.replace`` — readers of the old
 manifest keep a consistent view because parts are immutable; single-writer
 assumption matches the reference's single-process model (src/merge_tree.h:34-41).
+
+This module is the only reader and writer of ``manifest.json``: the
+engine and the ``mergetree`` connector (sources/mergetree_source.py)
+both go through it. The connector ships it by value to the data-source
+runner processes, which do not have this repo on their path, so it must
+import only the standard library.
 """
 
 from __future__ import annotations

@@ -3154,12 +3154,13 @@ class SparkMergeTree:
         (our (key, ts) invariant makes max-ts unique per key).
 
         Execution is one Spark job per partition group, not per part:
-        affected parts (min_ts < cutoff) are read together through the
-        evolved/masked read path, split into young (kept verbatim) and
-        expired (grouped) halves, and written back as ONE part per
-        partition — untouched parts (min_ts ≥ cutoff) are never opened,
-        and partitions with no affected part cost nothing. At 100 TB with
-        time-correlated parts this touches only the expiry frontier, and
+        affected parts (min_ts < cutoff), with any parts between them in
+        insert order, are read together through the evolved/masked read
+        path, split into young (kept verbatim) and expired (grouped)
+        halves, and written back as ONE part per partition — parts
+        outside that run are never opened, and partitions with no
+        affected part cost nothing. At 100 TB with time-correlated parts
+        this touches only the expiry frontier, and
         the aggregation is a single partial+final hash agg on the
         sorting-key prefix — the cheapest shuffle the table admits.
         Rollup rows cannot collide with young rows (their ts is below the
@@ -3181,10 +3182,21 @@ class SparkMergeTree:
         with self._merge_lock:
             self.flush()
             with self._lock:
-                groups: dict[str | None, list[PartMeta]] = {}
-                for p in self.manifest.parts:
-                    if p.min_ts < before_ts:
-                        groups.setdefault(p.partition, []).append(p)
+                by_partition: dict[str | None, list[PartMeta]] = {}
+                for p in sorted(self.manifest.parts,
+                                key=lambda p: (p.blocks[0], p.part_id)):
+                    by_partition.setdefault(p.partition, []).append(p)
+            # per partition, the insert-order run from the first to the
+            # last affected part (min_ts < cutoff): the parts between them
+            # are rewritten too (all their rows are young, so they pass
+            # through), so the output's span overlaps no live span. One
+            # run, not one per stretch of affected parts: a key with
+            # expired rows in two stretches must still roll up to ONE row.
+            olds = []
+            for parts in by_partition.values():
+                hit = [i for i, p in enumerate(parts) if p.min_ts < before_ts]
+                if hit:
+                    olds.append(parts[hit[0]:hit[-1] + 1])
             types = {f.name: f.dataType for f in self.schema.fields}
             others = [f.name for f in self.schema.fields
                       if f.name not in (self._key, self._ts)
@@ -3211,7 +3223,6 @@ class SparkMergeTree:
                     [f.name for f in self.schema.fields])
 
             # partition groups roll up independently
-            olds = list(groups.values())
             metas = self._rewrite_parts([
                 (parts, [(parts[0].partition, lambda parts=parts: (
                     rollup_df(parts), sum(p.row_count for p in parts)))])

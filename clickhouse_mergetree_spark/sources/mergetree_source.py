@@ -37,11 +37,14 @@ micro-batch with a sidecar batch-id ledger for exactly-once replays.
 SELF-CONTAINMENT CONTRACT: every method of a Python data source —
 including the "driver-side" schema()/partitions() — executes in a
 separate Python runner process that does NOT have this repo on its
-path, and ``register_mergetree`` additionally registers the module for
-cloudpickle pickle-by-value. So this module imports ONLY
-pyspark/pyarrow/stdlib and carries its own minimal manifest reader
-(format: engine/manifest.py — one JSON doc, ``parts`` list with
-path/min_key/max_key per part).
+path. ``register_mergetree`` therefore registers two modules for
+cloudpickle pickle-by-value: this one and ``engine/manifest.py``, the
+one reader and writer of ``manifest.json`` (``Manifest`` for load, id
+allocation, ``swap`` and ``save``; ``PartMeta`` for the per-part
+min/max and key-bloom checks). Everything else the two modules use
+must come from pyspark, pyarrow or the standard library: cloudpickle
+pickles any other module of this package by name, and the runner
+cannot import it.
 """
 
 from __future__ import annotations
@@ -70,6 +73,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from clickhouse_mergetree_spark.engine.manifest import Manifest, PartMeta
+
 # Reference row model (src/row.h:10-12) — schema of an empty table.
 _FALLBACK_SCHEMA = StructType([
     StructField("key", StringType(), False),
@@ -78,89 +83,22 @@ _FALLBACK_SCHEMA = StructType([
 ])
 
 
-def _load_parts(base_path: str) -> list[dict]:
-    """Minimal read-only view of the engine manifest: list of
-    {path, min_key, max_key} dicts, falling back to a part_<id> directory
-    scan (with unknown stats) when the manifest is absent or corrupt —
-    the same recovery rule as engine/manifest.py."""
-    mf = os.path.join(base_path, "manifest.json")
-    if os.path.exists(mf):
-        try:
-            with open(mf) as f:
-                doc = json.load(f)
-            return [
-                {"part_id": p.get("part_id"), "path": p["path"],
-                 "min_key": p.get("min_key"), "max_key": p.get("max_key"),
-                 "bloom_hex": p.get("bloom_hex"),
-                 "bloom_bits": p.get("bloom_bits", 0),
-                 "bloom_k": p.get("bloom_k", 0),
-                 "bloom_algo": p.get("bloom_algo", "")}
-                for p in doc["parts"]
-            ]
-        except (json.JSONDecodeError, KeyError, TypeError):
-            pass
-    parts = []
-    if os.path.isdir(base_path):
-        for name in sorted(os.listdir(base_path)):
-            d = os.path.join(base_path, name)
-            if name.startswith("part_") and os.path.isdir(d):
-                try:
-                    pid = int(name[5:])
-                except ValueError:
-                    continue
-                parts.append({"part_id": pid, "path": d,
-                              "min_key": None, "max_key": None,
-                              "bloom_hex": None, "bloom_bits": 0,
-                              "bloom_k": 0})
-    return parts
-
-
-def _check_no_lightweight_deletes(base_path: str) -> None:
+def _check_no_lightweight_deletes(manifest: Manifest) -> None:
     """The connector reads part files physically and cannot evaluate the
     engine's lightweight-delete predicate masks (SQL strings applied by
     SparkMergeTree's read path). Serving deleted rows silently would be
     wrong, so refuse loudly until the masks are materialized."""
-    mf = os.path.join(base_path, "manifest.json")
-    if not os.path.exists(mf):
-        return
-    try:
-        with open(mf) as f:
-            doc = json.load(f)
-        lw = doc.get("table_meta", {}).get("lw_deletes", [])
-        live = {p.get("part_id") for p in doc.get("parts", [])}
-    except (json.JSONDecodeError, AttributeError, TypeError):
-        return
+    live = {p.part_id for p in manifest.parts}
     # entries that only mask snapshot-retained tombstones don't affect the
     # live part set this connector reads
-    blocking = [e for e in lw if live.intersection(e.get("parts", []))]
+    blocking = [e for e in manifest.table_meta.get("lw_deletes", [])
+                if live.intersection(e.get("parts", []))]
     if blocking:
         raise ValueError(
-            f"table at {base_path} has {len(blocking)} unmaterialized "
-            f"lightweight delete(s) masking live parts; run "
+            f"table at {manifest.base_path} has {len(blocking)} "
+            f"unmaterialized lightweight delete(s) masking live parts; run "
             f"SparkMergeTree.materialize_deletes() before reading it "
             f"through the mergetree connector")
-
-
-def _bloom_may_contain(part: dict, key) -> bool:
-    """Per-part key-bloom check (format contract with engine/manifest.py:
-    d = md5(str(key)), h1/h2 = its first two big-endian 32-bit words,
-    positions (h1 + i * h2) mod bloom_bits, scheme-tagged "md5dh3").
-    Parts without a bloom — or one built under a different hash scheme —
-    always say True: skipping is pure optimization and a scheme mismatch
-    must never produce a false negative."""
-    hx, m, k = part.get("bloom_hex"), part.get("bloom_bits"), part.get("bloom_k")
-    if not hx or not m or not k or part.get("bloom_algo") != "md5dh3":
-        return True
-    import hashlib
-
-    bits = bytes.fromhex(hx)
-    d = hashlib.md5(str(key).encode()).digest()
-    h1, h2 = int.from_bytes(d[:4], "big"), int.from_bytes(d[4:8], "big")
-    for i in range(k):
-        p = (h1 + i * h2) % m
-        if not bits[p >> 3] & (1 << (p & 7)):
-            return False
-    return True
 
 
 def _part_files(part_dir: str) -> list[str]:
@@ -171,7 +109,7 @@ def _part_files(part_dir: str) -> list[str]:
     )
 
 
-def _prune_parts(parts: list[dict], lower, upper) -> list[dict]:
+def _prune_parts(parts: list[PartMeta], lower, upper) -> list[PartMeta]:
     """R8 manifest pruning, shared by both data planes: drop parts whose
     [min_key, max_key] misses the pushed bounds; for an exact point
     filter, also consult the per-part key bloom. Incomparable bound/key
@@ -181,9 +119,9 @@ def _prune_parts(parts: list[dict], lower, upper) -> list[dict]:
         kept = []
         for p in parts:
             try:
-                if p["min_key"] is not None and (
-                    (upper is not None and p["min_key"] > upper)
-                    or (lower is not None and p["max_key"] < lower)
+                if p.min_key is not None and (
+                    (upper is not None and p.min_key > upper)
+                    or (lower is not None and p.max_key < lower)
                 ):
                     continue
             except TypeError:
@@ -191,7 +129,7 @@ def _prune_parts(parts: list[dict], lower, upper) -> list[dict]:
             kept.append(p)
         parts = kept
     if lower is not None and lower == upper:
-        parts = [p for p in parts if _bloom_may_contain(p, lower)]
+        parts = [p for p in parts if p.may_contain_key(lower)]
     return parts
 
 
@@ -215,12 +153,12 @@ def mergetree_batch_scan(spark, path: str, key_lower=None, key_upper=None):
     must still apply their key filter — pruning only shrinks the file
     list, it never substitutes for the predicate.
     """
-    _check_no_lightweight_deletes(path)
-    parts = _load_parts(path)
-    files = [f for p in _prune_parts(parts, key_lower, key_upper)
-             for f in _part_files(p["path"])]
+    manifest = Manifest.load(path)
+    _check_no_lightweight_deletes(manifest)
+    files = [f for p in _prune_parts(manifest.parts, key_lower, key_upper)
+             for f in _part_files(p.path)]
     if not files:
-        allf = [f for p in parts for f in _part_files(p["path"])]
+        allf = [f for p in manifest.parts for f in _part_files(p.path)]
         if not allf:
             raise ValueError(f"no parquet data files under {path}")
         # everything pruned: empty relation with the table's schema
@@ -277,12 +215,12 @@ class MergeTreeReader(DataSourceReader):
     def partitions(self) -> list[MergeTreeFilePartition]:
         # Manifest prune (R8, bloom on point bounds — _prune_parts),
         # then one partition per data file.
-        _check_no_lightweight_deletes(self.path)
-        parts = _prune_parts(_load_parts(self.path), self.lower, self.upper)
+        manifest = Manifest.load(self.path)
+        _check_no_lightweight_deletes(manifest)
         return [
             MergeTreeFilePartition(f)
-            for p in parts
-            for f in _part_files(p["path"])
+            for p in _prune_parts(manifest.parts, self.lower, self.upper)
+            for f in _part_files(p.path)
         ]
 
     # --------------------------------------------------------------- scan
@@ -418,18 +356,17 @@ def _write_staged_file(staging: str, key_col: str, ts_col: str,
 def _publish_part(path: str, staging: str, messages,
                   overwrite: bool = False, batch_id: int | None = None) -> None:
     """Commit side of a part write (driver/runner process, single-writer):
-    move the staged task files into ``part_<id>/`` and publish ONE manifest
-    entry with write-temp-then-replace — readers see the whole insert or
-    none of it (the engine's R16/R33 commit discipline). The publish is
-    one manifest version, logged like the engine's commits, so time
-    travel reads it back.
+    move the staged task files into ``part_<id>/`` and commit ONE
+    ``Manifest.swap`` — the new part in, and under ``overwrite`` every
+    live part out — saved write-temp-then-replace, so readers see the
+    whole insert or none of it (the engine's R16/R33 commit discipline).
+    The swap is one manifest version, so time travel reads it back.
 
     ``batch_id`` makes streaming commits idempotent: a replayed micro-batch
     (restart between sink commit and checkpoint advance) finds its id in
     the sidecar ledger and publishes nothing twice.
     """
     import shutil
-    import time
 
     ledger = os.path.join(path, ".stream_commits.json")
     done: list[int] = []
@@ -444,20 +381,11 @@ def _publish_part(path: str, staging: str, messages,
             return
 
     msgs = [m for m in messages if m is not None and m.rows > 0]
-    mf = os.path.join(path, "manifest.json")
-    doc = {"next_part_id": 1, "parts": []}
-    if os.path.exists(mf):
-        try:
-            with open(mf) as f:
-                doc = json.load(f)
-        except (json.JSONDecodeError, KeyError):
-            pass
-    old_paths = [p["path"] for p in doc["parts"]]
-    if overwrite:
-        doc["parts"] = []
+    manifest = Manifest.load(path)
+    old = list(manifest.parts) if overwrite else []
+    added = []
     if msgs:
-        part_id = doc["next_part_id"]
-        doc["next_part_id"] = part_id + 1
+        part_id = manifest.allocate_part_id()
         part_dir = os.path.join(path, f"part_{part_id}")
         os.makedirs(part_dir, exist_ok=True)
         for m in msgs:
@@ -465,26 +393,16 @@ def _publish_part(path: str, staging: str, messages,
                        os.path.join(part_dir, m.file_name))
         mks = [m.min_key for m in msgs if m.min_key is not None]
         xks = [m.max_key for m in msgs if m.max_key is not None]
-        doc["parts"].append({
-            "part_id": part_id, "path": part_dir,
-            "min_key": min(mks) if mks else None,
-            "max_key": max(xks) if xks else None,
-            "min_ts": min(m.min_ts for m in msgs),
-            "max_ts": max(m.max_ts for m in msgs),
-            "row_count": sum(m.rows for m in msgs),
-            "disk_size": sum(m.n_bytes for m in msgs),
-            "created_at": time.time(),
-        })
-    # one versioned commit, as Manifest._commit logs it: the live part
-    # ids under a bumped version, the log capped at 256 entries
-    doc["version"] = doc.get("version", 0) + 1
-    doc["log"] = (doc.get("log", []) + [
-        [doc["version"], [p["part_id"] for p in doc["parts"]]]])[-256:]
-    # atomic write-temp-then-replace, same rule as engine/manifest.py
-    tmp = mf + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(doc, f, indent=1, default=str)
-    os.replace(tmp, mf)
+        added.append(PartMeta(
+            part_id=part_id, path=part_dir,
+            min_key=min(mks) if mks else None,
+            max_key=max(xks) if xks else None,
+            min_ts=min(m.min_ts for m in msgs),
+            max_ts=max(m.max_ts for m in msgs),
+            row_count=sum(m.rows for m in msgs),
+            disk_size=sum(m.n_bytes for m in msgs)))
+    manifest.swap([p.part_id for p in old], added)
+    manifest.save()
     if batch_id is not None:
         done.append(batch_id)
         tmp = ledger + ".tmp"
@@ -495,10 +413,9 @@ def _publish_part(path: str, staging: str, messages,
     for m in messages or []:
         if m is not None and getattr(m, "staging", None):
             shutil.rmtree(m.staging, ignore_errors=True)
-    if overwrite:
-        # commit point passed — truncated parts are unreachable
-        for p in old_paths:
-            shutil.rmtree(p, ignore_errors=True)
+    # commit point passed — truncated parts are unreachable
+    for p in old:
+        shutil.rmtree(p.path, ignore_errors=True)
 
 
 class MergeTreeStreamReader(DataSourceStreamReader):
@@ -523,21 +440,17 @@ class MergeTreeStreamReader(DataSourceStreamReader):
         return {"part_id": 0}
 
     def latestOffset(self) -> dict:
-        ids = [p["part_id"] for p in _load_parts(self.path)
-               if p["part_id"] is not None]
-        return {"part_id": max(ids) if ids else 0}
+        ids = [p.part_id for p in Manifest.load(self.path).parts]
+        return {"part_id": max(ids, default=0)}
 
     def partitions(self, start: dict, end: dict):
-        _check_no_lightweight_deletes(self.path)
-        parts = [
-            p for p in _load_parts(self.path)
-            if p["part_id"] is not None
-            and start["part_id"] < p["part_id"] <= end["part_id"]
-        ]
+        manifest = Manifest.load(self.path)
+        _check_no_lightweight_deletes(manifest)
         return [
             MergeTreeFilePartition(f)
-            for p in parts
-            for f in _part_files(p["path"])
+            for p in manifest.parts
+            if start["part_id"] < p.part_id <= end["part_id"]
+            for f in _part_files(p.path)
         ]
 
     def read(self, partition: MergeTreeFilePartition):
@@ -599,8 +512,8 @@ class MergeTreeDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("mergetree source requires .option('path', ...)")
-        for p in _load_parts(path):
-            files = _part_files(p["path"])
+        for p in Manifest.load(path).parts:
+            files = _part_files(p.path)
             if files:
                 import pyarrow.parquet as pq
                 from pyspark.sql.pandas.types import from_arrow_schema
@@ -625,15 +538,17 @@ class MergeTreeDataSource(DataSource):
 def register_mergetree(spark: "SparkSession") -> None:
     """Register the 'mergetree' format on this session (idempotent).
 
-    Registers this module for cloudpickle pickle-by-value first: data
-    source methods run in separate Python runner/worker processes, and
-    by-reference pickling would require the repo on their PYTHONPATH.
+    Registers this module and the manifest module for cloudpickle
+    pickle-by-value first: data source methods run in separate Python
+    runner/worker processes, and by-reference pickling would require the
+    repo on their PYTHONPATH.
     """
     import sys
 
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(sys.modules[Manifest.__module__])
     # pushFilters() is rejected outright unless Python-source pushdown is
     # enabled; it's a runtime conf, so set it here for vanilla sessions.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

@@ -300,21 +300,3 @@ def test_sizing_clamps():
     assert bloom_size_for(1) == 1 << 10
     assert bloom_size_for(1000) == 1 << 14
     assert bloom_size_for(10**6) == BLOOM_CAP_BITS
-
-
-def test_connector_bloom_check_matches_engine(table):
-    """The mergetree connector carries its own copy of the bloom check
-    (it may not import the engine); it must answer exactly like
-    PartMeta.may_contain_key."""
-    from clickhouse_mergetree_spark.sources.mergetree_source import (
-        _bloom_may_contain,
-    )
-
-    _flush_keys(table, range(0, 300, 2))
-    p = table.manifest.parts[0]
-    doc = {"bloom_hex": p.bloom_hex, "bloom_bits": p.bloom_bits,
-           "bloom_k": p.bloom_k, "bloom_algo": p.bloom_algo}
-    probes = [f"k{k:04d}" for k in range(300)] + ["", "é漢字", "w" * 40]
-    assert [_bloom_may_contain(doc, k) for k in probes] == \
-        [p.may_contain_key(k) for k in probes]
-    assert not all(_bloom_may_contain(doc, k) for k in probes)

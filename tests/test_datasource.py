@@ -323,12 +323,60 @@ def test_stream_write_batch_ledger_is_idempotent(spark):
     assert n_parts == 1  # no second part
 
 
+@pytest.mark.parametrize("damage", ["missing", "truncated"])
+@pytest.mark.parametrize("write", ["append", "stream"])
+def test_write_without_a_readable_manifest_keeps_the_parts(
+        spark, write, damage):
+    """A sink commit on a table whose manifest.json is gone or torn
+    recovers the part dirs on disk, as the engine's open does: both old
+    parts stay live and readable, and the new part takes id 3 instead of
+    landing in part_1's dir."""
+    from clickhouse_mergetree_spark.engine import Manifest
+
+    base = tempfile.mkdtemp(prefix="ds_lost_")
+    cfg = MergeTreeConfig(memtable_flush_threshold=10**12, max_parts=10)
+    with SparkMergeTree(spark, base, config=cfg) as t:
+        for lo in (0, 10):
+            t.insert_rows([(f"k{i:02d}", "old", i) for i in range(lo, lo + 10)])
+            t.flush()
+    mf = os.path.join(base, "manifest.json")
+    if damage == "missing":
+        os.remove(mf)
+    else:
+        with open(mf) as f:
+            text = f.read()
+        with open(mf, "w") as f:
+            f.write(text[:len(text) // 2])
+
+    register_mergetree(spark)
+    new = spark.createDataFrame([(f"n{i}", "new", i) for i in range(5)],
+                                "key string, value string, timestamp long")
+    if write == "append":
+        new.write.format("mergetree").option("path", base).mode("append").save()
+    else:
+        src = tempfile.mkdtemp(prefix="ds_lost_src_")
+        new.write.mode("overwrite").parquet(src)
+        (spark.readStream.schema(new.schema).parquet(src)
+         .writeStream.format("mergetree").option("path", base)
+         .option("checkpointLocation", tempfile.mkdtemp(prefix="ds_lost_ck_"))
+         .trigger(availableNow=True).start().awaitTermination())
+
+    assert [p.part_id for p in Manifest.load(base).parts] == [1, 2, 3]
+    expect = [f"k{i:02d}" for i in range(20)] + [f"n{i}" for i in range(5)]
+    got = spark.read.format("mergetree").option("path", base).load()
+    assert sorted(r.key for r in got.collect()) == expect
+    with SparkMergeTree(spark, base, config=cfg) as t:
+        assert t.part_count() == 3
+        assert sorted(r.key for r in t.query_all().collect()) == expect
+
+
 def test_batch_fast_path_matches_datasource(spark, table):
     """r9: mergetree_batch_scan (JVM parquet data plane) must return the
     same rows as the Python DataSource plane and prune the same parts."""
+    from clickhouse_mergetree_spark.engine import Manifest
     from clickhouse_mergetree_spark.sources import mergetree_batch_scan
     from clickhouse_mergetree_spark.sources.mergetree_source import (
-        _load_parts, _part_files, _prune_parts)
+        _part_files, _prune_parts)
 
     lo, hi = "key_0100", "key_0199"
     fast = (mergetree_batch_scan(spark, table.base_path, lo, hi)
@@ -341,10 +389,10 @@ def test_batch_fast_path_matches_datasource(spark, table):
 
     # part pruning happened on the file list itself (the scan's input),
     # not just inside the parquet reader
-    parts = _load_parts(table.base_path)
-    all_files = [f for p in parts for f in _part_files(p["path"])]
+    parts = Manifest.load(table.base_path).parts
+    all_files = [f for p in parts for f in _part_files(p.path)]
     kept = [f for p in _prune_parts(parts, "key_2500", "key_2600")
-            for f in _part_files(p["path"])]
+            for f in _part_files(p.path)]
     assert 0 < len(kept) < len(all_files)
 
     # the plan is the JVM parquet scan, not a Python data source

@@ -105,6 +105,26 @@ def test_rollup_respects_partitions(spark, base):
                         (1, "b1"): 5, (3, "b1"): 5}
 
 
+def test_rollup_keeps_insert_spans_disjoint(table):
+    # parts in insert order hold ts 1, 100, 2, 200: the rollup rewrites the
+    # run from the first to the last affected part, young part 2 included,
+    # so its output's span (1, 3) overlaps no live span; part 4 lies
+    # outside the run and keeps its id and span
+    for rows in ([(0, 1, "a", 1), (1, 1, "a", 7)], [(0, 100, "young", 5)],
+                 [(0, 2, "b", 3)], [(1, 200, "later", 9)]):
+        table.insert_rows(rows)
+        table.flush()
+    stats = table.expire_rollup(50, {"hits": "sum"})
+    assert stats["parts_replaced"] == 3
+    spans = sorted(p.blocks for p in table.manifest.parts)
+    assert spans == [(1, 3), (4, 4)]
+    assert 4 in {p.part_id for p in table.manifest.parts}
+    # one rollup row per key, as when the affected parts are rolled together
+    assert sorted(tuple(r) for r in table.query_all().collect()) == [
+        (0, 2, "b", 4), (0, 100, "young", 5),
+        (1, 1, "a", 7), (1, 200, "later", 9)]
+
+
 def test_rollup_collapses_duplicates_first(table):
     # duplicate (key, ts) rows across unmerged parts: a read hides them
     # ((key, ts) dedup), so the rollup must NOT double-count them
