@@ -45,7 +45,6 @@ import os
 import shutil
 import threading
 import time
-import warnings
 from collections import Counter
 from dataclasses import asdict, dataclass, field, replace
 from math import ceil
@@ -471,21 +470,6 @@ class SparkMergeTree:
         self.manifest = Manifest.load(base_path)
         self._apply_table_meta()
         self._rebuild_missing_metadata()
-        # A surviving mutation intent record means a previous process died
-        # mid-mutation: per-part swaps are atomic, so the table is
-        # consistent, but the mutation reached only a prefix of parts.
-        # Surface it (see mutate() docstring for reconciliation guidance);
-        # clearing is the caller's decision via clear_incomplete_mutation().
-        self.incomplete_mutation: dict | None = (
-            self.manifest.table_meta.get("active_mutation"))
-        if self.incomplete_mutation is not None:
-            warnings.warn(
-                f"table {base_path!r} has an incomplete "
-                f"{self.incomplete_mutation['kind']!r} mutation "
-                f"(pending part ids "
-                f"{self.incomplete_mutation['pending_part_ids']}); re-run "
-                "the mutation, then clear_incomplete_mutation()",
-                stacklevel=2)
         self._bg_stop = threading.Event()
         self._bg_thread: threading.Thread | None = None
         # the latest failure of the background loop, or of a deferred
@@ -852,7 +836,7 @@ class SparkMergeTree:
         for ppath in (p.proj_paths or {}).values():
             shutil.rmtree(ppath, ignore_errors=True)
 
-    def _rewrite_parts(self, plan, on_commit=None) -> list[PartMeta]:
+    def _rewrite_parts(self, plan) -> list[PartMeta]:
         """The write-and-commit primitive every newly written part runs
         through: inserts (flush), merges, TTL, mutations and materialized
         deletes (the reference's flush and ``perform_merge``,
@@ -861,12 +845,12 @@ class SparkMergeTree:
         ``plan`` is a list of ``(old_parts, outputs)`` entries. Each
         output is a ``(partition, build)`` pair: ``build()`` returns the
         ``(df, n_rows)`` written as one new part of that partition. An
-        entry removes ``old_parts`` and adds its outputs in ONE
-        ``Manifest.swap``: no output is a drop, one output a rewrite
-        (into the old parts' partition), several a partitioned INSERT.
-        An entry that removes no parts is an INSERT, so its writes
-        enforce the CHECK constraints — ClickHouse checks inserted rows
-        only, never rows a merge or mutation rewrites.
+        entry removes ``old_parts`` and adds its outputs: no output is a
+        drop, one output a rewrite (into the old parts' partition),
+        several a partitioned INSERT. An entry that removes no parts is
+        an INSERT, so its writes enforce the CHECK constraints —
+        ClickHouse checks inserted rows only, never rows a merge or
+        mutation rewrites.
 
         Part ids are allocated upfront in plan order, then every output
         is written as a CONCURRENT Spark job (a single write runs inline,
@@ -876,11 +860,10 @@ class SparkMergeTree:
         deletes every completed new dir and commits nothing. Zero-row
         outputs are deleted, never committed: a 0-row part has None stats
         and would poison range pruning, TTL classification and merge
-        selection. The entries then commit one at a time in plan order
-        (_swap_parts), so part ids and the manifest's version history are
-        bit-identical to running the entries one by one, and a crash
-        mid-batch leaves a committed prefix. Returns the committed new
-        parts in plan order."""
+        selection. The whole plan then commits as ONE version
+        (_swap_parts), so a reader or a crash sees the table before the
+        operation or after it, never part of it. Returns the committed
+        new parts in plan order."""
         from clickhouse_mergetree_spark.parallel import run_concurrently
 
         with self._lock:
@@ -916,35 +899,31 @@ class SparkMergeTree:
                 if m.row_count == 0:
                     self._delete_part_dirs(m)
             entries.append((old, [m for m in new if m.row_count > 0]))
-        self._swap_parts(entries, on_commit)
+        self._swap_parts(entries)
         return [m for _old, new in entries for m in new]
 
-    def _swap_parts(self, entries, on_commit=None) -> None:
-        """Commit each ``(old_parts, new_parts)`` entry, in order, as ONE
-        locked ``Manifest.swap`` → ``on_commit(old_parts)`` →
-        lightweight-delete GC (a rewrite read through the masked path, so
-        it materialized the masks) → save. New parts are already on
-        disk; an entry that neither removes nor adds a part commits
-        nothing. After each commit the old dirs are deleted, unless
-        snapshots retain them; then, if the batch removed parts, one
-        ``vacuum()`` reclaims what fell out of the retention window (its
-        cutoff is at least every intermediate one).
+    def _swap_parts(self, entries) -> None:
+        """Commit every ``(old_parts, new_parts)`` entry together as ONE
+        locked ``Manifest.swap`` (all removed ids, all new parts in entry
+        order) → lightweight-delete GC (a rewrite read through the masked
+        path, so it materialized the masks) → save: one version and one
+        ``os.replace`` per operation, like the reference's single swap
+        under one mutex (src/merge_tree.cpp:245-288). New parts are
+        already on disk; entries that neither remove nor add a part
+        commit nothing. After the commit the old dirs are deleted, unless
+        snapshots retain them; then, if the commit removed parts, one
+        ``vacuum()`` reclaims what fell out of the retention window.
 
-        A failed commit deletes the new dirs of the entries whose commit
-        was never ATTEMPTED — no reclaim path can see them — before
-        re-raising. The attempted-but-failed one is left alone: its
-        in-memory manifest state is ambiguous, exactly the one-by-one
-        loop's worst case.
+        A failed ``swap`` deletes every new dir — nothing references
+        them — before re-raising. A failed save leaves them: the
+        in-memory manifest already references them.
 
         This is also where a new part gets its insert span
         (``PartMeta.blocks``): an entry that removes parts and adds one
         (a merge, mutation, TTL rewrite or a one-part REPLACE) gives it
         the union of the removed spans; every other new part (an INSERT
         split, ATTACH, ATTACH FROM or RESTORE) spans its own id."""
-        retain = self.config.snapshot_retention > 0
-        for i, (old, new) in enumerate(entries):
-            if not old and not new:
-                continue
+        for old, new in entries:
             if old and len(new) == 1:
                 spans = [p.blocks for p in old]
                 new[0].min_block = min(lo for lo, _hi in spans)
@@ -952,23 +931,25 @@ class SparkMergeTree:
             else:
                 for m in new:
                     m.min_block = m.max_block = m.part_id
+        removed = [p for old, _new in entries for p in old]
+        added = [m for _old, new in entries for m in new]
+        if not removed and not added:
+            return
+        retain = self.config.snapshot_retention > 0
+        with self._lock:
             try:
-                with self._lock:
-                    self.manifest.swap([p.part_id for p in old], new,
-                                       retain=retain)
-                    if on_commit is not None:
-                        on_commit(old)
-                    self._gc_lw_deletes()
-                    self.manifest.save()
+                self.manifest.swap([p.part_id for p in removed], added,
+                                   retain=retain)
             except BaseException:
-                for _old, later in entries[i + 1:]:
-                    for m in later:
-                        self._delete_part_dirs(m)
+                for m in added:
+                    self._delete_part_dirs(m)
                 raise
-            if not retain:
-                for p in old:
-                    self._delete_part_dirs(p)
-        if retain and any(old for old, _new in entries):
+            self._gc_lw_deletes()
+            self.manifest.save()
+        if not retain:
+            for p in removed:
+                self._delete_part_dirs(p)
+        elif removed:
             self.vacuum()
 
     def _single_task(self, df: DataFrame, n_rows: int | None,
@@ -3125,8 +3106,8 @@ class SparkMergeTree:
                            if p.row_count > 0
                            and p.min_ts < before_ts <= p.max_ts]
 
-            # whole-part drops are one metadata-only commit; straddling
-            # parts get one filtered rewrite each
+            # whole-part drops take no write job; straddling parts get
+            # one filtered rewrite each; all of it commits as one version
             plan = [(drop, [])] if drop else []
             plan += [([p], [(p.partition, lambda p=p: (
                 self._read_parts([p]).filter(
@@ -3907,20 +3888,14 @@ class SparkMergeTree:
         per part, exactly ClickHouse's per-part mutation tasks. A part
         whose every row is deleted becomes a metadata-only drop.
 
-        Durability (ADVICE r4): a mutation intent record is committed to
-        ``table_meta["active_mutation"]`` before any part is touched and
-        cleared after the last commit. Per-part swaps are atomic, so a
-        crash mid-loop leaves a consistent table with the mutation applied
-        to a prefix of parts — the surviving intent record makes that
-        state DETECTABLE: reopen surfaces it as ``incomplete_mutation``
-        (with a warning) so the caller can re-run the mutation. Re-running
-        is safe for DELETE and for UPDATEs whose assignments are absolute
-        expressions (already-mutated parts simply match nothing / map to
-        the same values); self-referential assignments (v = v+1) are not
-        idempotent and the caller must reconcile using the pending part
-        ids in the record. Unlike ClickHouse's persisted mutation log we
-        cannot auto-resume — predicates are live Column objects, not SQL
-        text, and do not survive the process.
+        Durability: every rewritten part is written before anything
+        commits, and the whole mutation then commits as ONE manifest
+        version (_rewrite_parts). A failed write deletes the new dirs and
+        leaves the table untouched; a crash leaves the version before the
+        mutation or the version after it, never a table mutated on some
+        parts only, so there is nothing to resume. Unlike ClickHouse's
+        persisted mutation log, a mutation is not resumable anyway —
+        predicates are live Column objects, not SQL text.
 
         Returns {"parts_scanned", "parts_rewritten", "rows_affected"}.
         """
@@ -3941,46 +3916,16 @@ class SparkMergeTree:
                 cands = self._prune(self.manifest.parts, key_range=key_range,
                                     partition=partition, col_range=col_range)
             rows_affected = 0
-            # Commit the mutation intent BEFORE touching any part: if the
-            # process dies mid-loop, reopen sees the record and reports an
-            # incomplete mutation instead of silently serving a
-            # half-mutated table (see docstring).
-            with self._lock:
-                self.manifest.table_meta["active_mutation"] = {
-                    "kind": "delete" if assignments is None else "update",
-                    "assigned_cols": sorted(assignments) if assignments
-                    else None,
-                    "pending_part_ids": [p.part_id for p in cands],
-                }
-                self.manifest.save()
-
-            def _done(old: list[PartMeta]) -> None:
-                # caller holds self._lock (and saves right after, when
-                # this runs as _rewrite_parts' on_commit)
-                am = self.manifest.table_meta.get("active_mutation")
-                for p in old:
-                    if am and p.part_id in am["pending_part_ids"]:
-                        am["pending_part_ids"].remove(p.part_id)
-
             # ClickHouse runs per-part mutation tasks from a background
             # pool; here the match-count probe is ONE job over every
             # candidate part (_match_counts — one scheduler round-trip
             # instead of a wave of N count() jobs), then the
             # independent per-part rewrites overlap as concurrent Spark
-            # jobs (_rewrite_parts). All writes land before the first
-            # commit, so a failure mid-writes leaves the table untouched
-            # (new dirs deleted, intent record intact); a crash
-            # mid-commits still leaves the documented
-            # applied-to-a-prefix state.
+            # jobs and commit as one version (_rewrite_parts).
             n_matches = self._match_counts(cands, hit)
             plan: list[tuple] = []
             for p, n_match in zip(cands, n_matches):
                 if n_match == 0:
-                    # no manifest save: the stale pending entry only
-                    # makes a crash report conservative (part listed
-                    # but clean)
-                    with self._lock:
-                        _done([p])
                     continue
                 rows_affected += n_match
                 if assignments is None and n_match == p.row_count:
@@ -3996,9 +3941,8 @@ class SparkMergeTree:
                             self.schema[c].dataType)
                         for c, e in assignments.items()}), p.row_count)
                 plan.append(([p], [(p.partition, lambda new=new: new)]))
-            self._rewrite_parts(plan, on_commit=_done)
+            self._rewrite_parts(plan)
             with self._lock:
-                self.manifest.table_meta.pop("active_mutation", None)
                 try:
                     cmd = pred._jc.toString()
                 except Exception:
@@ -4008,7 +3952,6 @@ class SparkMergeTree:
                     command=cmd, parts_scanned=len(cands),
                     parts_rewritten=len(plan),
                     rows_affected=rows_affected)
-                self._gc_lw_deletes()  # rewrites materialized masks
                 self.manifest.save()
             return {"parts_scanned": len(cands),
                     "parts_rewritten": len(plan),
@@ -4139,14 +4082,6 @@ class SparkMergeTree:
         kept = [e for e in lw if reachable.intersection(e["parts"])]
         if len(kept) != len(lw):
             self.manifest.table_meta["lw_deletes"] = kept
-
-    def clear_incomplete_mutation(self) -> None:
-        """Acknowledge (and drop) a crash-surviving mutation intent record
-        after reconciling — see mutate()'s durability contract."""
-        with self._lock:
-            self.manifest.table_meta.pop("active_mutation", None)
-            self.manifest.save()
-        self.incomplete_mutation = None
 
     def delete_where(self, pred, **prune) -> dict:
         """ALTER TABLE ... DELETE WHERE pred (see mutate)."""

@@ -181,56 +181,6 @@ def test_mutation_then_ttl_and_snapshot_interplay(spark, base_path):
         assert t.query_at_version(v0).count() == 100
 
 
-def test_completed_mutation_leaves_no_intent_record(spark, base_path):
-    with _fresh(spark, base_path) as t:
-        t.delete_where(F.col("key") >= 90, key_range=(90, 10**9))
-        assert "active_mutation" not in t.manifest.table_meta
-    with SparkMergeTree(spark, base_path, schema=SCHEMA,
-                        config=MergeTreeConfig(**CFG)) as t2:
-        assert t2.incomplete_mutation is None
-
-
-def test_crashed_mutation_detected_on_reopen(spark, base_path):
-    """ADVICE r4: a crash mid-mutation must be detectable. Simulate by
-    committing an intent record the way mutate() does, then 'dying'
-    before the loop finishes (never clearing it)."""
-    import warnings as w
-
-    t = _fresh(spark, base_path)
-    pending = [p.part_id for p in t.manifest.parts]
-    with t._lock:
-        t.manifest.table_meta["active_mutation"] = {
-            "kind": "delete", "assigned_cols": None,
-            "pending_part_ids": pending}
-        t.manifest.save()
-    t._closed = True  # skip close-time flush; simulate hard death
-
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        t2 = SparkMergeTree(spark, base_path, schema=SCHEMA,
-                            config=MergeTreeConfig(**CFG))
-    try:
-        assert t2.incomplete_mutation is not None
-        assert t2.incomplete_mutation["pending_part_ids"] == pending
-        assert any("incomplete" in str(c.message) for c in caught)
-        # table still consistent and fully readable
-        assert t2.query_all().count() == 100
-        # caller re-runs the (idempotent) mutation, then acknowledges
-        t2.delete_where(F.col("key") >= 90, key_range=(90, 10**9))
-        t2.clear_incomplete_mutation()
-        assert t2.incomplete_mutation is None
-        assert "active_mutation" not in t2.manifest.table_meta
-    finally:
-        t2.close()
-    # third open: clean
-    with w.catch_warnings(record=True) as caught2:
-        w.simplefilter("always")
-        with SparkMergeTree(spark, base_path, schema=SCHEMA,
-                            config=MergeTreeConfig(**CFG)) as t3:
-            assert t3.incomplete_mutation is None
-    assert not any("incomplete" in str(c.message) for c in caught2)
-
-
 def test_mutation_ledger_and_reopen(spark):
     """system.mutations: every mutation kind logs one crash-consistent
     ledger row; lw_delete flips is_done at materialization; the ledger

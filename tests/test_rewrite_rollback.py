@@ -1,11 +1,12 @@
-"""A lifecycle rewrite whose commit fails mid-batch leaves no debris.
+"""A lifecycle rewrite commits as one manifest version, and a failed
+commit leaves no debris.
 
 Every batched rewrite (FINAL merges, mutations, TTL, column TTL, TTL
-rollup, materialized lightweight deletes) writes all its new parts
-before the first commit and then commits them one at a time. When a
-commit fails, the new part dirs whose commit was never attempted must be
-deleted: the manifest never saw them, so no reclaim path would. Only the
-dir of the commit that failed may remain unreferenced.
+rollup, materialized lightweight deletes) writes all its new parts and
+then commits the whole plan in one ``Manifest.swap``. When that swap
+fails, the manifest never saw the new part dirs, so no reclaim path
+would: they must all be deleted, and the table must read as it did
+before the operation.
 """
 
 from __future__ import annotations
@@ -49,37 +50,49 @@ def _unreferenced_part_dirs(t) -> set[str]:
     return on_disk - referenced
 
 
-@pytest.mark.parametrize("retention", [0, 3])
-@pytest.mark.parametrize("op", sorted(OPS))
-def test_failed_commit_deletes_never_attempted_parts(spark, tmp_path,
-                                                     monkeypatch, op,
-                                                     retention):
+def _table(spark, tmp_path, op, retention):
     cfg = MergeTreeConfig(memtable_flush_threshold=10**12, max_parts=100,
                           key_col="key", ts_col="ts_us",
                           partition_col="bucket",
                           snapshot_retention=retention)
-    with SparkMergeTree(spark, str(tmp_path / "t"), schema=SCHEMA,
-                        config=cfg) as t:
-        # 3 partitions x 2 parts, every part straddling CUTOFF
-        for r in range(2):
-            t.insert_rows([(100 * (3 * r + b) + k, 1000 + k, f"b{b}",
-                            float(k))
-                           for b in range(3) for k in range(20)])
-            t.flush()
-        assert len(t.manifest.parts) == 6
-        if op == "materialize_deletes":
-            t.lightweight_delete(f"ts_us < {CUTOFF}")
-        real_swap = t.manifest.swap
+    t = SparkMergeTree(spark, str(tmp_path / "t"), schema=SCHEMA,
+                       config=cfg)
+    # 3 partitions x 2 parts, every part straddling CUTOFF
+    for r in range(2):
+        t.insert_rows([(100 * (3 * r + b) + k, 1000 + k, f"b{b}", float(k))
+                       for b in range(3) for k in range(20)])
+        t.flush()
+    assert len(t.manifest.parts) == 6
+    if op == "materialize_deletes":
+        t.lightweight_delete(f"ts_us < {CUTOFF}")
+    return t
+
+
+@pytest.mark.parametrize("retention", [0, 3])
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_failed_commit_leaves_no_part_dirs(spark, tmp_path, monkeypatch,
+                                           op, retention):
+    with _table(spark, tmp_path, op, retention) as t:
+        before = t.query_all().count()
         calls = []
 
         def failing_swap(*args, **kwargs):
             calls.append(args)
-            if len(calls) == 2:
-                raise RuntimeError("injected commit failure")
-            return real_swap(*args, **kwargs)
+            raise RuntimeError("injected commit failure")
 
         monkeypatch.setattr(t.manifest, "swap", failing_swap)
         with pytest.raises(RuntimeError, match="injected commit failure"):
             OPS[op](t)
-        assert len(calls) == 2
-        assert len(_unreferenced_part_dirs(t)) <= 1
+        monkeypatch.undo()
+        assert len(calls) == 1
+        assert _unreferenced_part_dirs(t) == set()
+        assert t.query_all().count() == before
+
+
+@pytest.mark.parametrize("retention", [0, 3])
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_every_rewrite_is_one_version(spark, tmp_path, op, retention):
+    with _table(spark, tmp_path, op, retention) as t:
+        v0 = t.current_version()
+        OPS[op](t)
+        assert t.current_version() == v0 + 1
